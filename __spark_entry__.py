@@ -538,7 +538,7 @@ def entry(spark: SparkSession) -> DataFrame:
         FieldRef,
         MatchConfig,
     )
-    from bigmatch_utilities_spark.operators.pipeline import run_match
+    from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
     docs = _docs_keyed(spark, SF_DEFAULT)
     cfg = MatchConfig(
@@ -560,13 +560,13 @@ def entry(spark: SparkSession) -> DataFrame:
         dedupe_single_file=True,
         accept_threshold=1.0,
     )
-    result = run_match(
+    result = match_pairs(
         docs.withColumn("bucket_s", F.col("bucket").cast("string")),
         None,
         cfg,
         id_col="doc_id",
     )
-    return result.pairs.select(
+    return result.select(
         "pass_id",
         F.col("id_rec").alias("id_l"),
         F.col("id_mem").alias("id_r"),
@@ -1354,7 +1354,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             FieldRef,
             MatchConfig,
         )
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
         cut = CutoffSpec(hi=2.0, lo=-50.0)
         cfg = MatchConfig(
@@ -1378,8 +1378,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             id_field=FieldRef(name="doc_id"),
             dedupe_single_file=True,
         )
-        res = run_match(_docs_keyed(spark, sf), None, cfg, persist=False)
-        return res.pairs.select(
+        res = match_pairs(_docs_keyed(spark, sf), None, cfg, persist=False)
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             F.round("weight", 6).alias("weight"),
@@ -1736,13 +1736,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- SP1: mixed equi + SNM passes through the declarative config ------
     def sp(spark, sf):
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
-        res = run_match(
+        res = match_pairs(
             _docs_keyed(spark, sf), None, _snm_mix_config(), id_col="doc_id",
             persist=False,
         )
-        return res.pairs.select(
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",
@@ -1755,11 +1755,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- FP1: swap-tolerant MatchFieldPair scoring -------------------------
     def fp(spark, sf):
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
         rec, mem = _fp_sides(spark, sf)
-        res = run_match(rec, mem, _fp_config(), id_col="doc_id", persist=False)
-        return res.pairs.select(
+        res = match_pairs(rec, mem, _fp_config(), id_col="doc_id", persist=False)
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             F.round("weight", 6).alias("weight"),
@@ -1791,15 +1791,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- SX2: standardization inside the linkage job -----------------------
     def sx2(spark, sf):
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
         from bigmatch_utilities_spark.operators.standardize import standardize_expr
 
         d = _docs_keyed(spark, sf).withColumn(
             "std_32",
             F.substring(standardize_expr(F.col("text_32"), _SX_SYNONYMS), 1, 24),
         )
-        res = run_match(d, None, _sx_linkage_config(), id_col="doc_id", persist=False)
-        return res.pairs.select(
+        res = match_pairs(d, None, _sx_linkage_config(), id_col="doc_id", persist=False)
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             F.round("weight", 6).alias("weight"),
@@ -1863,7 +1863,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             FieldRef,
             MatchConfig,
         )
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
         cut = CutoffSpec(hi=2.0, lo=-50.0)
         cfg = MatchConfig(
@@ -1887,8 +1887,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the run_repo_linkage_delta decomposition on the generic engine:
         # delta self-dedupe + delta-vs-standing two-file linkage, disjoint
         # pair universes, linkage orientation canonicalized to sorted ids
-        r_dd = run_match(delta, None, cfg, id_col="doc_id", persist=False)
-        r_ds = run_match(
+        r_dd = match_pairs(delta, None, cfg, id_col="doc_id", persist=False)
+        r_ds = match_pairs(
             delta,
             standing,
             replace(cfg, dedupe_single_file=False),
@@ -1896,10 +1896,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             persist=False,
         )
         cols = ["weight", "is_exact", "decision"]
-        dd = r_dd.pairs.select(
+        dd = r_dd.select(
             F.col("id_rec").alias("id_l"), F.col("id_mem").alias("id_r"), *cols
         )
-        ds = r_ds.pairs.select(
+        ds = r_ds.select(
             F.least("id_rec", "id_mem").alias("id_l"),
             F.greatest("id_rec", "id_mem").alias("id_r"),
             *cols,
@@ -1937,7 +1937,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             FieldRef,
             MatchConfig,
         )
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
         cut = CutoffSpec(hi=2.0, lo=-50.0)
         cfg = MatchConfig(
@@ -1968,8 +1968,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             dedupe_single_file=True,
         )
         d = _docs_keyed(spark, sf)
-        res = run_match(d, None, cfg, id_col="doc_id", persist=False)
-        return res.pairs.select(
+        res = match_pairs(d, None, cfg, id_col="doc_id", persist=False)
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",
@@ -2121,7 +2121,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             FieldRef,
             MatchConfig,
         )
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
         cut = CutoffSpec(hi=2.0, lo=-50.0)
         cfg = MatchConfig(
@@ -2153,8 +2153,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             dedupe_single_file=True,
         )
         d = _docs_keyed(spark, sf)
-        res = run_match(d, None, cfg, id_col="doc_id", persist=False)
-        return res.pairs.select(
+        res = match_pairs(d, None, cfg, id_col="doc_id", persist=False)
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",
@@ -2209,13 +2209,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- QS1: mixed equi + qgram + suffix passes through the config -------
     def qs(spark, sf):
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
-        res = run_match(
+        res = match_pairs(
             _docs_keyed(spark, sf), None, _qs_mix_config(), id_col="doc_id",
             persist=False,
         )
-        return res.pairs.select(
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",
@@ -2291,7 +2291,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- TP1: interval-overlap as a declarable pass kind -------------------
     def tp(spark, sf):
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
         ev = _t(spark, sf, "events").select(
             "event_id",
@@ -2304,9 +2304,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "event_type",
             F.floor(F.col("value") * 100).cast("long").cast("string").alias("val_s"),
         )
-        res = run_match(ev, None, _tp_interval_config(), id_col="event_id",
+        res = match_pairs(ev, None, _tp_interval_config(), id_col="event_id",
                         persist=False)
-        return res.pairs.select(
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",
@@ -2478,13 +2478,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- MP1: mixed equi + meta-blocking (WNP) passes ------------------------
     def mp(spark, sf):
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
-        res = run_match(
+        res = match_pairs(
             _docs_keyed(spark, sf), None, _mp_mix_config(), id_col="doc_id",
             persist=False,
         )
-        return res.pairs.select(
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",
@@ -2564,7 +2564,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             FieldRef,
             MatchConfig,
         )
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
         cut = CutoffSpec(hi=2.0, lo=-50.0)
         cfg = MatchConfig(
@@ -2598,8 +2598,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("vec_id").alias("doc_id"), "embedding"
         )
         d = _docs_keyed(spark, sf).join(emb, "doc_id")
-        res = run_match(d, None, cfg, id_col="doc_id", persist=False)
-        return res.pairs.select(
+        res = match_pairs(d, None, cfg, id_col="doc_id", persist=False)
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",
@@ -2744,13 +2744,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- LE: declarative level-fields pass through run_match --------------
     def le(spark, sf):
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
-        res = run_match(
+        res = match_pairs(
             _docs_keyed(spark, sf), None, _le_mix_config(), id_col="doc_id",
             persist=False,
         )
-        return res.pairs.select(
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",
@@ -2936,13 +2936,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- CP: equi + rarest-token-canopy mixed passes through the config ---
     def cp(spark, sf):
-        from bigmatch_utilities_spark.operators.pipeline import run_match
+        from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
-        res = run_match(
+        res = match_pairs(
             _docs_keyed(spark, sf), None, _cp_mix_config(), id_col="doc_id",
             persist=False,
         )
-        return res.pairs.select(
+        return res.select(
             F.col("id_rec").alias("id_l"),
             F.col("id_mem").alias("id_r"),
             "pass_id",

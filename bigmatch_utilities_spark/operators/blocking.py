@@ -42,7 +42,11 @@ class BlockStats:
 
 
 def _nonblank(c: Column) -> Column:
-    return c.isNotNull() & (F.trim(c) != "")
+    """Blocking blank semantics for ANY column type: null or
+    trims-to-empty (after a string cast) is blank. The string cast keeps
+    integer keys usable and renders identically in DuckDB
+    (trim(CAST(c AS VARCHAR)))."""
+    return c.isNotNull() & (F.trim(c.cast("string")) != F.lit(""))
 
 
 def apply_blank_flags(df: DataFrame, spec: BlockingPassSpec) -> DataFrame:
@@ -612,14 +616,6 @@ def block_skew_report_sql(
 # ---------------------------------------------------------------------------
 # blocking-key suggestion: rank candidate key sets before writing the parmf
 # ---------------------------------------------------------------------------
-
-
-def _nonblank(c: Column) -> Column:
-    """Blocking blank semantics for ANY column type: null or
-    trims-to-empty (after a string cast) is blank. The string cast keeps
-    integer keys usable and renders identically in DuckDB
-    (trim(CAST(c AS VARCHAR)))."""
-    return c.isNotNull() & (F.trim(c.cast("string")) != F.lit(""))
 
 
 def suggest_blocking_keys(

@@ -42,11 +42,11 @@ from .dedup import _hash64, _hash64_sql
 from .textanalysis import _tokens
 
 
-def _bucketed_tokens(df: DataFrame, text_col: str, id_col: str, buckets: int):
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_tokens(F.col(text_col))).alias("_tok"),
-    ).select("doc_id", (_hash64(F.col("_tok")) % buckets).alias("_b"))
+def _bucketed_tokens(df: DataFrame, text_col: str, buckets: int, *keep: str):
+    """One ``(*keep, _b)`` row per token occurrence in ``text_col``."""
+    return df.select(*keep, F.explode(_tokens(F.col(text_col))).alias("_tok")).select(
+        *keep, (_hash64(F.col("_tok")) % buckets).alias("_b")
+    )
 
 
 def dsir_bucket_weights(
@@ -62,12 +62,12 @@ def dsir_bucket_weights(
     constant both-sides-smoothed value L(1)-L(t_tot+B)-L(1)+L(r_tot+B),
     which scoring applies via the broadcast totals row."""
     t = (
-        _bucketed_tokens(target, text_col, "doc_id", buckets)
+        _bucketed_tokens(target, text_col, buckets)
         .groupBy("_b")
         .agg(F.count(F.lit(1)).alias("_t"))
     )
     r = (
-        _bucketed_tokens(raw, text_col, "doc_id", buckets)
+        _bucketed_tokens(raw, text_col, buckets)
         .groupBy("_b")
         .agg(F.count(F.lit(1)).alias("_r"))
     )
@@ -102,7 +102,12 @@ def dsir_scores(
     corpus observed, so inner-joining the raw token stream on it loses
     nothing (every raw token's bucket is in the raw counts)."""
     per_doc = (
-        _bucketed_tokens(raw, text_col, id_col, buckets)
+        _bucketed_tokens(
+            raw.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
+            text_col,
+            buckets,
+            "doc_id",
+        )
         .groupBy("doc_id", "_b")
         .agg(F.count(F.lit(1)).alias("_c"))
         .join(F.broadcast(weights), F.col("_b") == F.col("bucket"))

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigmatch_utilities_spark.config import BlockingPassSpec, MatchConfig
@@ -481,9 +481,19 @@ def score_pass(
     return scored.withColumn("decision", decision)
 
 
+def accept_at(threshold: float) -> Column:
+    """The engine's accept rule for a non-exact pair: an auto-``match``
+    decision, or a ``possible`` weighing at least ``threshold``
+    (app/MatchReview.py:1047)."""
+    return (F.col("decision") == "match") | (
+        (F.col("decision") == "possible")
+        & (F.col("weight") >= F.lit(float(threshold)))
+    )
+
+
 @dataclass
 class MatchResult:
-    """All products of a run, as (lazy) DataFrames.
+    """All products of a run, as DataFrames.
 
     Output contract: ``pairs`` (and its exact/accepted/possible splits) is
     the decision core — (id_rec, id_mem, pass_id, weight, is_exact,
@@ -491,6 +501,12 @@ class MatchResult:
     rec_*/mem_* match-field values are a per-pass product (score_pass
     output / the checkpoint's per-pass parquet); legacy review emitters
     format those per-pass frames BEFORE the multi-pass union.
+
+    Results built by :meth:`from_pairs` (every run entry point) hold
+    ``pairs`` persisted: the first action computes the whole linkage plan
+    once, and the three splits and ``good_pairs()`` are filters over that
+    cache. A caller that keeps its session alive after writing the result
+    calls ``result.pairs.unpersist()``.
     """
 
     pairs: DataFrame        # one row per (id_rec, id_mem), first-pass-wins
@@ -498,13 +514,30 @@ class MatchResult:
     accepted: DataFrame     # auto-match ∪ threshold-accepted possibles
     possible: DataFrame     # clerical-review set
 
+    @classmethod
+    def from_pairs(cls, pairs: DataFrame, accept: Column) -> "MatchResult":
+        """Persist the first-pass-wins ``pairs`` and split it: ``exact``
+        holds every emitted exact pair, ``accepted`` the non-exact pairs
+        ``accept`` holds for, ``possible`` the non-exact ``possible``
+        pairs it rejects."""
+        pairs = pairs.persist()
+        not_exact = ~F.col("is_exact")
+        return cls(
+            pairs=pairs,
+            exact=pairs.filter(F.col("is_exact") & (F.col("decision") != "below")),
+            accepted=pairs.filter(not_exact & accept),
+            possible=pairs.filter(
+                not_exact & (F.col("decision") == "possible") & ~accept
+            ),
+        )
+
     def good_pairs(self) -> DataFrame:
         """exact ∪ accepted, the reference's …pairs_exact_accpt.dat
-        (app/MatchReview.py:535-586)."""
-        return (
-            self.exact.unionByName(self.accepted)
-            .select("pass_id", "weight", "id_rec", "id_mem")
-            .dropDuplicates(PAIR_KEY)
+        (app/MatchReview.py:535-586). ``pairs`` is unique on the pair key
+        and the two sets are disjoint on ``is_exact``, so the union needs
+        no dedup shuffle: it is one scan of ``pairs``."""
+        return self.exact.unionByName(self.accepted).select(
+            "pass_id", "weight", "id_rec", "id_mem"
         )
 
 
@@ -561,12 +594,7 @@ def apply_manual_accepts(
         F.col("accept_usr").isNotNull(), F.col("accept_usr") == 1
     ).otherwise(default_accept)
     emittable = F.col("decision") != "below"
-    exact = flagged.filter(F.col("is_exact") & emittable)
-    accepted = flagged.filter((~F.col("is_exact")) & emittable & final_accept)
-    possible = flagged.filter(
-        (~F.col("is_exact")) & (F.col("decision") == "possible") & (~final_accept)
-    )
-    return MatchResult(pairs=flagged, exact=exact, accepted=accepted, possible=possible)
+    return MatchResult.from_pairs(flagged, emittable & final_accept)
 
 
 def first_pass_wins(all_pairs: DataFrame) -> DataFrame:
@@ -595,6 +623,20 @@ def run_match(
     mem: DataFrame | None,
     config: MatchConfig,
     id_col: str | None = None,
+    **kwargs,
+) -> MatchResult:
+    """Run every blocking pass and produce the combined decision sets:
+    :func:`match_pairs` (which takes the keyword options) split by
+    :meth:`MatchResult.from_pairs`, so ``result.pairs`` is persisted."""
+    pairs = match_pairs(rec, mem, config, id_col, **kwargs)
+    return MatchResult.from_pairs(pairs, accept_at(config.accept_threshold))
+
+
+def match_pairs(
+    rec: DataFrame,
+    mem: DataFrame | None,
+    config: MatchConfig,
+    id_col: str | None = None,
     *,
     broadcast_mem: bool | None = None,
     salt: int | None = None,
@@ -602,11 +644,15 @@ def run_match(
     max_block_rows: int | None = None,
     persist: bool = True,
     gamma_fields: tuple | None = None,
-) -> MatchResult:
-    """Run every blocking pass and produce the combined decision sets.
+) -> DataFrame:
+    """Every blocking pass, unioned and reduced first-pass-wins: the pair
+    table :func:`run_match` splits, not persisted, for callers that fold
+    it into a larger plan first.
 
     ``mem=None`` (or config.dedupe_single_file) runs single-file dedupe:
     rec is self-joined with id_rec < id_mem canonicalization.
+
+    persist: persist the inputs ``rec``/``mem``, which every pass scans.
 
     gamma_fields: see :func:`score_pass` — the per-pair ``g_<field>``
     agreement indicators join the decision core through the union, so EM
@@ -651,22 +697,4 @@ def run_match(
             *PAIR_KEY, "pass_id", "weight", "is_exact", "decision", *gcols
         )
         core = slim if core is None else core.unionByName(slim)
-    pairs = first_pass_wins(core)
-
-    exact = pairs.filter(F.col("is_exact") & (F.col("decision") != "below"))
-    accepted = pairs.filter(
-        (~F.col("is_exact"))
-        & (
-            (F.col("decision") == "match")
-            | (
-                (F.col("decision") == "possible")
-                & (F.col("weight") >= F.lit(float(config.accept_threshold)))
-            )
-        )
-    )
-    possible = pairs.filter(
-        (~F.col("is_exact"))
-        & (F.col("decision") == "possible")
-        & (F.col("weight") < F.lit(float(config.accept_threshold)))
-    )
-    return MatchResult(pairs=pairs, exact=exact, accepted=accepted, possible=possible)
+    return first_pass_wins(core)

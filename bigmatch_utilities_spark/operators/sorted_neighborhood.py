@@ -50,12 +50,19 @@ def with_global_rank(
 ) -> DataFrame:
     """Adds a 1-based dense global row rank in (order_cols) order without
     a single-task global sort. order_cols must be a total order (append a
-    unique id as tiebreak) or ranks are nondeterministic."""
+    unique id as tiebreak) or ranks are nondeterministic.
+
+    The range-partitioned frame is read twice (per-partition counts, then
+    the in-partition row numbers), so it is checkpointed once in between:
+    two evaluations of the range exchange can draw different boundaries,
+    and the offsets of one would then misnumber the rows of the other."""
     n_part = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    d = df.repartitionByRange(n_part, *[F.col(c) for c in order_cols]).withColumn(
-        "_sn_pid", F.spark_partition_id()
+    d = (
+        df.repartitionByRange(n_part, *[F.col(c) for c in order_cols])
+        .withColumn("_sn_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
     counts = d.groupBy("_sn_pid").agg(F.count(F.lit(1)).alias("_sn_n"))
     # P rows total: the unpartitioned window is a deliberate O(P) frame

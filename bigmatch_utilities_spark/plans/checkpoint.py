@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from bigmatch_utilities_spark.config import MatchConfig
 from bigmatch_utilities_spark.operators.pipeline import (
     MatchResult,
+    accept_at,
     first_pass_wins,
     score_pass,
 )
@@ -278,21 +279,6 @@ class CheckpointedMatch:
                 *[c for c in df.columns if c.startswith("g_")],
             )
             core = slim if core is None else core.unionByName(slim)
-        pairs = first_pass_wins(core)
-        exact = pairs.filter(F.col("is_exact") & (F.col("decision") != "below"))
-        accepted = pairs.filter(
-            (~F.col("is_exact"))
-            & (
-                (F.col("decision") == "match")
-                | (
-                    (F.col("decision") == "possible")
-                    & (F.col("weight") >= F.lit(float(config.accept_threshold)))
-                )
-            )
+        return MatchResult.from_pairs(
+            first_pass_wins(core), accept_at(config.accept_threshold)
         )
-        possible = pairs.filter(
-            (~F.col("is_exact"))
-            & (F.col("decision") == "possible")
-            & (F.col("weight") < F.lit(float(config.accept_threshold)))
-        )
-        return MatchResult(pairs=pairs, exact=exact, accepted=accepted, possible=possible)

@@ -41,8 +41,9 @@ from bigmatch_utilities_spark.operators.closure import cluster_accepted_pairs
 from bigmatch_utilities_spark.operators.dedup import minhash_candidates
 from bigmatch_utilities_spark.operators.pipeline import (
     MatchResult,
+    accept_at,
     first_pass_wins,
-    run_match,
+    match_pairs,
     score_pass,
 )
 
@@ -207,7 +208,8 @@ def run_repo_linkage(
 
     cache_handle: receives every frame this run persists (the LSH bands,
     plus `prepared` when persist=True); callers that materialize the result
-    unpersist them afterwards (see operators.dedup.minhash_candidates).
+    unpersist them afterwards (see operators.dedup.minhash_candidates), and
+    ``result.pairs`` with them (persisted by MatchResult.from_pairs).
 
     gamma_fields: attach per-pair ``g_<field>`` agreement indicators in the
     scoring stage of every pass (incl. the LSH pass) so EM calibration
@@ -223,7 +225,9 @@ def run_repo_linkage(
     cfg = repo_match_config()
     if tf_adjust_fields:
         cfg = with_tf_adjust(cfg, tuple(tf_adjust_fields))
-    result = run_match(
+    # the equi passes' pairs stay unpersisted: they feed the LSH union below,
+    # and a cached subtree inside that plan would run as its own stage
+    pairs = match_pairs(
         prepared,
         None,
         cfg,
@@ -234,7 +238,7 @@ def run_repo_linkage(
         gamma_fields=gamma_fields,
     )
     if not use_minhash_pass:
-        return result
+        return MatchResult.from_pairs(pairs, accept_at(cfg.accept_threshold))
 
     # pass 3: MinHash-LSH canopy scored with the fuzzy fields.
     lsh_fields = _FUZZY_FIELDS
@@ -303,30 +307,14 @@ def run_repo_linkage(
             )
         gcols = [f"g_{mf.name}" for mf in gamma_fields]
     combined = first_pass_wins(
-        result.pairs.unionByName(
+        pairs.unionByName(
             scored3.select(
                 "id_rec", "id_mem", "pass_id", "weight", "is_exact", "decision",
                 *gcols,
             )
         )
     )
-    exact = combined.filter(F.col("is_exact") & (F.col("decision") != "below"))
-    accepted = combined.filter(
-        (~F.col("is_exact"))
-        & (
-            (F.col("decision") == "match")
-            | (
-                (F.col("decision") == "possible")
-                & (F.col("weight") >= F.lit(float(cfg.accept_threshold)))
-            )
-        )
-    )
-    possible = combined.filter(
-        (~F.col("is_exact"))
-        & (F.col("decision") == "possible")
-        & (F.col("weight") < F.lit(float(cfg.accept_threshold)))
-    )
-    return MatchResult(pairs=combined, exact=exact, accepted=accepted, possible=possible)
+    return MatchResult.from_pairs(combined, accept_at(cfg.accept_threshold))
 
 
 def run_repo_linkage_delta(
@@ -403,11 +391,11 @@ def run_repo_linkage_delta(
         passes=tuple(_replace(p, star_block_rows=None) for p in cfg.passes),
     )
 
-    r_dd = run_match(
+    dd = match_pairs(
         prep_d, None, cfg, id_col=ID_COL,
         max_block_rows=max_block_rows, shard_rows=shard_rows, persist=False,
     )
-    r_ds = run_match(
+    ds = match_pairs(
         prep_d, prep_s, cfg_link, id_col=ID_COL,
         max_block_rows=max_block_rows, shard_rows=shard_rows, persist=False,
     )
@@ -415,12 +403,12 @@ def run_repo_linkage_delta(
     # canonicalize the linkage run's (delta, standing) orientation to
     # (min id, max id) so first_pass_wins dedupes it against the id-sorted
     # LSH pairs — every scored field comparator is orientation-symmetric
-    ds_core = r_ds.pairs.select(
+    ds_core = ds.select(
         F.least("id_rec", "id_mem").alias("id_rec"),
         F.greatest("id_rec", "id_mem").alias("id_mem"),
         *core_cols[2:],
     )
-    core = r_dd.pairs.select(*core_cols).unionByName(ds_core)
+    core = dd.select(*core_cols).unionByName(ds_core)
 
     if use_minhash_pass:
         prep_all = prep_s.unionByName(prep_d)
@@ -473,23 +461,7 @@ def run_repo_linkage_delta(
         core = core.unionByName(scored3.select(*core_cols))
 
     combined = first_pass_wins(core)
-    exact = combined.filter(F.col("is_exact") & (F.col("decision") != "below"))
-    accepted = combined.filter(
-        (~F.col("is_exact"))
-        & (
-            (F.col("decision") == "match")
-            | (
-                (F.col("decision") == "possible")
-                & (F.col("weight") >= F.lit(float(cfg.accept_threshold)))
-            )
-        )
-    )
-    possible = combined.filter(
-        (~F.col("is_exact"))
-        & (F.col("decision") == "possible")
-        & (F.col("weight") < F.lit(float(cfg.accept_threshold)))
-    )
-    return MatchResult(pairs=combined, exact=exact, accepted=accepted, possible=possible)
+    return MatchResult.from_pairs(combined, accept_at(cfg.accept_threshold))
 
 
 def count_candidates(
@@ -545,6 +517,10 @@ def link_and_cluster(df: DataFrame, **kwargs) -> DataFrame:
     """repo files → (record_id, cluster_id) entity table."""
     result = run_repo_linkage(df, **kwargs)
     prepared = with_record_id(df)
-    return cluster_accepted_pairs(
+    # closure materializes its first edge set eagerly, so the returned
+    # clusters no longer read the persisted pairs
+    clusters = cluster_accepted_pairs(
         result.good_pairs(), all_ids=prepared.select(ID_COL), id_col=ID_COL
     )
+    result.pairs.unpersist()
+    return clusters

@@ -123,6 +123,7 @@ def main() -> None:
             f"{out}/pairs"
         )
         result.good_pairs().write.mode("overwrite").parquet(f"{out}/good_pairs")
+        result.pairs.unpersist()
 
     # ---- stage 2: incremental closure -> clusters/ -------------------------
     if args.resume and _has_success(spark, f"{out}/clusters"):

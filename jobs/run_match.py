@@ -232,17 +232,23 @@ def match_stage(spark: SparkSession, args: argparse.Namespace) -> None:
             tf_adjust_fields=tf_fields,
         )
 
+    # every frame below reads the persisted pairs; release them once both
+    # are written (run_pipeline goes on in the same session)
+    held = [result.pairs]
     if args.decisions:
         from bigmatch_utilities_spark.operators.pipeline import apply_manual_accepts
 
         result = apply_manual_accepts(
             result, spark.read.parquet(args.decisions), args.accept_threshold
         )
+        held.append(result.pairs)
 
     result.pairs.write.mode("overwrite").partitionBy("pass_id").parquet(
         f"{args.output}/pairs"
     )
     result.good_pairs().write.mode("overwrite").parquet(f"{args.output}/good_pairs")
+    for df in held:
+        df.unpersist()
 
     if getattr(args, "assign", None):
         from bigmatch_utilities_spark.operators.assignment import (

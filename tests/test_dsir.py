@@ -46,6 +46,29 @@ def test_dsir_ranks_target_like_docs_first(spark):
     assert scores[99] == 0  # zero-token doc: no evidence, kept in frame
 
 
+def test_dsir_id_column_need_not_be_doc_id(spark):
+    """The weights are token counts only, so neither corpus needs a
+    ``doc_id`` column: frames keyed by another id column give the same
+    weights, scores and selection as the doc_id-keyed ones."""
+    raw = _corpus(spark)
+    target = spark.createDataFrame(
+        [(1000, "spark join shuffle"), (1001, "partition broadcast agg")],
+        "doc_id long, text string",
+    )
+    raw_u = raw.withColumnRenamed("doc_id", "uid")
+    target_u = target.withColumnRenamed("doc_id", "uid")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(dsir_bucket_weights(target_u, raw_u, buckets=64)) == rows(
+        dsir_bucket_weights(target, raw, buckets=64)
+    )
+    assert [tuple(r) for r in dsir_keep(
+        target_u, raw_u, 8, id_col="uid", buckets=64
+    ).collect()] == [tuple(r) for r in dsir_keep(target, raw, 8, buckets=64).collect()]
+
+
 def test_dsir_scores_match_duckdb_oracle(spark, tmp_path):
     raw = _corpus(spark)
     target = spark.createDataFrame(

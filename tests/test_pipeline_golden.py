@@ -14,6 +14,11 @@ from bigmatch_utilities_spark.config import parse_datadict, parse_parmf
 from bigmatch_utilities_spark.operators.pipeline import normalize, run_match
 from bigmatch_utilities_spark.sources.fixed_width import read_fixed_width
 from tests.test_comparators import scalar_jaro_winkler
+from tests.test_match_result import (
+    assert_matches_legacy,
+    legacy_reviewed_sets,
+    legacy_sets,
+)
 
 GS = "/root/reference/samplefiles/gs"
 PARTIAL_FLOOR = 0.75
@@ -128,10 +133,11 @@ def test_exact_accepted_possible_partition(golden):
 
 
 def test_good_pairs_schema(golden):
-    _, result, _ = golden
+    cfg, result, _ = golden
     gp = result.good_pairs()
     assert gp.columns == ["pass_id", "weight", "id_rec", "id_mem"]
     assert gp.count() == result.exact.count() + result.accepted.count()
+    assert_matches_legacy(result, *legacy_sets(result.pairs, cfg.accept_threshold))
 
 
 def test_manual_accepts_override_threshold(golden, spark):
@@ -161,6 +167,7 @@ def test_manual_accepts_override_threshold(golden, spark):
         ["id_rec", "id_mem", "accept"],
     )
     reviewed = apply_manual_accepts(result, decisions, threshold)
+    assert_matches_legacy(reviewed, *legacy_reviewed_sets(reviewed.pairs))
     good = {(r["id_rec"], r["id_mem"]) for r in reviewed.good_pairs().collect()}
     assert (below["id_rec"], below["id_mem"]) in good
     assert (above["id_rec"], above["id_mem"]) not in good

@@ -37,6 +37,28 @@ def test_global_rank_is_a_permutation_and_partition_invariant(spark):
         assert got == want, (parts, got, want)
 
 
+def test_global_rank_repeats_on_a_multi_partition_input(spark):
+    """The range-partitioned frame is read twice (per-partition counts,
+    then row numbers) and is checkpointed once in between, so both reads
+    see the same range boundaries: two computations in one session agree
+    and each is a permutation of 1..N."""
+    n = 3000
+    df = spark.range(n).select(
+        ((F.col("id") * 7919) % n).alias("rid"),
+        (F.col("id") % 13).cast("string").alias("k"),
+    ).repartition(6)
+
+    def ranks():
+        ranked = with_global_rank(df, ["k", "rid"], num_partitions=5)
+        plan = ranked._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan, plan
+        return {r["rid"]: r["rank"] for r in ranked.collect()}
+
+    first, second = ranks(), ranks()
+    assert first == second
+    assert sorted(first.values()) == list(range(1, n + 1))
+
+
 def test_pair_count_linear(spark):
     pairs = sorted_neighborhood_pairs(_df(spark), ["name"], "rid", window=3)
     rows = pairs.collect()
