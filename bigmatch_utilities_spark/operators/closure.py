@@ -16,12 +16,44 @@ DataFrame aggregation, so it scales to 10^12-edge graphs:
 Each iteration `localCheckpoint`s (or reliable-checkpoints when a
 checkpoint dir is set) to truncate lineage — without this the plan doubles
 per round and the driver OOMs long before the data does.
+
+That loop costs an eager checkpoint and a signature collect per round, so
+on a small graph Spark's fixed per-job cost, not the data, sets its time
+(35 jobs and 3.0 s for the 549 good pairs of a traced 720-row dedup run).
+A graph that fits in the driver takes a second path: one
+`limit(DRIVER_EDGES + 1).collect()` of the canonical edges picks the path,
+and at most `DRIVER_EDGES` edges are clustered by a union-find in the
+driver and returned with `createDataFrame` of a pandas frame, which
+reaches the JVM as Arrow batches (two Spark jobs for a 549-edge input,
+against 63 for the loop). Larger edge sets, and the 100 TB design point,
+take the large-star/small-star loop unchanged. Both paths give the same
+rows and schema: the same canonical edges, no isolated nodes,
+cluster_id = component minimum.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Largest canonical edge set clustered in the driver. Measured on 4 vCPUs,
+# local[4], 2g driver, `connected_components` written to parquet, warm, on
+# random, chain and 20-char string-id graphs: the driver path was faster at
+# every size probed (0.7 s against 8-10 s for the Spark path at 1k edges,
+# 3.2-5.1 s against 15-26 s at 200k, 10-15 s at 1M), so no time crossover
+# sets the bound; driver memory does. At 200k edges the Python driver grows
+# by 55-75 MB and the JVM's peak RSS (1.0-1.3 GB) stays under the Spark
+# path's (2.2-2.6 GB); at 1M the Python driver grows by 360-420 MB, a fifth
+# of the 2g driver, for one operator's input.
+DRIVER_EDGES = 200_000
+
+# Id types whose Python ordering is Spark's ordering (str: code-point
+# order = UTF-8 binary order), so a driver root is Spark's min(). Other
+# types (floats with NaN, collated strings) take the Spark path.
+_DRIVER_ID_TYPES = (T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType(),
+                    T.StringType())
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -85,6 +117,34 @@ def _signature(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"] or 0)
 
 
+def _union_find(edges) -> list[tuple]:
+    """(src, dst) pairs → [(node, component minimum)], path halving; the
+    larger root always hangs under the smaller, so roots are minima."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra = find(parent.setdefault(a, a))
+        rb = find(parent.setdefault(b, b))
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    return [(n, find(n)) for n in parent]
+
+
+def _labels(e: DataFrame) -> DataFrame:
+    """At fixpoint every edge points a node at its component minimum."""
+    members = e.select(F.col("src").alias("id"), F.col("dst").alias("cluster_id"))
+    roots = e.select(F.col("dst").alias("id"), F.col("dst").alias("cluster_id"))
+    return members.unionAll(roots).groupBy("id").agg(F.min("cluster_id").alias("cluster_id"))
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -95,8 +155,17 @@ def connected_components(
     """Edges → (id, cluster_id) where cluster_id = min member id.
 
     Isolated nodes don't appear (callers union them back with
-    cluster_id = own id if needed)."""
+    cluster_id = own id if needed). At most ``DRIVER_EDGES`` canonical
+    edges are clustered in the driver; ``max_iterations`` and
+    ``verify_convergence`` apply to the Spark path."""
     e = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    if e.schema["src"].dataType in _DRIVER_ID_TYPES:
+        rows = e.limit(DRIVER_EDGES + 1).collect()
+        if len(rows) <= DRIVER_EDGES:
+            # a pandas frame reaches the JVM as Arrow batches, so reading
+            # the result starts no Python workers (a list of rows would)
+            labels = pd.DataFrame(_union_find(rows), columns=["id", "cluster_id"])
+            return e.sparkSession.createDataFrame(labels, _labels(e).schema)
     e = _truncate(e)
     sig = _signature(e)
     for _ in range(max_iterations):
@@ -120,11 +189,7 @@ def connected_components(
         sig = sig2
     else:
         raise RuntimeError(f"connected_components: no fixpoint in {max_iterations} rounds")
-
-    # At fixpoint every edge points a node at its component minimum.
-    members = e.select(F.col("src").alias("id"), F.col("dst").alias("cluster_id"))
-    roots = e.select(F.col("dst").alias("id"), F.col("dst").alias("cluster_id"))
-    return members.unionAll(roots).groupBy("id").agg(F.min("cluster_id").alias("cluster_id"))
+    return _labels(e)
 
 
 def cluster_accepted_pairs(

@@ -407,7 +407,7 @@ def quota_cap(
     one shuffle, but a mega-group (a 10^9-row domain in a web crawl)
     lands on ONE task — windows do not split under AQE skew handling.
     So this runs the classic two-phase salted top-N: phase 1 ranks
-    within (group, id % salt) and keeps ``cap`` per salted subgroup —
+    within (group, hash(id) % salt) and keeps ``cap`` per salted subgroup —
     map-reducible, bounding any group's survivors to ``salt * cap``
     rows — and phase 2 ranks the tiny survivor frame exactly. Phase 1
     keeps a superset of the true per-group top-``cap`` (every global
@@ -426,8 +426,10 @@ def quota_cap(
     order = (
         [F.desc_nulls_last(quality_col)] if quality_col else []
     ) + [F.asc(id_col)]
+    # a hash spreads ids of any type over the slices (a long cast of a
+    # string id raises under ANSI, or is NULL for every row without it)
     sliced = Window.partitionBy(
-        F.col(group_col), F.col(id_col).cast("long") % salt
+        F.col(group_col), _hash64(F.col(id_col).cast("string")) % salt
     ).orderBy(*order)
     phase1 = df.withColumn("_qr1", F.row_number().over(sliced)).filter(
         F.col("_qr1") <= cap
@@ -485,7 +487,8 @@ def line_dedup(
     Emits (doc_id, clean_text, n_lines, n_removed): surviving lines
     rejoined with NEWLINE in original order; a document whose every line
     is boilerplate keeps a row with clean_text = '' (no silent row loss —
-    the golden_record lesson). Blank lines are never counted or removed.
+    the golden_record lesson), and so does a NULL-text document (read as
+    one blank line). Blank lines are never counted or removed.
 
     Plan: posexplode lines (map-only), one groupBy on the md5-prefix
     line hash counting DISTINCT docs (linear in total lines, map-side
@@ -498,7 +501,9 @@ def line_dedup(
     """
     lines = df.select(
         F.col(id_col).alias("_ld_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("_pos", "_ln"),
+        F.posexplode(
+            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
+        ).alias("_pos", "_ln"),
     ).withColumn("_h", _hash64(F.col("_ln")))
     counted = (
         lines.filter(F.trim(F.col("_ln")) != "")
@@ -559,9 +564,9 @@ def line_dedup_sql(
     return f"""
         WITH ld_lines AS (
             SELECT {id_expr} AS _id,
-                   unnest(range(1, len(string_split({text_expr}, chr(10))) + 1))
-                       AS _pos,
-                   unnest(string_split({text_expr}, chr(10))) AS _ln
+                   unnest(range(1, len(string_split(
+                       COALESCE({text_expr}, ''), chr(10))) + 1)) AS _pos,
+                   unnest(string_split(COALESCE({text_expr}, ''), chr(10))) AS _ln
             FROM {table}
         ),
         ld_freq AS (

@@ -664,10 +664,16 @@ def pattern_dependence(
     Cross-engine exactness: marginals and expected_scaled are integer
     arithmetic end-to-end; ``lift`` is a single multiply-then-divide on
     exactly-representable integers, bit-identical across IEEE engines.
-    At N > ~2^40 with K >= 3 the scaled product would overflow BIGINT —
-    at that scale compute on the histogram (<= 2^K rows) driver-side or
-    switch the product to DOUBLE; the histogram pass itself (the only
-    distributed stage: one map-side-combined groupBy) is unchanged.
+    Overflow bound: ``expected_scaled`` is a product of K factors each up
+    to N, so it leaves BIGINT once N^K > 2^63 — N > 2^(63/K), about
+    2^21 (~2M blocked pairs) at K = 3 — and the N^(K-1) lift factor
+    leaves it once N > 2^(63/(K-1)). There is no guard: under the
+    session's ANSI default (``spark.sql.ansi.enabled``, on in Spark 4)
+    the query then raises ``ARITHMETIC_OVERFLOW`` rather than wrapping,
+    and the DuckDB twin's BIGINT cast raises as well. At that scale
+    compute on the histogram (<= 2^K rows) driver-side or switch the
+    product to DOUBLE; the histogram pass itself (the only distributed
+    stage: one map-side-combined groupBy) is unchanged.
 
     Reference parity: beyond-reference diagnostic over the same gamma
     machinery the reference's weight model implies

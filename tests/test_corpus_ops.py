@@ -389,6 +389,29 @@ def test_quota_cap_without_quality_keeps_lowest_ids(spark):
     assert got == [0, 1, 2, 3]
 
 
+def test_quota_cap_salts_string_ids(spark):
+    """Non-numeric string ids are salted on their hash: a long cast made
+    every slice NULL (one slice) or, under ANSI, raised."""
+    from pyspark.sql.window import Window
+
+    from bigmatch_utilities_spark.operators.corpus_ops import quota_cap
+
+    rows = [(f"doc-{i:03d}", f"g{i % 3}", (i * 7) % 11) for i in range(90)]
+    df = spark.createDataFrame(rows, "doc_id string, source string, q int")
+    got = sorted(
+        (r.source, r.quota_rank, r.doc_id)
+        for r in quota_cap(df, "doc_id", "source", 4, quality_col="q", salt=8).collect()
+    )
+    w = Window.partitionBy("source").orderBy(F.desc_nulls_last("q"), F.asc("doc_id"))
+    want = sorted(
+        (r.source, r.quota_rank, r.doc_id)
+        for r in df.withColumn("quota_rank", F.row_number().over(w))
+        .filter(F.col("quota_rank") <= 4)
+        .collect()
+    )
+    assert got == want
+
+
 def test_line_dedup_removes_frequent_lines_keeps_order(spark):
     from bigmatch_utilities_spark.operators.corpus_ops import line_dedup
 
@@ -421,3 +444,25 @@ def test_line_dedup_below_threshold_untouched(spark):
     out = {r.doc_id: r for r in line_dedup(df, "text", "doc_id", min_df=10).collect()}
     assert all(v.n_removed == 0 for v in out.values())
     assert out[3].clean_text == "shared line\nbody 3"
+
+
+def test_line_dedup_keeps_null_text_docs(spark, tmp_path):
+    """A NULL-text document keeps its row with clean_text = '' on both
+    engines, like an all-boilerplate document."""
+    from bigmatch_utilities_spark.operators.corpus_ops import (
+        line_dedup,
+        line_dedup_sql,
+    )
+
+    rows = [(i, f"footer\nbody {i}") for i in range(3)] + [(7, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(tuple(r) for r in line_dedup(df, "text", "doc_id", min_df=3).collect())
+    assert got == [
+        (0, "body 0", 2, 1), (1, "body 1", 2, 1), (2, "body 2", 2, 1), (7, "", 1, 0),
+    ]
+    pq = str(tmp_path / "t.parquet")
+    df.write.mode("overwrite").parquet(pq)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW t AS SELECT * FROM read_parquet('{pq}/*.parquet')")
+    want = sorted(tuple(r) for r in con.execute(line_dedup_sql("t", min_df=3)).fetchall())
+    assert got == want
