@@ -233,6 +233,8 @@ def _qs_mix_config():
         CutoffSpec,
         FieldRef,
         MatchConfig,
+        QGram,
+        Suffix,
     )
 
     cut = CutoffSpec(hi=_SNM_MIX_CUT[0], lo=_SNM_MIX_CUT[1])
@@ -248,20 +250,14 @@ def _qs_mix_config():
             ),
             BlockingPassSpec(
                 block_fields=(),
-                kind="qgram",
-                qgram_field="text_32",
-                qgram_n=6,
-                qgram_ratio=0.3,
-                qgram_purge_above=64,
+                blocker=QGram(field="text_32", n=6, ratio=0.3, purge_above=64),
                 **common,
             ),
             BlockingPassSpec(
                 block_fields=(),
-                kind="suffix",
-                suffix_field="text_32",
-                suffix_min_len=12,
-                suffix_ratio=0.3,
-                suffix_purge_above=64,
+                blocker=Suffix(
+                    field="text_32", min_len=12, ratio=0.3, purge_above=64
+                ),
                 **common,
             ),
         ),
@@ -288,6 +284,7 @@ def _tp_interval_config():
         BlockingPassSpec,
         CutoffSpec,
         FieldRef,
+        Interval,
         MatchConfig,
     )
 
@@ -295,11 +292,9 @@ def _tp_interval_config():
     return MatchConfig(
         passes=(
             BlockingPassSpec(
-                kind="interval",
-                interval_start="s_ts",
-                interval_end="e_ts",
-                interval_granule_s=3600,
-                interval_max_granules=16,
+                blocker=Interval(
+                    start="s_ts", end="e_ts", granule_s=3600, max_granules=16
+                ),
                 block_fields=(BlockField(name="user_id"),),
                 match_fields=_TP_FIELDS,
                 cutoff=cut,
@@ -322,6 +317,7 @@ def _snm_mix_config():
         CutoffSpec,
         FieldRef,
         MatchConfig,
+        Snm,
     )
 
     cut = CutoffSpec(hi=_SNM_MIX_CUT[0], lo=_SNM_MIX_CUT[1])
@@ -344,8 +340,7 @@ def _snm_mix_config():
                 match_fields=_SNM_MIX_FIELDS,
                 cutoff=cut,
                 print_cutoff=cut,
-                kind="snm",
-                snm_window=3,
+                blocker=Snm(window=3),
             ),
         ),
         id_field=FieldRef(name="doc_id"),
@@ -364,6 +359,7 @@ def _mp_mix_config():
         CutoffSpec,
         FieldRef,
         MatchConfig,
+        Meta,
     )
 
     cut = CutoffSpec(hi=_SNM_MIX_CUT[0], lo=_SNM_MIX_CUT[1])
@@ -383,10 +379,9 @@ def _mp_mix_config():
                 match_fields=_SNM_MIX_FIELDS,
                 cutoff=cut,
                 print_cutoff=cut,
-                kind="meta",
-                meta_keys=tuple(_MB_KEYS.items()),
-                meta_prune="wnp",
-                meta_max_block_rows=256,
+                blocker=Meta(
+                    keys=tuple(_MB_KEYS.items()), prune="wnp", max_block_rows=256
+                ),
             ),
         ),
         id_field=FieldRef(name="doc_id"),
@@ -396,12 +391,13 @@ def _mp_mix_config():
 
 def _cp_mix_config():
     """Pass 0: reference-style blocked equi-join on (lang, bucket).
-    Pass 1: rarest-token canopy mop-up (kind='canopy') — records sharing
+    Pass 1: rarest-token canopy mop-up (a Canopy blocker) — records sharing
     their most distinctive text token co-block even when every structured
     key disagrees."""
     from bigmatch_utilities_spark.config import (
         BlockField,
         BlockingPassSpec,
+        Canopy,
         CutoffSpec,
         FieldRef,
         MatchConfig,
@@ -424,9 +420,7 @@ def _cp_mix_config():
                 match_fields=_SNM_MIX_FIELDS,
                 cutoff=cut,
                 print_cutoff=cut,
-                kind="canopy",
-                canopy_field="text",
-                canopy_purge_above=200,
+                blocker=Canopy(field="text", purge_above=200),
             ),
         ),
         id_field=FieldRef(name="doc_id"),
@@ -1935,6 +1929,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             BlockingPassSpec,
             CutoffSpec,
             FieldRef,
+            Lsh,
             MatchConfig,
         )
         from bigmatch_utilities_spark.operators.pipeline import match_pairs
@@ -1952,12 +1947,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     print_cutoff=cut,
                 ),
                 BlockingPassSpec(  # pass 1: MinHash-LSH canopy, in config
-                    kind="lsh",
-                    lsh_field="text",
-                    lsh_shingle_k=3,
-                    lsh_bands=2,
-                    lsh_rows_per_band=2,
-                    lsh_max_bucket=None,
+                    blocker=Lsh(
+                        field="text", shingle_k=3, bands=2, rows_per_band=2,
+                        max_bucket=None,
+                    ),
                     block_fields=(),
                     match_fields=_SNM_MIX_FIELDS,
                     cutoff=cut,
@@ -2120,6 +2113,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             CutoffSpec,
             FieldRef,
             MatchConfig,
+            Pprl,
         )
         from bigmatch_utilities_spark.operators.pipeline import match_pairs
 
@@ -2136,13 +2130,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     print_cutoff=cut,
                 ),
                 BlockingPassSpec(  # pass 1: bloom-band canopy, in config
-                    kind="pprl",
-                    pprl_field="text_32",
-                    pprl_bits=256,
-                    pprl_k=2,
-                    pprl_bands=6,
-                    pprl_band_bits=16,
-                    pprl_max_bucket=64,
+                    blocker=Pprl(
+                        field="text_32", bits=256, k=2, bands=6, band_bits=16,
+                        max_bucket=64,
+                    ),
                     block_fields=(),
                     match_fields=_BD_FIELDS,
                     cutoff=cut,
@@ -2558,6 +2549,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- embedding-ANN blocking as a declarable pass kind -----------------
     def ap(spark, sf):
         from bigmatch_utilities_spark.config import (
+            Ann,
             BlockField,
             BlockingPassSpec,
             CutoffSpec,
@@ -2579,12 +2571,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     print_cutoff=cut,
                 ),
                 BlockingPassSpec(  # pass 1: dense-vector canopy, in config
-                    kind="ann",
-                    ann_field="embedding",
-                    ann_dim=64,
-                    ann_bands=2,
-                    ann_bits=8,
-                    ann_threshold=0.2,
+                    blocker=Ann(
+                        field="embedding", dim=64, bands=2, bits=8, threshold=0.2
+                    ),
                     block_fields=(),
                     match_fields=_SNM_MIX_FIELDS,
                     cutoff=cut,

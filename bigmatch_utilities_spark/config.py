@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import csv
 import io
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass
 
 #: Comparator vocabulary, per /root/reference/app/BlockingPass.py:117-127.
 #:   c    exact string comparison
@@ -165,20 +165,306 @@ class CutoffSpec:
     lo: float = DEFAULT_CUTOFF_LO
 
 
+# ---------------------------------------------------------------------------
+# Pass kinds: one small params class per candidate generator
+# ---------------------------------------------------------------------------
+#
+# A pass's ``blocker`` says how its candidate pairs are generated; scoring,
+# cutoffs and first-pass-wins are the same for every kind. Equi is the
+# reference's blocked equi-join; every other kind is an engine extension
+# the parmf grammar cannot express (write_parmf refuses). The eight kinds
+# after Snm are single-file (dedupe) passes: ``pairs(rec, id_col, *,
+# block_fields, shard_rows)`` returns canonical ``id_l < id_r`` candidate
+# ids, and operators.pipeline.pass_candidates joins the carried values on.
+
+
+@dataclass(frozen=True)
+class Equi:
+    """The reference's blocked equi-join: candidates agree EXACTLY on every
+    blocking field (operators/blocking.candidate_pairs).
+
+    star_block_rows: a self-join pass whose blocking key functionally
+    determines the match decision (e.g. a content hash) may emit the
+    min-id STAR of a block above this size (n-1 pairs) instead of the full
+    clique (n(n-1)/2): transitive closure recovers the identical entity,
+    and a 10^5-row boilerplate block costs O(n) instead of O(n^2) through
+    one reducer. None = always the full clique (reference semantics)."""
+
+    kind = "equi"
+    star_block_rows: int | None = None
+
+
+@dataclass(frozen=True)
+class Snm:
+    """Sorted neighborhood (operators/sorted_neighborhood.py): the file is
+    ordered by the blocking fields (plus the id as tiebreak) and every
+    record pairs with its ``window``-1 successors, so pair volume is
+    (window-1)·N — the loose mop-up pass the reference approximates with
+    ever-coarser equi keys (samplefiles/parmf_new.txt runs nine passes).
+    Also runs two-file, over the merged sort order."""
+
+    kind = "snm"
+    window: int = 5
+
+    def __post_init__(self) -> None:
+        if self.window < 2:
+            raise ValueError("snm window must be >= 2")
+
+
+@dataclass(frozen=True)
+class Lsh:
+    """MinHash-LSH canopy over ``field`` (operators/dedup.minhash_candidates):
+    candidates collide in at least one of ``bands`` band keys. Band buckets
+    above ``max_bucket`` are boilerplate canopies, dropped whole (None =
+    uncapped). A two-file canopy needs the delta-touching filter
+    repo_linkage.run_repo_linkage_delta composes explicitly."""
+
+    kind = "lsh"
+    field: str
+    shingle_k: int = 3
+    bands: int = 4
+    rows_per_band: int = 4
+    max_bucket: int | None = 256
+
+    def __post_init__(self) -> None:
+        if not self.field:
+            raise ValueError("an lsh pass needs a field")
+        if self.bands < 1 or self.rows_per_band < 1:
+            raise ValueError("lsh bands / rows_per_band must be >= 1")
+
+    def pairs(self, rec, id_col, *, block_fields, shard_rows):
+        from bigmatch_utilities_spark.operators.dedup import minhash_candidates
+
+        return minhash_candidates(
+            rec, self.field, id_col, shingle_k=self.shingle_k, bands=self.bands,
+            rows_per_band=self.rows_per_band, max_bucket=self.max_bucket,
+            shard_rows=shard_rows,
+        )
+
+
+@dataclass(frozen=True)
+class Pprl:
+    """Privacy-preserving bloom-band blocking: Hamming-LSH band agreement
+    over ``field``'s Bloom/CLK encodings (functions/pprl.bloom_band_pairs)
+    — blocking without cleartext; pair it with "b" (bloom-dice) match
+    fields for a fully encoded pipeline. Band buckets above ``max_bucket``
+    are dropped whole (an all-zero band key is the encoded blank key)."""
+
+    kind = "pprl"
+    field: str
+    bits: int = 512
+    k: int = 3
+    bands: int = 8
+    band_bits: int = 8
+    max_bucket: int = 2_000
+
+    def __post_init__(self) -> None:
+        if not self.field:
+            raise ValueError("a pprl pass needs a field")
+        if self.bands < 1 or self.band_bits < 1:
+            raise ValueError("pprl bands / band_bits must be >= 1")
+
+    def pairs(self, rec, id_col, *, block_fields, shard_rows):
+        from bigmatch_utilities_spark.functions.pprl import bloom_band_pairs
+
+        return bloom_band_pairs(
+            rec, id_col, self.field, bits=self.bits, k=self.k, bands=self.bands,
+            band_bits=self.band_bits, max_bucket=self.max_bucket,
+        )
+
+
+@dataclass(frozen=True)
+class QGram:
+    """Q-gram token blocking (operators/meta_blocking.qgram_block_pairs):
+    candidates share at least one KEPT character ``n``-gram of ``field``
+    after the purge + per-record smallest-blocks filter — the typo-anywhere
+    remedy for key fields, where an equi pass drops every record with one
+    edit in the key."""
+
+    kind = "qgram"
+    field: str
+    n: int = 4
+    ratio: float = 0.5
+    purge_above: int = 2_000
+
+    def __post_init__(self) -> None:
+        if not self.field:
+            raise ValueError("a qgram pass needs a field")
+        if self.n < 2:
+            raise ValueError("qgram n must be >= 2")
+        if not (0.0 < self.ratio <= 1.0):
+            raise ValueError("qgram ratio must be in (0, 1]")
+
+    def pairs(self, rec, id_col, *, block_fields, shard_rows):
+        from bigmatch_utilities_spark.operators.meta_blocking import qgram_block_pairs
+
+        return qgram_block_pairs(
+            rec, id_col, self.field, n=self.n, ratio=self.ratio,
+            purge_above=self.purge_above,
+        )
+
+
+@dataclass(frozen=True)
+class Suffix:
+    """Suffix-array blocking (operators/meta_blocking.suffix_block_pairs):
+    candidates share a KEPT suffix (length >= ``min_len``) of ``field`` —
+    the PREFIX-divergence remedy (truncation, titles, path prefixes)
+    complementing QGram, with the same purge + per-record filter."""
+
+    kind = "suffix"
+    field: str
+    min_len: int = 6
+    ratio: float = 0.5
+    purge_above: int = 2_000
+
+    def __post_init__(self) -> None:
+        if not self.field:
+            raise ValueError("a suffix pass needs a field")
+        if self.min_len < 2:
+            raise ValueError("suffix min_len must be >= 2")
+        if not (0.0 < self.ratio <= 1.0):
+            raise ValueError("suffix ratio must be in (0, 1]")
+
+    def pairs(self, rec, id_col, *, block_fields, shard_rows):
+        from bigmatch_utilities_spark.operators.meta_blocking import suffix_block_pairs
+
+        return suffix_block_pairs(
+            rec, id_col, self.field, min_len=self.min_len, ratio=self.ratio,
+            purge_above=self.purge_above,
+        )
+
+
+@dataclass(frozen=True)
+class Interval:
+    """Interval overlap (operators/temporal.interval_overlap_pairs):
+    candidates are records whose [start, end] validity windows overlap,
+    restricted to rows agreeing on the pass's block_fields (exact co-block
+    keys, blank_flag ignored) — linking longitudinal observations of the
+    same entity. Granule-bucketed equi-join; rows spanning >=
+    ``max_granules`` granules are dropped."""
+
+    kind = "interval"
+    start: str
+    end: str
+    granule_s: int = 3600
+    max_granules: int = 64
+
+    def __post_init__(self) -> None:
+        if not self.start or not self.end:
+            raise ValueError("an interval pass needs start and end columns")
+        if self.granule_s < 1 or self.max_granules < 1:
+            raise ValueError("interval granule_s / max_granules must be >= 1")
+
+    def pairs(self, rec, id_col, *, block_fields, shard_rows):
+        from bigmatch_utilities_spark.operators.temporal import interval_overlap_pairs
+
+        return interval_overlap_pairs(
+            rec, id_col, self.start, self.end, granule_s=self.granule_s,
+            max_granules=self.max_granules,
+            block_cols=tuple(bf.name for bf in block_fields),
+        )
+
+
+@dataclass(frozen=True)
+class Meta:
+    """Meta-blocking: the CBS-weighted multi-key block graph over ``keys``
+    — ((name, ANSI SQL expression), ...) — pruned by "wep" (global-mean
+    edge prune, operators/meta_blocking.meta_block_pairs) or "wnp" (local
+    node-mean prune, wnp_pairs). A pair proposed by k independent keys
+    outranks single-key coincidences before any comparator runs."""
+
+    kind = "meta"
+    keys: tuple[tuple[str, str], ...]
+    prune: str = "wep"
+    max_block_rows: int = 2_000
+
+    def __post_init__(self) -> None:
+        if not self.keys:
+            raise ValueError("a meta pass needs keys")
+        if self.prune not in ("wep", "wnp"):
+            raise ValueError("meta prune must be 'wep' or 'wnp'")
+        if self.max_block_rows < 2:
+            raise ValueError("meta max_block_rows must be >= 2")
+
+    def pairs(self, rec, id_col, *, block_fields, shard_rows):
+        from bigmatch_utilities_spark.operators.meta_blocking import (
+            meta_block_pairs,
+            wnp_pairs,
+        )
+
+        prune_fn = meta_block_pairs if self.prune == "wep" else wnp_pairs
+        return prune_fn(
+            rec, id_col, dict(self.keys), max_block_rows=self.max_block_rows
+        )
+
+
+@dataclass(frozen=True)
+class Canopy:
+    """Rarest-token canopy (operators/meta_blocking.
+    rarest_token_canopy_pairs): each record joins the canopy of its
+    lowest-document-frequency token of ``field`` (ties lexicographic;
+    tokens with df > ``purge_above`` ignored as boilerplate), and
+    candidates are within-canopy pairs. Canopies partition the records
+    and none exceeds ``purge_above`` rows, so the pair budget is bounded."""
+
+    kind = "canopy"
+    field: str
+    purge_above: int = 2_000
+
+    def __post_init__(self) -> None:
+        if not self.field:
+            raise ValueError("a canopy pass needs a field")
+        if self.purge_above < 2:
+            raise ValueError("canopy purge_above must be >= 2")
+
+    def pairs(self, rec, id_col, *, block_fields, shard_rows):
+        from bigmatch_utilities_spark.operators import meta_blocking
+
+        return meta_blocking.rarest_token_canopy_pairs(
+            rec, id_col, self.field, purge_above=self.purge_above
+        )
+
+
+@dataclass(frozen=True)
+class Ann:
+    """Embedding ANN (operators/similarity.embedding_neardup): random-
+    hyperplane sign-LSH over the ``field`` embedding column
+    (array<float/double>, ``dim`` wide) — ``bands`` bands of ``bits``
+    signs each, any-band collision ⇒ candidate, exact cosine >=
+    ``threshold`` verifies. Semantically near records co-block even with
+    zero lexical overlap; buckets above ``max_bucket`` are dropped."""
+
+    kind = "ann"
+    field: str
+    dim: int = 64
+    bands: int = 2
+    bits: int = 8
+    threshold: float = 0.0
+    seed: int = 7
+    max_bucket: int | None = 10_000
+
+    def __post_init__(self) -> None:
+        if not self.field:
+            raise ValueError("an ann pass needs a field")
+        if self.dim < 1 or self.bands < 1 or self.bits < 1:
+            raise ValueError("ann dim / bands / bits must be >= 1")
+
+    def pairs(self, rec, id_col, *, block_fields, shard_rows):
+        from bigmatch_utilities_spark.operators.similarity import embedding_neardup
+
+        return embedding_neardup(
+            rec, id_col=id_col, vec_col=self.field, threshold=self.threshold,
+            n_bands=self.bands, bits_per_band=self.bits, dim=self.dim,
+            seed=self.seed, max_bucket=self.max_bucket, shard_rows=shard_rows,
+        )
+
+
 @dataclass(frozen=True)
 class BlockingPassSpec:
     block_fields: tuple[BlockField, ...]
     match_fields: tuple[MatchField, ...]
     cutoff: CutoffSpec = CutoffSpec()
     print_cutoff: CutoffSpec = CutoffSpec()
-    #: Self-join passes whose blocking key functionally determines the match
-    #: decision (e.g. blocking on a content hash) may declare a block-size
-    #: threshold above which the engine emits the min-id STAR of the block
-    #: (n-1 pairs) instead of the full clique (n(n-1)/2): transitive closure
-    #: recovers the identical entity, and a 10^5-row identical-content
-    #: boilerplate block costs O(n) instead of O(n^2) through one reducer.
-    #: None = always emit the full clique (reference pairs-file semantics).
-    star_block_rows: int | None = None
     #: Fields whose equality on both sides means the pair was already found
     #: by an earlier exact-hash pass: such candidates are dropped BEFORE the
     #: (expensive, Arrow-batched) comparator scoring. E.g. a fuzzy pass in a
@@ -187,128 +473,6 @@ class BlockingPassSpec:
     #: re-scoring it only to lose first-pass-wins later is pure waste (and
     #: the dominant waste when boilerplate blocks echo through loose keys).
     suppress_equal: tuple[str, ...] = ()
-    #: Pass kind. "equi" (default) = the reference's blocked equi-join:
-    #: candidates agree EXACTLY on every blocking field. "snm" = sorted-
-    #: neighborhood: the file is ordered by the blocking fields (plus the
-    #: id as tiebreak) and every record is paired with its snm_window-1
-    #: successors (operators/sorted_neighborhood.py) — the loose mop-up
-    #: pass the reference approximates with ever-coarser equi keys
-    #: (samplefiles/parmf_new.txt runs NINE passes for this reason); one
-    #: SNM pass catches near-misses no derived equi key can. Engine
-    #: extension: the parmf grammar cannot express it (write_parmf
-    #: refuses), native MatchConfig only. Same scoring, cutoff, and
-    #: first-pass-wins semantics as any other pass.
-    kind: str = "equi"
-    #: SNM window width (kind="snm" only): each record pairs with its
-    #: snm_window-1 sort-order successors, so pair volume is exactly
-    #: (snm_window-1)·N − edge truncation — linear in N.
-    snm_window: int = 5
-    #: LSH canopy pass (kind="lsh"): candidates come from MinHash-LSH band
-    #: collisions over lsh_field (operators/dedup.minhash_candidates)
-    #: instead of an equi-join — "pass 3 is a near-dup canopy" declared in
-    #: config, the pass run_repo_linkage previously had to hand-compose.
-    #: Single-file (dedupe) passes only: a two-file canopy needs the
-    #: delta-touching filter run_repo_linkage_delta composes explicitly.
-    #: block_fields are ignored (the join comes from the band keys); the
-    #: parmf grammar cannot express it (write_parmf refuses, as for snm).
-    lsh_field: str | None = None
-    lsh_shingle_k: int = 3
-    lsh_bands: int = 4
-    lsh_rows_per_band: int = 4
-    #: band buckets above this are boilerplate canopies, dropped whole
-    #: (None = uncapped; see run_repo_linkage's minhash_max_bucket note)
-    lsh_max_bucket: int | None = 256
-    #: PPRL bloom-band pass (kind="pprl"): candidates come from Hamming-LSH
-    #: band agreement over pprl_field's Bloom/CLK encodings
-    #: (functions/pprl.bloom_band_pairs) — blocking WITHOUT cleartext, the
-    #: pass a party running encoded files declares; pair it with "b"
-    #: (bloom-dice) match fields for a fully-encoded pipeline. Single-file
-    #: (dedupe) passes only; block_fields are ignored (the join comes from
-    #: the band keys); the parmf grammar cannot express it (write_parmf
-    #: refuses, as for snm/lsh).
-    pprl_field: str | None = None
-    pprl_bits: int = 512
-    pprl_k: int = 3
-    pprl_bands: int = 8
-    pprl_band_bits: int = 8
-    #: band buckets above this are dropped whole (an all-zero band key is
-    #: the encoded analogue of a blank blocking key)
-    pprl_max_bucket: int = 2_000
-    #: Q-gram token-blocking pass (kind="qgram"): candidates share at least
-    #: one KEPT character n-gram of qgram_field after the mandatory purge +
-    #: per-record smallest-blocks filter (operators/meta_blocking.
-    #: qgram_block_pairs) — the typo-anywhere remedy for key fields, where
-    #: an equi pass silently drops every record with one edit in the key.
-    #: Single-file (dedupe) passes only; block_fields are ignored; the
-    #: parmf grammar cannot express it (write_parmf refuses, as for snm).
-    qgram_field: str | None = None
-    qgram_n: int = 4
-    qgram_ratio: float = 0.5
-    qgram_purge_above: int = 2_000
-    #: Suffix-array blocking pass (kind="suffix"): candidates share a KEPT
-    #: suffix (length >= suffix_min_len) of suffix_field — the PREFIX-
-    #: divergence remedy (truncation, titles, path prefixes) complementing
-    #: qgram. Same purge + per-record filter chain, same single-file /
-    #: no-parmf constraints.
-    suffix_field: str | None = None
-    suffix_min_len: int = 6
-    suffix_ratio: float = 0.5
-    suffix_purge_above: int = 2_000
-    #: Interval-overlap pass (kind="interval"): candidates are record
-    #: pairs whose [interval_start, interval_end] validity windows
-    #: overlap, optionally restricted to rows agreeing on block_fields
-    #: (used as exact co-block keys, blank_flag ignored). The temporal
-    #: pass the snapshot-only reference grammar cannot express — linking
-    #: longitudinal observations of the same entity. Backed by
-    #: operators/temporal.interval_overlap_pairs (granule-bucketed
-    #: equi-join; rows spanning >= interval_max_granules granules are
-    #: dropped). Single-file (dedupe) passes only; no parmf rendering.
-    interval_start: str | None = None
-    interval_end: str | None = None
-    interval_granule_s: int = 3600
-    interval_max_granules: int = 64
-    #: Meta-blocking pass (kind="meta"): candidates come from the CBS-
-    #: weighted multi-key block graph over meta_keys — ((name, ANSI SQL
-    #: expression), ...) — pruned by meta_prune: "wep" (global-mean edge
-    #: prune, operators/meta_blocking.meta_block_pairs) or "wnp" (local
-    #: node-mean prune, wnp_pairs). One declarative pass replaces hand-
-    #: tuning several loose equi passes: a pair proposed by k independent
-    #: keys outranks single-key coincidences BEFORE any comparator runs.
-    #: Single-file (dedupe) passes only; block_fields are ignored (the
-    #: join comes from the key graph); the parmf grammar cannot express
-    #: it (write_parmf refuses, as for snm/lsh).
-    meta_keys: tuple[tuple[str, str], ...] = ()
-    meta_prune: str = "wep"
-    meta_max_block_rows: int = 2_000
-    #: Rarest-token canopy pass (kind="canopy"): each record joins the
-    #: canopy of its lowest-document-frequency token of canopy_field
-    #: (ties lexicographic; tokens with df > canopy_purge_above ignored
-    #: as boilerplate BEFORE the argmin) and candidates are within-canopy
-    #: pairs. Canopies PARTITION the records, and a canopy can never
-    #: exceed its token's df (≤ canopy_purge_above), so the pair budget
-    #: is bounded with no extra cap. Backed by
-    #: operators/meta_blocking.rarest_token_canopy_pairs. Single-file
-    #: (dedupe) passes only; no parmf rendering.
-    canopy_field: str | None = None
-    canopy_purge_above: int = 2_000
-    #: Embedding-ANN pass (kind="ann"): candidates come from random-
-    #: hyperplane sign-LSH over the ann_field embedding column
-    #: (array<float/double>, ann_dim wide) — ann_bands independent bands
-    #: of ann_bits hyperplane signs each, any-band collision ⇒ candidate,
-    #: exact cosine >= ann_threshold verifies. "Pass N blocks in dense
-    #: vector space" in config — the modern-ER complement to the token
-    #: kinds (qgram/suffix/lsh): semantically-near records co-block even
-    #: with zero lexical overlap. Backed by similarity.embedding_neardup
-    #: (singleton drop + ann_max_bucket cap + shard salting, the shared
-    #: LSH-family guardrails). Single-file (dedupe) passes only; no
-    #: parmf rendering (the reference grammar has no vector types).
-    ann_field: str | None = None
-    ann_dim: int = 64
-    ann_bands: int = 2
-    ann_bits: int = 8
-    ann_threshold: float = 0.0
-    ann_seed: int = 7
-    ann_max_bucket: int | None = 10_000
     #: Transposition-tolerant field PAIRS scored via swapped_agreement
     #: (functions/comparators.py): each contributes ONE FS weight term
     #: computed on the better of the straight and crossed alignments.
@@ -322,84 +486,12 @@ class BlockingPassSpec:
     #: match_fields / match_field_pairs; exactness requires plain equality
     #: on the level field like any scored field.
     level_fields: tuple = ()
-
-    def __post_init__(self) -> None:
-        if self.kind not in (
-            "equi", "snm", "lsh", "pprl", "qgram", "suffix", "interval",
-            "meta", "ann", "canopy",
-        ):
-            raise ValueError(f"unknown pass kind {self.kind!r}")
-        if self.kind == "canopy":
-            if not self.canopy_field:
-                raise ValueError("kind='canopy' requires canopy_field")
-            if self.canopy_purge_above < 2:
-                raise ValueError("canopy_purge_above must be >= 2")
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-        if self.kind == "ann":
-            if not self.ann_field:
-                raise ValueError("kind='ann' requires ann_field")
-            if self.ann_dim < 1 or self.ann_bands < 1 or self.ann_bits < 1:
-                raise ValueError("ann_dim/ann_bands/ann_bits must be >= 1")
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-        if self.kind == "meta":
-            if not self.meta_keys:
-                raise ValueError("kind='meta' requires meta_keys")
-            if self.meta_prune not in ("wep", "wnp"):
-                raise ValueError("meta_prune must be 'wep' or 'wnp'")
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-            if self.meta_max_block_rows < 2:
-                raise ValueError("meta_max_block_rows must be >= 2")
-        if self.kind == "snm":
-            if self.snm_window < 2:
-                raise ValueError("snm_window must be >= 2")
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-        if self.kind == "lsh":
-            if not self.lsh_field:
-                raise ValueError("kind='lsh' requires lsh_field")
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-            if self.lsh_bands < 1 or self.lsh_rows_per_band < 1:
-                raise ValueError("lsh_bands / lsh_rows_per_band must be >= 1")
-        if self.kind == "pprl":
-            if not self.pprl_field:
-                raise ValueError("kind='pprl' requires pprl_field")
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-            if self.pprl_bands < 1 or self.pprl_band_bits < 1:
-                raise ValueError("pprl_bands / pprl_band_bits must be >= 1")
-        if self.kind == "qgram":
-            if not self.qgram_field:
-                raise ValueError("kind='qgram' requires qgram_field")
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-            if self.qgram_n < 2:
-                raise ValueError("qgram_n must be >= 2")
-            if not (0.0 < self.qgram_ratio <= 1.0):
-                raise ValueError("qgram_ratio must be in (0, 1]")
-        if self.kind == "suffix":
-            if not self.suffix_field:
-                raise ValueError("kind='suffix' requires suffix_field")
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-            if self.suffix_min_len < 2:
-                raise ValueError("suffix_min_len must be >= 2")
-            if not (0.0 < self.suffix_ratio <= 1.0):
-                raise ValueError("suffix_ratio must be in (0, 1]")
-        if self.kind == "interval":
-            if not self.interval_start or not self.interval_end:
-                raise ValueError(
-                    "kind='interval' requires interval_start and interval_end"
-                )
-            if self.star_block_rows:
-                raise ValueError("star_block_rows is an equi-pass option")
-            if self.interval_granule_s < 1 or self.interval_max_granules < 1:
-                raise ValueError(
-                    "interval_granule_s / interval_max_granules must be >= 1"
-                )
+    #: How candidates are generated: one of the pass-kind classes above.
+    #: The block fields are the equi-join keys for Equi, the sort key for
+    #: Snm and the co-block keys for Interval; the other kinds ignore them.
+    blocker: (
+        Equi | Snm | Lsh | Pprl | QGram | Suffix | Interval | Meta | Canopy | Ann
+    ) = Equi()
 
 
 @dataclass(frozen=True)
@@ -550,11 +642,13 @@ def write_parmf(cfg: MatchConfig) -> str:
     /root/reference/app/BlockingPass.py:588-715).
 
     Refuses configs using engine extensions the grammar cannot express
-    (SNM passes, match_field_pairs) rather than silently dropping them.
+    (non-equi passes, match_field_pairs) rather than silently dropping them.
     """
     for p in cfg.passes:
-        if p.kind != "equi":
-            raise ValueError(f"parmf grammar cannot express a {p.kind!r} pass")
+        if not isinstance(p.blocker, Equi):
+            raise ValueError(
+                f"parmf grammar cannot express a {p.blocker.kind!r} pass"
+            )
         if p.match_field_pairs:
             raise ValueError("parmf grammar cannot express match_field_pairs")
         if p.level_fields:
@@ -689,22 +783,3 @@ def unique_id_field(fields: list[DictField]) -> DictField:
     if len(ids) != 1:
         raise ValueError(f"expected exactly one unique_id_yn column, got {len(ids)}")
     return ids[0]
-
-
-def rekey_for_dataframes(cfg: MatchConfig) -> MatchConfig:
-    """Drop fixed-width positions (DataFrame inputs address fields by name)."""
-    def strip(fr):
-        return replace(fr, rec_start=0, rec_width=0, mem_start=0, mem_width=0)
-
-    return replace(
-        cfg,
-        passes=tuple(
-            replace(
-                p,
-                block_fields=tuple(strip(bf) for bf in p.block_fields),
-                match_fields=tuple(strip(mf) for mf in p.match_fields),
-            )
-            for p in cfg.passes
-        ),
-        id_field=strip(cfg.id_field),
-    )

@@ -324,9 +324,11 @@ def greedy_capacitated(
 
     Scale: per-round cost is two per-node row_number windows over the
     remaining pair table (window width = node degree, which candidate
-    generation already caps), two broadcast-sized capacity joins (the
-    accepted set), and the anti-join prune; no global sort, no global
-    window. Lineage is truncated per round (the closure.py discipline).
+    generation already caps), two capacity joins against the per-node
+    accepted counts, and the anti-join prunes; no global sort, no global
+    window. No join carries a broadcast hint: the count tables are
+    node-scale (up to one row per id), so AQE picks the strategy from
+    their measured size. Lineage is truncated per round (the closure.py discipline).
 
     Output: (rec_col, mem_col, weight_col, round).
     """
@@ -357,10 +359,8 @@ def greedy_capacitated(
                 F.count(F.lit(1)).alias("_nm")
             )
             cap = (
-                remaining.join(
-                    F.broadcast(ur), remaining[r] == F.col("_ur"), "left"
-                )
-                .join(F.broadcast(um), remaining[m] == F.col("_um"), "left")
+                remaining.join(ur, remaining[r] == F.col("_ur"), "left")
+                .join(um, remaining[m] == F.col("_um"), "left")
                 .withColumn(
                     "_cr", F.lit(rec_cap) - F.coalesce(F.col("_nr"), F.lit(0))
                 )
@@ -400,14 +400,8 @@ def greedy_capacitated(
                 F.count(F.lit(1)).alias("_nm")
             ).filter(F.col("_nm") >= mem_cap)
             remaining = remaining.join(
-                F.broadcast(ur.select("_ur")),
-                remaining[r] == F.col("_ur"),
-                "left_anti",
-            ).join(
-                F.broadcast(um.select("_um")),
-                remaining[m] == F.col("_um"),
-                "left_anti",
-            )
+                ur.select("_ur"), remaining[r] == F.col("_ur"), "left_anti"
+            ).join(um.select("_um"), remaining[m] == F.col("_um"), "left_anti")
     return out
 
 

@@ -306,7 +306,8 @@ def candidate_pairs(
     keys = [bf.name for bf in spec.block_fields]
     carry_rec = carry_rec if carry_rec is not None else [mf.name for mf in spec.match_fields]
     carry_mem = carry_mem if carry_mem is not None else [mf.name for mf in spec.match_fields]
-    star_block_rows = star_block_rows if star_block_rows is not None else spec.star_block_rows
+    if star_block_rows is None:
+        star_block_rows = spec.blocker.star_block_rows
     if star_block_rows and not dedupe:
         raise ValueError("star_block_rows requires a self-join (dedupe) pass")
 

@@ -28,7 +28,12 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bigmatch_utilities_spark.config import BlockingPassSpec, MatchConfig
+from bigmatch_utilities_spark.config import (
+    BlockingPassSpec,
+    Equi,
+    MatchConfig,
+    Snm,
+)
 from bigmatch_utilities_spark.operators.blocking import candidate_pairs
 from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
 
@@ -47,6 +52,22 @@ def normalize(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
             F.regexp_replace(F.trim(F.coalesce(F.col(c).cast("string"), F.lit(""))), " +", " "),
         )
     return out
+
+
+def attach_carry(
+    cands: DataFrame, src: DataFrame, id_col: str, carry: list[str]
+) -> DataFrame:
+    """Canonical ``(id_l, id_r)`` candidate ids → the pass candidate
+    contract ``(id_rec, id_mem, rec_<c>..., mem_<c>...)``: each side's
+    ``carry`` values join on from ``src`` by id."""
+    side = src.select(F.col(id_col), *carry)
+    return (
+        cands.select("id_l", "id_r")
+        .join(side.toDF("id_l", *[f"rec_{c}" for c in carry]), "id_l")
+        .join(side.toDF("id_r", *[f"mem_{c}" for c in carry]), "id_r")
+        .withColumnRenamed("id_l", "id_rec")
+        .withColumnRenamed("id_r", "id_mem")
+    )
 
 
 def pass_candidates(
@@ -82,7 +103,14 @@ def pass_candidates(
         if f not in carry:
             carry.append(f)
     carry_sup = carry + [f for f in spec.suppress_equal if f not in carry]
-    if spec.kind == "snm":
+    blocker = spec.blocker
+    if isinstance(blocker, Equi):
+        pairs = candidate_pairs(
+            rec, mem, spec, id_col, dedupe=dedupe, broadcast_mem=broadcast_mem,
+            salt=salt, shard_rows=shard_rows, max_block_rows=max_block_rows,
+            carry_rec=carry_sup, carry_mem=carry_sup,
+        )
+    elif isinstance(blocker, Snm):
         from bigmatch_utilities_spark.operators.sorted_neighborhood import (
             snm_candidate_pairs,
         )
@@ -90,271 +118,19 @@ def pass_candidates(
         # salt/shard/star/broadcast are equi-join knobs; SNM's pair volume
         # is (window-1)·N by construction, so none of them apply.
         pairs = snm_candidate_pairs(
-            rec,
-            mem,
-            spec,
-            id_col,
-            dedupe=dedupe,
-            carry_rec=carry_sup,
-            carry_mem=carry_sup,
-        )
-    elif spec.kind == "lsh":
-        from bigmatch_utilities_spark.operators.dedup import minhash_candidates
-
-        if not dedupe or mem is not rec:
-            raise ValueError(
-                "kind='lsh' is a single-file (dedupe) pass; a two-file "
-                "canopy needs the delta-touching filter "
-                "repo_linkage.run_repo_linkage_delta composes explicitly"
-            )
-        # candidates come from band-key collisions (already id_l < id_r
-        # canonical, singleton-dropped, bucket-capped, shard-salted); the
-        # carried match-field values join on from the source, same shape
-        # as run_repo_linkage's hand-composed pass 3
-        cands = minhash_candidates(
-            rec,
-            spec.lsh_field,
-            id_col,
-            shingle_k=spec.lsh_shingle_k,
-            bands=spec.lsh_bands,
-            rows_per_band=spec.lsh_rows_per_band,
-            max_bucket=spec.lsh_max_bucket,
-            shard_rows=shard_rows,
-        ).select("id_l", "id_r")
-        side = rec.select(F.col(id_col), *carry_sup)
-        pairs = (
-            cands.join(
-                side.toDF(*(["id_l"] + [f"rec_{c}" for c in carry_sup])), "id_l"
-            )
-            .join(
-                side.toDF(*(["id_r"] + [f"mem_{c}" for c in carry_sup])), "id_r"
-            )
-            .withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
-        )
-    elif spec.kind == "pprl":
-        from bigmatch_utilities_spark.functions.pprl import bloom_band_pairs
-
-        if not dedupe or mem is not rec:
-            raise ValueError(
-                "kind='pprl' is a single-file (dedupe) pass; two encoded "
-                "files merge into one frame before a dedupe run"
-            )
-        # candidates come from bloom-band agreement (id_l < id_r canonical,
-        # singleton-dropped, bucket-capped); the carried match-field values
-        # join on from the source, same shape as the lsh canopy pass — note
-        # the carried fields may themselves be encodings when the run is
-        # fully privacy-preserving ("b" match fields re-encode the strings)
-        cands = bloom_band_pairs(
-            rec,
-            id_col,
-            spec.pprl_field,
-            bits=spec.pprl_bits,
-            k=spec.pprl_k,
-            bands=spec.pprl_bands,
-            band_bits=spec.pprl_band_bits,
-            max_bucket=spec.pprl_max_bucket,
-        ).select("id_l", "id_r")
-        side = rec.select(F.col(id_col), *carry_sup)
-        pairs = (
-            cands.join(
-                side.toDF(*(["id_l"] + [f"rec_{c}" for c in carry_sup])), "id_l"
-            )
-            .join(
-                side.toDF(*(["id_r"] + [f"mem_{c}" for c in carry_sup])), "id_r"
-            )
-            .withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
-        )
-    elif spec.kind == "ann":
-        from bigmatch_utilities_spark.operators.similarity import (
-            embedding_neardup,
-        )
-
-        if not dedupe or mem is not rec:
-            raise ValueError(
-                "kind='ann' is a single-file (dedupe) pass; merge two "
-                "embedded files into one frame before a dedupe run"
-            )
-        # candidates come from random-hyperplane band collisions verified
-        # by exact cosine (already id_l < id_r canonical, singleton-
-        # dropped, bucket-capped); carried match-field values join on
-        # from the source, same shape as the lsh/pprl kinds
-        cands = embedding_neardup(
-            rec,
-            id_col=id_col,
-            vec_col=spec.ann_field,
-            threshold=spec.ann_threshold,
-            n_bands=spec.ann_bands,
-            bits_per_band=spec.ann_bits,
-            dim=spec.ann_dim,
-            seed=spec.ann_seed,
-            max_bucket=spec.ann_max_bucket,
-            shard_rows=shard_rows,
-        ).select("id_l", "id_r")
-        side = rec.select(F.col(id_col), *carry_sup)
-        pairs = (
-            cands.join(
-                side.toDF(*(["id_l"] + [f"rec_{c}" for c in carry_sup])), "id_l"
-            )
-            .join(
-                side.toDF(*(["id_r"] + [f"mem_{c}" for c in carry_sup])), "id_r"
-            )
-            .withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
-        )
-    elif spec.kind == "interval":
-        from bigmatch_utilities_spark.operators.temporal import (
-            interval_overlap_pairs,
-        )
-
-        if not dedupe or mem is not rec:
-            raise ValueError(
-                "kind='interval' is a single-file (dedupe) pass; merge "
-                "two files into one frame before a dedupe run"
-            )
-        cands = interval_overlap_pairs(
-            rec,
-            id_col,
-            spec.interval_start,
-            spec.interval_end,
-            granule_s=spec.interval_granule_s,
-            max_granules=spec.interval_max_granules,
-            block_cols=tuple(bf.name for bf in spec.block_fields),
-        ).select("id_l", "id_r")
-        side = rec.select(F.col(id_col), *carry_sup)
-        pairs = (
-            cands.join(
-                side.toDF(*(["id_l"] + [f"rec_{c}" for c in carry_sup])), "id_l"
-            )
-            .join(
-                side.toDF(*(["id_r"] + [f"mem_{c}" for c in carry_sup])), "id_r"
-            )
-            .withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
-        )
-    elif spec.kind == "meta":
-        from bigmatch_utilities_spark.operators.meta_blocking import (
-            meta_block_pairs,
-            wnp_pairs,
-        )
-
-        if not dedupe or mem is not rec:
-            raise ValueError(
-                "kind='meta' is a single-file (dedupe) pass; merge two "
-                "files into one frame before a dedupe run"
-            )
-        # candidates come from the CBS-weighted multi-key block graph
-        # (id_l < id_r canonical, size-guarded, WEP/WNP pruned); carried
-        # match-field values join on from the source, same shape as the
-        # lsh/pprl/qgram canopy passes
-        prune_fn = meta_block_pairs if spec.meta_prune == "wep" else wnp_pairs
-        cands = prune_fn(
-            rec,
-            id_col,
-            dict(spec.meta_keys),
-            max_block_rows=spec.meta_max_block_rows,
-        ).select("id_l", "id_r")
-        side = rec.select(F.col(id_col), *carry_sup)
-        pairs = (
-            cands.join(
-                side.toDF(*(["id_l"] + [f"rec_{c}" for c in carry_sup])), "id_l"
-            )
-            .join(
-                side.toDF(*(["id_r"] + [f"mem_{c}" for c in carry_sup])), "id_r"
-            )
-            .withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
-        )
-    elif spec.kind == "canopy":
-        from bigmatch_utilities_spark.operators.meta_blocking import (
-            rarest_token_canopy_pairs,
-        )
-
-        if not dedupe or mem is not rec:
-            raise ValueError(
-                "kind='canopy' is a single-file (dedupe) pass; merge two "
-                "files into one frame before a dedupe run"
-            )
-        # candidates share a rarest-token canopy (disjoint partition of
-        # the records, pair budget bounded by canopy_purge_above); carried
-        # match-field values join on from the source, same shape as the
-        # lsh/pprl/qgram canopy passes
-        cands = rarest_token_canopy_pairs(
-            rec,
-            id_col,
-            spec.canopy_field,
-            purge_above=spec.canopy_purge_above,
-        ).select("id_l", "id_r")
-        side = rec.select(F.col(id_col), *carry_sup)
-        pairs = (
-            cands.join(
-                side.toDF(*(["id_l"] + [f"rec_{c}" for c in carry_sup])), "id_l"
-            )
-            .join(
-                side.toDF(*(["id_r"] + [f"mem_{c}" for c in carry_sup])), "id_r"
-            )
-            .withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
-        )
-    elif spec.kind in ("qgram", "suffix"):
-        from bigmatch_utilities_spark.operators.meta_blocking import (
-            qgram_block_pairs,
-            suffix_block_pairs,
-        )
-
-        if not dedupe or mem is not rec:
-            raise ValueError(
-                f"kind={spec.kind!r} is a single-file (dedupe) pass; merge "
-                "two files into one frame before a dedupe run"
-            )
-        # candidates come from shared kept q-gram / suffix blocks (id_l <
-        # id_r canonical, purge + per-record smallest-blocks filter bounds
-        # the pair budget); carried match-field values join on from the
-        # source, same shape as the lsh/pprl canopy passes
-        if spec.kind == "qgram":
-            cands = qgram_block_pairs(
-                rec,
-                id_col,
-                spec.qgram_field,
-                n=spec.qgram_n,
-                ratio=spec.qgram_ratio,
-                purge_above=spec.qgram_purge_above,
-            ).select("id_l", "id_r")
-        else:
-            cands = suffix_block_pairs(
-                rec,
-                id_col,
-                spec.suffix_field,
-                min_len=spec.suffix_min_len,
-                ratio=spec.suffix_ratio,
-                purge_above=spec.suffix_purge_above,
-            ).select("id_l", "id_r")
-        side = rec.select(F.col(id_col), *carry_sup)
-        pairs = (
-            cands.join(
-                side.toDF(*(["id_l"] + [f"rec_{c}" for c in carry_sup])), "id_l"
-            )
-            .join(
-                side.toDF(*(["id_r"] + [f"mem_{c}" for c in carry_sup])), "id_r"
-            )
-            .withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
+            rec, mem, spec, id_col, dedupe=dedupe,
+            carry_rec=carry_sup, carry_mem=carry_sup,
         )
     else:
-        pairs = candidate_pairs(
-            rec,
-            mem,
-            spec,
-            id_col,
-            dedupe=dedupe,
-            broadcast_mem=broadcast_mem,
-            salt=salt,
-            shard_rows=shard_rows,
-            max_block_rows=max_block_rows,
-            carry_rec=carry_sup,
-            carry_mem=carry_sup,
+        if not dedupe or mem is not rec:
+            raise ValueError(
+                f"a {blocker.kind!r} pass is a single-file (dedupe) pass; "
+                "merge two files into one frame before a dedupe run"
+            )
+        cands = blocker.pairs(
+            rec, id_col, block_fields=spec.block_fields, shard_rows=shard_rows
         )
+        pairs = attach_carry(cands, rec, id_col, carry_sup)
     # Suppress pairs an earlier exact pass already decided (spec.suppress_equal)
     # BEFORE any comparator UDF runs — the filter is a JVM predicate on the
     # join output, so redundant mega-block echoes never reach Python.

@@ -147,7 +147,7 @@ def snm_candidate_pairs(
 ) -> DataFrame:
     """SNM as a blocking PASS: same output contract as
     blocking.candidate_pairs — (id_rec, id_mem, rec_<f>, mem_<f>) — so a
-    ``BlockingPassSpec(kind="snm")`` drops into the multi-pass pipeline
+    ``BlockingPassSpec(blocker=Snm(...))`` drops into the multi-pass pipeline
     (scoring, cutoffs, first-pass-wins) unchanged.
 
     The spec's block_fields become the SORT key (derived kinds — soundex,
@@ -168,7 +168,7 @@ def snm_candidate_pairs(
         derive_block_keys,
     )
 
-    window = spec.snm_window
+    window = spec.blocker.window
     same = mem is None or mem is rec
     if same and not dedupe:
         raise ValueError("single-input SNM pass requires dedupe=True")

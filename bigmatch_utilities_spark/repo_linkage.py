@@ -26,6 +26,8 @@ already-blocked candidate pairs.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,6 +35,7 @@ from bigmatch_utilities_spark.config import (
     BlockField,
     BlockingPassSpec,
     CutoffSpec,
+    Equi,
     MatchConfig,
     FieldRef,
     MatchField,
@@ -42,10 +45,12 @@ from bigmatch_utilities_spark.operators.dedup import minhash_candidates
 from bigmatch_utilities_spark.operators.pipeline import (
     MatchResult,
     accept_at,
+    attach_carry,
     first_pass_wins,
     match_pairs,
-    score_pass,
+    pass_candidates,
 )
+from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
 
 ID_COL = "record_id"
 
@@ -122,14 +127,14 @@ def repo_match_config(accept_threshold: float = 4.0) -> MatchConfig:
                 # 10^4+ repos) makes one hash block quadratic; the hash key
                 # determines the match, so the min-id star is
                 # closure-equivalent at O(n) cost.
-                star_block_rows=64,
+                blocker=Equi(star_block_rows=64),
             ),
             BlockingPassSpec(  # pass 1: whitespace/comment-normalized exact
                 block_fields=(BlockField(name="content_sha_nows"),),
                 match_fields=_HASH_PASS_FIELDS,
                 cutoff=CutoffSpec(hi=4.0, lo=0.0),
                 print_cutoff=CutoffSpec(hi=4.0, lo=0.0),
-                star_block_rows=64,
+                blocker=Equi(star_block_rows=64),
                 # sha-equal pairs are exactly pass 0's pairs
                 suppress_equal=("content_sha",),
             ),
@@ -154,10 +159,10 @@ def repo_match_config(accept_threshold: float = 4.0) -> MatchConfig:
 
 def with_tf_adjust(cfg: MatchConfig, names: tuple[str, ...]) -> MatchConfig:
     """Flip ``tf_adjust`` on every match field named in ``names`` across all
-    passes (jobs/run_match --tf-adjust). Naming a non-exact-comparator
-    field raises MatchField's own validation error — loud, not silent."""
-    from dataclasses import replace
-
+    passes of ``cfg`` (jobs/run_match --tf-adjust). Naming a non-exact-
+    comparator field raises MatchField's own validation error — loud, not
+    silent. run_repo_linkage's MinHash pass 3 is not part of ``cfg``: it
+    always scores with the plain fuzzy fields."""
     return replace(
         cfg,
         passes=tuple(
@@ -170,6 +175,43 @@ def with_tf_adjust(cfg: MatchConfig, names: tuple[str, ...]) -> MatchConfig:
             )
             for p in cfg.passes
         ),
+    )
+
+
+def _canopy(src, max_bucket, shard_rows, cache_handle) -> DataFrame:
+    """Pass 3's MinHash-LSH candidates over ``content_norm``. b=4 x r=4
+    (same 16 hashes as 8x2, sharply lower false-candidate rate: P(collide)
+    at J=0.3 is 4*0.3^16-ish vs 8*0.3^2 — the candidate volume, and with
+    it the whole pass-3 cost, drops an order of magnitude while true
+    near-dups at J>=0.85 still collide with P >= 0.93)."""
+    return minhash_candidates(
+        src, "content_norm", ID_COL, shingle_k=3, bands=4, rows_per_band=4,
+        max_bucket=max_bucket, shard_rows=shard_rows, cache_handle=cache_handle,
+    )
+
+
+def _scored_canopy(cands, src, carry, pass_id) -> DataFrame:
+    """Pass 3's candidates with ``carry`` attached from ``src``, minus the
+    pairs an exact pass already decided (content_sha_nows-equal, see the
+    pass-2 note), weighted with the fuzzy fields and decided at 4.0.
+    Composed here rather than declared as an ``Lsh`` pass of the config: score_pass's emission
+    floor filter is pushed below its weight projection, so through it this
+    pass would evaluate the Jaro-Winkler UDF twice."""
+    pairs3 = attach_carry(cands, src, ID_COL, [*carry, "content_sha_nows"])
+    return (
+        pairs3.filter(
+            F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
+        )
+        .drop("rec_content_sha_nows", "mem_content_sha_nows")
+        .withColumn("weight", pair_weight(_FUZZY_FIELDS))
+        .withColumn("is_exact", is_exact(_FUZZY_FIELDS))
+        .withColumn("pass_id", F.lit(pass_id))
+        .withColumn(
+            "decision",
+            F.when(F.col("weight") >= 4.0, F.lit("match")).otherwise(
+                F.lit("possible")
+            ),
+        )
     )
 
 
@@ -240,62 +282,13 @@ def run_repo_linkage(
     if not use_minhash_pass:
         return MatchResult.from_pairs(pairs, accept_at(cfg.accept_threshold))
 
-    # pass 3: MinHash-LSH canopy scored with the fuzzy fields.
-    lsh_fields = _FUZZY_FIELDS
-    if tf_adjust_fields:
-        from dataclasses import replace as _replace
-
-        lsh_fields = tuple(
-            _replace(mf, tf_adjust=True) if mf.name in tf_adjust_fields else mf
-            for mf in _FUZZY_FIELDS
-        )
-    lsh_pass = BlockingPassSpec(
-        block_fields=(BlockField(name="lang"),),  # formal; join comes from LSH
-        match_fields=lsh_fields,
-        cutoff=CutoffSpec(hi=4.0, lo=-100.0),
-        print_cutoff=CutoffSpec(hi=4.0, lo=-100.0),
-    )
-    # b=4 x r=4 (same 16 hashes as 8x2, sharply lower false-candidate rate:
-    # P(collide) at J=0.3 is 4*0.3^16-ish vs 8*0.3^2 — the candidate volume,
-    # and with it the whole pass-3 cost, drops an order of magnitude while
-    # true near-dups at J>=0.85 still collide with P >= 0.93).
-    cands = minhash_candidates(
-        prepared,
-        "content_norm",
-        ID_COL,
-        shingle_k=3,
-        bands=4,
-        rows_per_band=4,
-        max_bucket=minhash_max_bucket,
-        shard_rows=shard_rows,
-        cache_handle=cache_handle,
-    )
+    # pass 3: MinHash-LSH canopy scored with the plain fuzzy fields
     carry = [mf.name for mf in _FUZZY_FIELDS]
     for mf in gamma_fields or ():
         if mf.name not in carry:
             carry.append(mf.name)
-    carry = carry + ["content_sha_nows"]
-    side = prepared.select(F.col(ID_COL), *carry)
-    pairs3 = cands.join(
-        side.toDF(*["id_l"] + [f"rec_{c}" for c in carry]), "id_l"
-    ).join(side.toDF(*["id_r"] + [f"mem_{c}" for c in carry]), "id_r")
-    # suppress pairs already decided by the exact passes (see pass-2 note)
-    pairs3 = pairs3.filter(
-        F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
-    ).drop("rec_content_sha_nows", "mem_content_sha_nows")
-    from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
-
-    scored3 = (
-        pairs3.withColumnRenamed("id_l", "id_rec")
-        .withColumnRenamed("id_r", "id_mem")
-        .withColumn("weight", pair_weight(_FUZZY_FIELDS))
-        .withColumn("is_exact", is_exact(_FUZZY_FIELDS))
-        .withColumn("pass_id", F.lit(len(cfg.passes)))
-        .withColumn(
-            "decision",
-            F.when(F.col("weight") >= 4.0, F.lit("match")).otherwise(F.lit("possible")),
-        )
-    )
+    cands = _canopy(prepared, minhash_max_bucket, shard_rows, cache_handle)
+    scored3 = _scored_canopy(cands, prepared, carry, len(cfg.passes))
     gcols = []
     if gamma_fields:
         from bigmatch_utilities_spark.operators.em import gamma_column
@@ -370,8 +363,6 @@ def run_repo_linkage_delta(
     delta's blocking-key values when the standing side is Iceberg
     (runtime filter / DPP on the partition keys lang, bucket(repo)).
     """
-    from dataclasses import replace as _replace
-
     prep_d = prepare(delta)
     prep_s = prepare(standing)
     if transform is not None:
@@ -385,10 +376,10 @@ def run_repo_linkage_delta(
     # passes join delta x standing directly — per delta row the fan-out is
     # the standing block size, bounded by max_block_rows (linear, not
     # quadratic, in the standing side)
-    cfg_link = _replace(
+    cfg_link = replace(
         cfg,
         dedupe_single_file=False,
-        passes=tuple(_replace(p, star_block_rows=None) for p in cfg.passes),
+        passes=tuple(replace(p, blocker=Equi()) for p in cfg.passes),
     )
 
     dd = match_pairs(
@@ -412,17 +403,7 @@ def run_repo_linkage_delta(
 
     if use_minhash_pass:
         prep_all = prep_s.unionByName(prep_d)
-        cands = minhash_candidates(
-            prep_all,
-            "content_norm",
-            ID_COL,
-            shingle_k=3,
-            bands=4,
-            rows_per_band=4,
-            max_bucket=minhash_max_bucket,
-            shard_rows=shard_rows,
-            cache_handle=cache_handle,
-        )
+        cands = _canopy(prep_all, minhash_max_bucket, shard_rows, cache_handle)
         # delta-touching only, via two map-only broadcast joins on the
         # delta id set (old-old canopies belong to the batch path)
         d_ids = prep_d.select(F.col(ID_COL).alias("_did"))
@@ -433,31 +414,9 @@ def run_repo_linkage_delta(
             F.broadcast(d_ids), cands["id_l"] == F.col("_did"), "left_anti"
         ).join(F.broadcast(d_ids), cands["id_r"] == F.col("_did"), "left_semi")
         cands = left_hit.unionByName(right_only)
-
-        carry = [mf.name for mf in _FUZZY_FIELDS] + ["content_sha_nows"]
-        side = prep_all.select(F.col(ID_COL), *carry)
-        pairs3 = cands.join(
-            side.toDF(*["id_l"] + [f"rec_{c}" for c in carry]), "id_l"
-        ).join(side.toDF(*["id_r"] + [f"mem_{c}" for c in carry]), "id_r")
-        pairs3 = pairs3.filter(
-            F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
-        ).drop("rec_content_sha_nows", "mem_content_sha_nows")
-        from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
-
-        scored3 = (
-            pairs3.withColumnRenamed("id_l", "id_rec")
-            .withColumnRenamed("id_r", "id_mem")
-            .withColumn("weight", pair_weight(_FUZZY_FIELDS))
-            .withColumn("is_exact", is_exact(_FUZZY_FIELDS))
-            .withColumn("pass_id", F.lit(len(cfg.passes)))
-            .filter(F.col("weight") >= F.lit(-100.0))
-            .withColumn(
-                "decision",
-                F.when(F.col("weight") >= 4.0, F.lit("match")).otherwise(
-                    F.lit("possible")
-                ),
-            )
-        )
+        carry = [mf.name for mf in _FUZZY_FIELDS]
+        scored3 = _scored_canopy(cands, prep_all, carry, len(cfg.passes))
+        scored3 = scored3.filter(F.col("weight") >= F.lit(-100.0))
         core = core.unionByName(scored3.select(*core_cols))
 
     combined = first_pass_wins(core)
@@ -476,8 +435,6 @@ def count_candidates(
     Counts run on the same candidate plans `run_repo_linkage` scores (post
     blank/suppress filtering), but without the scoring UDFs, so the count
     job is cheap relative to the pipeline it calibrates."""
-    from bigmatch_utilities_spark.operators.pipeline import pass_candidates
-
     prepared = prepare(df)
     cfg = repo_match_config()
     total = 0
@@ -492,22 +449,11 @@ def count_candidates(
         ).count()
     if use_minhash_pass:
         caches: list = []
-        cands = minhash_candidates(
-            prepared,
-            "content_norm",
-            ID_COL,
-            shingle_k=3,
-            bands=4,
-            rows_per_band=4,
-            max_bucket=minhash_max_bucket,
-            shard_rows=None,
-            cache_handle=caches,
-        )
-        side = prepared.select(F.col(ID_COL), "content_sha_nows")
-        pairs3 = cands.join(
-            side.toDF("id_l", "sha_l"), "id_l"
-        ).join(side.toDF("id_r", "sha_r"), "id_r")
-        total += pairs3.filter(F.col("sha_l") != F.col("sha_r")).count()
+        cands = _canopy(prepared, minhash_max_bucket, None, caches)
+        pairs3 = attach_carry(cands, prepared, ID_COL, ["content_sha_nows"])
+        total += pairs3.filter(
+            F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
+        ).count()
         for c in caches:
             c.unpersist()
     return total

@@ -320,3 +320,27 @@ def test_greedy_capacitated_cap_one_equals_greedy_one_to_one(spark):
         for r in greedy_one_to_one(df, rounds=4).collect()
     )
     assert a == b
+
+
+def test_greedy_capacitated_leaves_join_strategy_to_the_planner(spark):
+    """The per-node capacity tables are node-scale, so no join may force a
+    broadcast: with auto-broadcast off, the executed plan has none."""
+    from bigmatch_utilities_spark.operators.assignment import (
+        greedy_capacitated,
+    )
+
+    edges = [
+        (1, 10, 9.0), (2, 10, 8.0), (2, 11, 7.5), (3, 11, 7.0), (3, 12, 6.0),
+    ]
+    df = spark.createDataFrame(edges, "id_rec long, id_mem long, weight double")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = greedy_capacitated(df, 1, 2, rounds=3)
+        got = sorted((r.id_rec, r.id_mem) for r in out.collect())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert got == _sequential_bmatch(edges, 1, 2)
+    assert "BroadcastExchange" not in plan

@@ -224,7 +224,7 @@ def test_near_dedup_keep_end_to_end(spark):
 
 
 def test_lsh_pass_kind_config(spark):
-    """kind='lsh': the MinHash canopy declared as a config pass — candidates
+    """An Lsh blocker: the MinHash canopy declared as a config pass — candidates
     match minhash_candidates with the same params, scored/decided like any
     pass; two-file mode and bad params refuse loudly."""
     import pytest
@@ -234,6 +234,7 @@ def test_lsh_pass_kind_config(spark):
         BlockingPassSpec,
         CutoffSpec,
         FieldRef,
+        Lsh,
         MatchConfig,
         MatchField,
     )
@@ -249,8 +250,8 @@ def test_lsh_pass_kind_config(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text", "src"])
     cut = CutoffSpec(hi=2.0, lo=-50.0)
     spec = BlockingPassSpec(
-        kind="lsh", lsh_field="text", lsh_bands=2, lsh_rows_per_band=2,
-        lsh_max_bucket=None, block_fields=(),
+        blocker=Lsh(field="text", bands=2, rows_per_band=2, max_bucket=None),
+        block_fields=(),
         match_fields=(MatchField(name="src", comparator="c", m=0.9, u=0.1),),
         cutoff=cut, print_cutoff=cut,
     )
@@ -276,8 +277,7 @@ def test_lsh_pass_kind_config(spark):
             id_col="doc_id", persist=False,
         ).pairs.collect()
 
-    with pytest.raises(ValueError, match="lsh_field"):
-        BlockingPassSpec(
-            kind="lsh", block_fields=(), match_fields=(), cutoff=cut,
-            print_cutoff=cut,
-        )
+    with pytest.raises(TypeError, match="field"):
+        Lsh()
+    with pytest.raises(ValueError, match="needs a field"):
+        Lsh(field="")

@@ -284,7 +284,7 @@ def test_suffix_blocking_sql_parity(spark, tmp_path):
 
 
 def test_qgram_pass_kind_through_run_match(spark):
-    """kind='qgram' routes pass_candidates through qgram_block_pairs and
+    """A QGram blocker routes pass_candidates through qgram_block_pairs and
     feeds the standard FS scoring path — a typo'd key field still links."""
     from bigmatch_utilities_spark.config import (
         BlockingPassSpec,
@@ -292,6 +292,7 @@ def test_qgram_pass_kind_through_run_match(spark):
         FieldRef,
         MatchConfig,
         MatchField,
+        QGram,
     )
     from bigmatch_utilities_spark.operators.meta_blocking import qgram_block_pairs
     from bigmatch_utilities_spark.operators.pipeline import run_match
@@ -309,10 +310,7 @@ def test_qgram_pass_kind_through_run_match(spark):
     cfg = MatchConfig(
         passes=(
             BlockingPassSpec(
-                kind="qgram",
-                qgram_field="name",
-                qgram_n=4,
-                qgram_ratio=1.0,
+                blocker=QGram(field="name", n=4, ratio=1.0),
                 block_fields=(),
                 match_fields=(
                     MatchField(name="name", comparator="e", m=0.9, u=0.1),
@@ -336,13 +334,14 @@ def test_qgram_pass_kind_through_run_match(spark):
 
 
 def test_suffix_pass_kind_through_run_match(spark):
-    """kind='suffix' links records whose key diverges at the PREFIX."""
+    """A Suffix blocker links records whose key diverges at the PREFIX."""
     from bigmatch_utilities_spark.config import (
         BlockingPassSpec,
         CutoffSpec,
         FieldRef,
         MatchConfig,
         MatchField,
+        Suffix,
     )
     from bigmatch_utilities_spark.operators.pipeline import run_match
 
@@ -358,10 +357,7 @@ def test_suffix_pass_kind_through_run_match(spark):
     cfg = MatchConfig(
         passes=(
             BlockingPassSpec(
-                kind="suffix",
-                suffix_field="name",
-                suffix_min_len=8,
-                suffix_ratio=1.0,
+                blocker=Suffix(field="name", min_len=8, ratio=1.0),
                 block_fields=(),
                 match_fields=(
                     MatchField(name="name", comparator="e", m=0.9, u=0.1),
@@ -386,27 +382,23 @@ def test_qgram_suffix_pass_validation_and_parmf_refusal():
         FieldRef,
         MatchConfig,
         MatchField,
+        QGram,
+        Suffix,
         write_parmf,
     )
 
-    with _pytest.raises(ValueError, match="qgram_field"):
-        BlockingPassSpec(block_fields=(), match_fields=(), kind="qgram")
-    with _pytest.raises(ValueError, match="qgram_n"):
-        BlockingPassSpec(
-            block_fields=(), match_fields=(), kind="qgram",
-            qgram_field="x", qgram_n=1,
-        )
-    with _pytest.raises(ValueError, match="suffix_field"):
-        BlockingPassSpec(block_fields=(), match_fields=(), kind="suffix")
-    with _pytest.raises(ValueError, match="suffix_ratio"):
-        BlockingPassSpec(
-            block_fields=(), match_fields=(), kind="suffix",
-            suffix_field="x", suffix_ratio=0.0,
-        )
+    with _pytest.raises(TypeError, match="field"):
+        QGram()
+    with _pytest.raises(ValueError, match="qgram n"):
+        QGram(field="x", n=1)
+    with _pytest.raises(TypeError, match="field"):
+        Suffix()
+    with _pytest.raises(ValueError, match="suffix ratio"):
+        Suffix(field="x", ratio=0.0)
     cfg = MatchConfig(
         passes=(
             BlockingPassSpec(
-                block_fields=(), kind="qgram", qgram_field="name",
+                block_fields=(), blocker=QGram(field="name"),
                 match_fields=(MatchField(name="name", comparator="c", m=0.9, u=0.1),),
             ),
         ),
@@ -418,7 +410,7 @@ def test_qgram_suffix_pass_validation_and_parmf_refusal():
 
 
 def test_meta_pass_kind_through_run_match(spark):
-    """kind='meta' routes pass_candidates through the CBS multi-key block
+    """A Meta blocker routes pass_candidates through the CBS multi-key block
     graph (WEP or WNP prune) and feeds the standard FS scoring path — a
     pair co-proposed by two independent keys outranks one-key noise."""
     from bigmatch_utilities_spark.config import (
@@ -427,6 +419,7 @@ def test_meta_pass_kind_through_run_match(spark):
         FieldRef,
         MatchConfig,
         MatchField,
+        Meta,
     )
     from bigmatch_utilities_spark.operators.meta_blocking import (
         meta_block_pairs,
@@ -451,9 +444,7 @@ def test_meta_pass_kind_through_run_match(spark):
         return MatchConfig(
             passes=(
                 BlockingPassSpec(
-                    kind="meta",
-                    meta_keys=keys,
-                    meta_prune=prune,
+                    blocker=Meta(keys=keys, prune=prune),
                     block_fields=(),
                     match_fields=(
                         MatchField(name="src", comparator="c", m=0.9, u=0.1),
@@ -490,20 +481,20 @@ def test_meta_pass_validation_and_parmf_refusal():
         FieldRef,
         MatchConfig,
         MatchField,
+        Meta,
         write_parmf,
     )
 
-    with _pytest.raises(ValueError, match="meta_keys"):
-        BlockingPassSpec(block_fields=(), match_fields=(), kind="meta")
-    with _pytest.raises(ValueError, match="meta_prune"):
-        BlockingPassSpec(
-            block_fields=(), match_fields=(), kind="meta",
-            meta_keys=(("k", "k"),), meta_prune="nope",
-        )
+    with _pytest.raises(TypeError, match="keys"):
+        Meta()
+    with _pytest.raises(ValueError, match="needs keys"):
+        Meta(keys=())
+    with _pytest.raises(ValueError, match="meta prune"):
+        Meta(keys=(("k", "k"),), prune="nope")
     cfg = MatchConfig(
         passes=(
             BlockingPassSpec(
-                block_fields=(), kind="meta", meta_keys=(("k", "name"),),
+                block_fields=(), blocker=Meta(keys=(("k", "name"),)),
                 match_fields=(MatchField(name="name", comparator="c", m=0.9, u=0.1),),
             ),
         ),
@@ -572,11 +563,12 @@ def test_rare_canopy_parity(spark, tmp_path):
 
 
 def test_canopy_pass_kind(spark):
-    """kind='canopy' runs inside run_match: canopy pairs are scored, and
+    """A Canopy blocker runs inside run_match: canopy pairs are scored, and
     first-pass-wins dedup keeps pass-0 ownership of shared pairs."""
     from bigmatch_utilities_spark.config import (
         BlockField,
         BlockingPassSpec,
+        Canopy,
         CutoffSpec,
         FieldRef,
         MatchConfig,
@@ -609,9 +601,7 @@ def test_canopy_pass_kind(spark):
                 match_fields=fields,
                 cutoff=cut,
                 print_cutoff=cut,
-                kind="canopy",
-                canopy_field="name",
-                canopy_purge_above=3,
+                blocker=Canopy(field="name", purge_above=3),
             ),
         ),
         id_field=FieldRef(name="id"),
@@ -630,14 +620,17 @@ def test_canopy_pass_kind(spark):
 def test_canopy_pass_requires_field():
     from bigmatch_utilities_spark.config import (
         BlockingPassSpec,
+        Canopy,
         MatchField,
     )
 
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="canopy_field"):
+    with _pytest.raises(TypeError, match="field"):
+        Canopy()
+    with _pytest.raises(ValueError, match="needs a field"):
         BlockingPassSpec(
             block_fields=(),
             match_fields=(MatchField(name="x", comparator="c", m=0.9, u=0.1),),
-            kind="canopy",
+            blocker=Canopy(field=""),
         )

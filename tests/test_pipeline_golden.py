@@ -214,7 +214,6 @@ def test_scored_pass_with_edit_comparator(spark):
         match_fields=(MatchField(name="surname", comparator="e", m=0.9, u=0.05),),
         cutoff=CutoffSpec(hi=3.0, lo=-100.0),
         print_cutoff=CutoffSpec(hi=3.0, lo=-100.0),
-        star_block_rows=None,
     )
     out = {
         (r["id_rec"], r["id_mem"]): r["weight"]
@@ -290,6 +289,7 @@ def test_write_parmf_refuses_extensions():
         MatchConfig,
         MatchField,
         MatchFieldPair,
+        Snm,
         write_parmf,
     )
 
@@ -298,7 +298,7 @@ def test_write_parmf_refuses_extensions():
         match_fields=(MatchField(name="k"),),
     )
     snm_cfg = MatchConfig(
-        passes=(BlockingPassSpec(kind="snm", **base),),
+        passes=(BlockingPassSpec(blocker=Snm(), **base),),
         id_field=FieldRef(name="rid"),
     )
     pair_cfg = MatchConfig(

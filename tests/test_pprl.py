@@ -219,7 +219,7 @@ def test_bloom_band_sql_parity(spark, tmp_path):
 
 
 def test_pprl_pass_kind_contract(spark):
-    """kind='pprl' routes pass candidates through bloom_band_pairs and the
+    """A Pprl blocker routes pass candidates through bloom_band_pairs and the
     standard scoring: the scored pair set equals the band candidates."""
     from bigmatch_utilities_spark.config import (
         BlockingPassSpec,
@@ -227,6 +227,7 @@ def test_pprl_pass_kind_contract(spark):
         FieldRef,
         MatchConfig,
         MatchField,
+        Pprl,
     )
     from bigmatch_utilities_spark.functions.pprl import bloom_band_pairs
     from bigmatch_utilities_spark.operators.pipeline import run_match
@@ -245,12 +246,7 @@ def test_pprl_pass_kind_contract(spark):
     cfg = MatchConfig(
         passes=(
             BlockingPassSpec(
-                kind="pprl",
-                pprl_field="name",
-                pprl_bits=kw["bits"],
-                pprl_k=kw["k"],
-                pprl_bands=kw["bands"],
-                pprl_band_bits=kw["band_bits"],
+                blocker=Pprl(field="name", **kw),
                 block_fields=(),
                 match_fields=(
                     MatchField(name="name", comparator="b", m=0.9, u=0.1),
@@ -277,14 +273,13 @@ def test_pprl_pass_kind_contract(spark):
 
 
 def test_pprl_pass_kind_validation():
-    from bigmatch_utilities_spark.config import BlockingPassSpec
+    from bigmatch_utilities_spark.config import Pprl
 
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="pprl_field"):
-        BlockingPassSpec(block_fields=(), match_fields=(), kind="pprl")
-    with _pytest.raises(ValueError, match="pprl_bands"):
-        BlockingPassSpec(
-            block_fields=(), match_fields=(), kind="pprl",
-            pprl_field="x", pprl_bands=0,
-        )
+    with _pytest.raises(TypeError, match="field"):
+        Pprl()
+    with _pytest.raises(ValueError, match="needs a field"):
+        Pprl(field="")
+    with _pytest.raises(ValueError, match="pprl bands"):
+        Pprl(field="x", bands=0)

@@ -259,12 +259,13 @@ def test_sign_bucket_deterministic(spark):
 
 
 # ---------------------------------------------------------------------------
-# kind="ann" declarable pass
+# Ann declarable pass
 # ---------------------------------------------------------------------------
 
 
 def _ann_cfg(**ann_kw):
     from bigmatch_utilities_spark.config import (
+        Ann,
         BlockingPassSpec,
         CutoffSpec,
         FieldRef,
@@ -276,14 +277,13 @@ def _ann_cfg(**ann_kw):
     return MatchConfig(
         passes=(
             BlockingPassSpec(
-                kind="ann",
+                blocker=Ann(**ann_kw),
                 block_fields=(),
                 match_fields=(
                     MatchField(name="name", comparator="c", m=0.9, u=0.1),
                 ),
                 cutoff=cut,
                 print_cutoff=cut,
-                **ann_kw,
             ),
         ),
         id_field=FieldRef(name="rid"),
@@ -294,14 +294,18 @@ def _ann_cfg(**ann_kw):
 def test_ann_pass_kind_validation():
     import pytest as _pt
 
-    from bigmatch_utilities_spark.config import BlockingPassSpec
+    from bigmatch_utilities_spark.config import Ann, BlockingPassSpec
 
-    with _pt.raises(ValueError, match="ann_field"):
-        _ann_cfg(ann_field=None)
+    with _pt.raises(TypeError, match="field"):
+        _ann_cfg()
+    with _pt.raises(ValueError, match="needs a field"):
+        _ann_cfg(field=None)
     with _pt.raises(ValueError, match=">= 1"):
-        _ann_cfg(ann_field="embedding", ann_bands=0)
-    with _pt.raises(ValueError, match="unknown pass kind"):
+        _ann_cfg(field="embedding", bands=0)
+    with _pt.raises(TypeError, match="kind"):
         BlockingPassSpec(kind="vector", block_fields=(), match_fields=())
+    with _pt.raises(TypeError, match="lsh_bands"):
+        Ann(field="embedding", lsh_bands=2)
 
 
 def test_ann_pass_blocks_semantic_neighbors_without_lexical_overlap(spark):
@@ -323,8 +327,8 @@ def test_ann_pass_blocks_semantic_neighbors_without_lexical_overlap(spark):
         "rid long, name string, embedding array<double>",
     )
     cfg = _ann_cfg(
-        ann_field="embedding", ann_dim=8, ann_bands=4, ann_bits=2,
-        ann_threshold=0.9, ann_max_bucket=None,
+        field="embedding", dim=8, bands=4, bits=2, threshold=0.9,
+        max_bucket=None,
     )
     res = run_match(df, None, cfg, id_col="rid", persist=False)
     got = {(r.id_rec, r.id_mem): r.decision for r in res.pairs.collect()}
@@ -339,6 +343,6 @@ def test_ann_pass_requires_dedupe_mode(spark):
         [(1, "a", [1.0, 0.0])], "rid long, name string, embedding array<double>"
     )
     other = df.withColumn("rid", F.col("rid") + 10)
-    spec = _ann_cfg(ann_field="embedding", ann_dim=2).passes[0]
+    spec = _ann_cfg(field="embedding", dim=2).passes[0]
     with pytest.raises(ValueError, match="single-file"):
         pass_candidates(df, other, spec, "rid", dedupe=False)

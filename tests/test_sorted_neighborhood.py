@@ -132,12 +132,13 @@ def test_oracle_parity_with_null_keys(spark, tmp_path):
     assert got == want
 
 
-def _spec(window=3, fields=("name",), kind="snm"):
+def _spec(window=3, fields=("name",)):
     from bigmatch_utilities_spark.config import (
         BlockField,
         BlockingPassSpec,
         CutoffSpec,
         MatchField,
+        Snm,
     )
 
     return BlockingPassSpec(
@@ -145,13 +146,12 @@ def _spec(window=3, fields=("name",), kind="snm"):
         match_fields=(MatchField(name="name", comparator="c", m=0.9, u=0.1),),
         cutoff=CutoffSpec(hi=2.0, lo=-50.0),
         print_cutoff=CutoffSpec(hi=2.0, lo=-50.0),
-        kind=kind,
-        snm_window=window,
+        blocker=Snm(window=window),
     )
 
 
 def test_snm_candidate_pairs_contract_dedupe(spark):
-    """kind='snm' self pass: candidate_pairs output contract, id canon,
+    """Snm self pass: candidate_pairs output contract, id canon,
     carried values follow their ids."""
     from bigmatch_utilities_spark.operators.sorted_neighborhood import (
         snm_candidate_pairs,
@@ -204,6 +204,7 @@ def test_snm_pass_in_run_match(spark):
         FieldRef,
         MatchConfig,
         MatchField,
+        Snm,
     )
     from bigmatch_utilities_spark.operators.pipeline import run_match
 
@@ -225,7 +226,7 @@ def test_snm_pass_in_run_match(spark):
             BlockingPassSpec(
                 block_fields=(BlockField(name="surname"),),
                 match_fields=mf, cutoff=cut, print_cutoff=cut,
-                kind="snm", snm_window=3,
+                blocker=Snm(window=3),
             ),
         ),
         id_field=FieldRef(name="rid"),
@@ -245,16 +246,16 @@ def test_snm_config_validation():
         BlockField,
         BlockingPassSpec,
         MatchField,
+        Snm,
     )
 
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="window"):
         BlockingPassSpec(
             block_fields=(BlockField(name="k"),),
             match_fields=(MatchField(name="k"),),
-            kind="snm",
-            snm_window=1,
+            blocker=Snm(window=1),
         )
-    with pytest.raises(ValueError):
+    with pytest.raises(TypeError, match="kind"):
         BlockingPassSpec(
             block_fields=(BlockField(name="k"),),
             match_fields=(MatchField(name="k"),),

@@ -233,13 +233,14 @@ def test_temporal_plans_have_no_nested_loop(spark):
 
 
 def test_interval_pass_kind_through_run_match(spark):
-    """kind='interval' routes pass_candidates through interval_overlap_pairs
+    """An Interval blocker routes pass_candidates through interval_overlap_pairs
     (block_fields as exact co-block keys) and feeds the standard FS path."""
     from bigmatch_utilities_spark.config import (
         BlockField,
         BlockingPassSpec,
         CutoffSpec,
         FieldRef,
+        Interval,
         MatchConfig,
         MatchField,
     )
@@ -261,11 +262,9 @@ def test_interval_pass_kind_through_run_match(spark):
     cfg = MatchConfig(
         passes=(
             BlockingPassSpec(
-                kind="interval",
-                interval_start="s",
-                interval_end="e",
-                interval_granule_s=3600,
-                interval_max_granules=8,
+                blocker=Interval(
+                    start="s", end="e", granule_s=3600, max_granules=8
+                ),
                 block_fields=(BlockField(name="k"),),
                 match_fields=(
                     MatchField(name="name", comparator="c", m=0.9, u=0.1),
@@ -293,23 +292,22 @@ def test_interval_pass_validation_and_parmf_refusal():
     from bigmatch_utilities_spark.config import (
         BlockingPassSpec,
         FieldRef,
+        Interval,
         MatchConfig,
         MatchField,
         write_parmf,
     )
 
-    with pytest.raises(ValueError, match="interval_start"):
-        BlockingPassSpec(block_fields=(), match_fields=(), kind="interval")
-    with pytest.raises(ValueError, match="interval_granule_s"):
-        BlockingPassSpec(
-            block_fields=(), match_fields=(), kind="interval",
-            interval_start="s", interval_end="e", interval_granule_s=0,
-        )
+    with pytest.raises(TypeError, match="start"):
+        Interval()
+    with pytest.raises(ValueError, match="start and end"):
+        Interval(start="s", end="")
+    with pytest.raises(ValueError, match="granule_s"):
+        Interval(start="s", end="e", granule_s=0)
     cfg = MatchConfig(
         passes=(
             BlockingPassSpec(
-                block_fields=(), kind="interval",
-                interval_start="s", interval_end="e",
+                block_fields=(), blocker=Interval(start="s", end="e"),
                 match_fields=(MatchField(name="n", comparator="c", m=0.9, u=0.1),),
             ),
         ),

@@ -231,27 +231,34 @@ def test_tf_adjust_validation_and_parmf_refusal():
 def test_tf_adjust_threads_through_repo_linkage(spark):
     """run_repo_linkage(tf_adjust_fields=('anchor_line',)) keeps the pair
     SET identical (emission floors are weight-safe) while re-weighting
-    exact anchor agreements per-value — common boilerplate anchors score
-    lower, rare anchors higher, than the one global log2(m/u)."""
+    exact anchor agreements per-value in the config passes — common
+    boilerplate anchors score lower, rare anchors higher, than the one
+    global log2(m/u). The MinHash pass 3 scores with the plain fuzzy
+    fields, so its weights do not move."""
     from bigmatch_utilities_spark.repo_linkage import run_repo_linkage
     from bigmatch_utilities_spark.synthdata import repo_files_df
 
+    # at 40 clusters every MinHash pair is also an earlier pass's; at 80
+    # the MinHash pass keeps pairs of its own
     df = spark.createDataFrame(
-        repo_files_df(spark, seed=13, n_clusters=40).toPandas()
+        repo_files_df(spark, seed=13, n_clusters=80).toPandas()
     )
     base = {
         (r.id_rec, r.id_mem, r.pass_id): r.weight
-        for r in run_repo_linkage(df, use_minhash_pass=False).pairs.collect()
+        for r in run_repo_linkage(df, use_minhash_pass=True).pairs.collect()
     }
     adj = {
         (r.id_rec, r.id_mem, r.pass_id): r.weight
         for r in run_repo_linkage(
-            df, use_minhash_pass=False, tf_adjust_fields=("anchor_line",)
+            df, use_minhash_pass=True, tf_adjust_fields=("anchor_line",)
         ).pairs.collect()
     }
     assert set(base) == set(adj)
-    diffs = [k for k in base if abs(base[k] - adj[k]) > 1e-9]
-    assert diffs, "tf adjustment must change at least one pair weight"
+    diffs = {k for k in base if abs(base[k] - adj[k]) > 1e-9}
+    assert any(k[2] == 2 for k in diffs), "tf adjustment must move a pass-2 weight"
+    pass3 = [k for k in base if k[2] == 3]
+    assert pass3, "the input must reach the MinHash pass"
+    assert not any(k[2] == 3 for k in diffs)
     # naming a non-exact field fails loudly through the same path
     with pytest.raises(ValueError, match="exact comparator"):
         run_repo_linkage(
