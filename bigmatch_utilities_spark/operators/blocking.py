@@ -20,25 +20,23 @@ are handled by (a) blank suppression, (b) AQE skew-join splitting, and (c)
 the explicit `salt` option that replicates the memory side S ways —
 preserving exact join semantics — when one side is broadcast-sized per salt
 but the key histogram is pathological. `max_block_rows` is the guardrail
-that drops (and logs) degenerate blocks instead of letting one key produce
-10^10 pairs.
+that drops degenerate blocks instead of letting one key produce 10^10
+pairs.
+
+A two-file pass with guardrails costs one small aggregate before its join:
+one ``groupBy`` over a tagged union of both sides' block keys gives each
+block's rec and mem row counts, and only the blocks a guardrail flags
+(capped on either side, or hot on the rec side) are broadcast back to
+both sides — a fixed per-pass overhead of one shuffle of the keys and one
+broadcast, whatever the data.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigmatch_utilities_spark.config import BlockingPassSpec
-
-
-@dataclass
-class BlockStats:
-    pass_id: int
-    dropped_blocks: int = 0
-    dropped_rows: int = 0
 
 
 def _nonblank(c: Column) -> Column:
@@ -105,21 +103,66 @@ def derive_block_keys(
     return df, replace(spec, block_fields=tuple(new_fields))
 
 
-def cap_block_size(
-    df: DataFrame, keys: list[str], max_block_rows: int | None
-) -> DataFrame:
-    """Drop rows in blocks larger than `max_block_rows` (guardrail for
-    degenerate keys at scale; drops are observable via the lineage metrics
-    table). Implemented as a window-free groupBy + join so AQE can plan it."""
-    if not max_block_rows:
-        return df
-    big = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_block_n"))
-        .filter(F.col("_block_n") > max_block_rows)
-        .select(*keys)
+#: ``_nsh`` markers in the special-blocks table (see `_special_blocks`).
+_STAR = -1  # rec side over star_block_rows: the min-id star emits the block
+_DROP = 0  # either side over max_block_rows: the block yields no pairs
+
+
+def _special_blocks(
+    r: DataFrame,
+    m: DataFrame | None,
+    keys: list[str],
+    *,
+    max_block_rows: int | None,
+    shard_rows: int | None,
+    star_block_rows: int | None,
+) -> DataFrame | None:
+    """The blocks a blocked join must treat specially, from ONE aggregate
+    over both sides' block keys; None when no guardrail is set.
+
+    Returns ``keys`` plus ``_nsh``: `_STAR` for a block whose rec side is
+    over ``star_block_rows``, else `_DROP` for a block with either side
+    over ``max_block_rows``, else ceil(n_rec / shard_rows) for a block whose
+    rec side is over ``shard_rows``. Every other block is absent (one
+    shard, kept). ``m=None`` is a self-join: both sides are ``r``.
+
+    Per-side caps would give the same pairs: a block capped on one side
+    only has no partner rows on the other, so the inner join drops it
+    anyway. The rec count of a block that survives the cap is the count
+    the shard rule reads, so one ``groupBy`` over a tagged union of the two
+    sides' keys replaces a cap aggregate per side plus a shard-count
+    aggregate. The table holds the union of the blocks those aggregates
+    flagged, so it is as small as the broadcasts it replaces."""
+    if not (max_block_rows or shard_rows or star_block_rows):
+        return None
+    if m is None:
+        stats = r.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n_rec"))
+        n_rec = n_mem = F.col("_n_rec")
+    else:
+        tagged = r.select(*keys, F.lit(1).alias("_is_rec")).unionByName(
+            m.select(*keys, F.lit(0).alias("_is_rec"))
+        )
+        stats = tagged.groupBy(*keys).agg(
+            F.sum("_is_rec").alias("_n_rec"), F.count(F.lit(1)).alias("_n")
+        )
+        n_rec, n_mem = F.col("_n_rec"), F.col("_n") - F.col("_n_rec")
+    rules = []
+    if star_block_rows:
+        rules.append((n_rec > star_block_rows, F.lit(_STAR)))
+    if max_block_rows:
+        rules.append(
+            ((n_rec > max_block_rows) | (n_mem > max_block_rows), F.lit(_DROP))
+        )
+    if shard_rows:
+        rules.append(
+            (n_rec > shard_rows, F.ceil(n_rec / F.lit(float(shard_rows))))
+        )
+    nsh = F.when(*rules[0])
+    for cond, value in rules[1:]:
+        nsh = nsh.when(cond, value)
+    return stats.select(*keys, nsh.cast("int").alias("_nsh")).filter(
+        F.col("_nsh").isNotNull()
     )
-    return df.join(F.broadcast(big), on=keys, how="left_anti")
 
 
 def star_pairs(
@@ -173,8 +216,8 @@ def _self_candidate_pairs(
 
     The block-size cap, the star/clique split, and the adaptive shard
     count all need per-block statistics. The generic path computes them
-    with separate groupBy jobs + broadcast materializations per pass —
-    3-5 extra stage barriers of pure latency on the critical path. Here a
+    with a groupBy job and a broadcast materialization per pass — extra
+    stage barriers of pure latency on the critical path. Here a
     single ``Window.partitionBy(block keys)`` attaches the block count AND
     the min-id representative row in one shuffle; both join sides branch
     from the same windowed frame, so Catalyst's ReuseExchange serves them
@@ -296,6 +339,17 @@ def candidate_pairs(
     (block key, shard) — so a hot block's pair generation and the
     downstream comparator UDFs spread over ceil(n/t) tasks while cold
     blocks pay nothing. Exact join semantics preserved.
+
+    max_block_rows: blocks with more rows than this on EITHER side are
+    dropped (the guardrail against a degenerate key producing 10^10 pairs).
+
+    Plan: a self-join without ``salt`` or a forced broadcast takes the
+    one-window plan of `_self_candidate_pairs`. Every other pass — two
+    files, uniform salting, a broadcast memory file — reads all of its
+    guardrail statistics (star split, cap, shard counts) from ONE
+    aggregate over both sides' block keys (`_special_blocks`), broadcasts
+    the few special blocks once and left-joins them to each side, then
+    runs the blocked join. A pass with no guardrail set is the bare join.
     """
     if any(bf.key_kind != "exact" for bf in spec.block_fields):
         same = rec is mem
@@ -327,45 +381,65 @@ def candidate_pairs(
             carry_rec=carry_rec,
             carry_mem=carry_mem,
         )
+    salted = bool(salt and salt > 1)
+    sharded = bool(shard_rows) and not salted
     r = apply_blank_flags(rec, spec)
-
-    # star split runs BEFORE the size cap: a mega-block on a star pass is
-    # linearized, not dropped; only the quadratic path gets capped.
+    m = None if same_side else apply_blank_flags(mem, spec)
+    special = _special_blocks(
+        r,
+        m,
+        keys,
+        max_block_rows=max_block_rows,
+        shard_rows=shard_rows if sharded else None,
+        star_block_rows=star_block_rows,
+    )
     star = None
-    if star_block_rows:
-        big = (
-            r.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > star_block_rows)
-            .select(*keys)
-        )
-        r_big = r.join(F.broadcast(big), on=keys, how="left_semi")
-        star = star_pairs(r_big, keys, id_col, carry_rec)
-        r = r.join(F.broadcast(big), on=keys, how="left_anti")
+    if special is not None:
+        # one broadcast of the few special blocks, left-joined to each side:
+        # star and capped blocks leave the join, hot blocks carry their
+        # shard count, every other row gets a null _nsh (one shard).
+        special = F.broadcast(special)
+        live = F.coalesce(F.col("_nsh"), F.lit(1)) > 0
+        r = r.join(special, on=keys, how="left")
+        if star_block_rows:
+            # a star block is linearized, not capped: the cap only
+            # guards the quadratic path
+            r_big = r.filter(F.col("_nsh") == _STAR).drop("_nsh")
+            star = star_pairs(r_big, keys, id_col, carry_rec)
+        r = r.filter(live)
+        if m is not None:
+            m = m.join(special, on=keys, how="left").filter(live)
+    if m is None:
+        m = r  # self-join: one blank filter and one statistics pass, not two
 
-    r = cap_block_size(r, keys, max_block_rows)
-
-    if same_side:
-        m = r  # self-join: one blank-filter + one cap computation, not two
-    else:
-        m = apply_blank_flags(mem, spec)
-        m = cap_block_size(m, keys, max_block_rows)
-
+    nsh = F.coalesce(F.col("_nsh"), F.lit(1))
+    rec_id = [F.col(id_col).alias("id_rec")]
+    rec_bk = [F.col(k).alias(f"bk_{k}") for k in keys]
     r = r.select(
-        F.col(id_col).alias("id_rec"),
-        *[F.col(k).alias(f"bk_{k}") for k in keys],
+        # a sharded pass's output leads with its block keys
+        *(rec_bk + rec_id if sharded else rec_id + rec_bk),
         *[F.col(c).alias(f"rec_{c}") for c in carry_rec],
+        *(
+            [F.pmod(F.xxhash64(F.col(id_col)), nsh).cast("int").alias("_shard")]
+            if sharded
+            else []
+        ),
     )
     m = m.select(
         F.col(id_col).alias("id_mem"),
         *[F.col(k).alias(f"bk_{k}_m") for k in keys],
         *[F.col(c).alias(f"mem_{c}") for c in carry_mem],
+        *(
+            [F.explode(F.sequence(F.lit(0), nsh - 1)).alias("_shard_m")]
+            if sharded
+            else []
+        ),
     )
 
     cond = [F.col(f"bk_{k}") == F.col(f"bk_{k}_m") for k in keys]
     drop = [f"bk_{k}_m" for k in keys]
 
-    if salt and salt > 1:
+    if salted:
         # Uniform salting: split the rec side into `salt` shards by a hash
         # of its id, replicate the WHOLE mem side once per shard. Simple but
         # pays `salt`-fold replication on every block; prefer shard_rows.
@@ -375,46 +449,15 @@ def candidate_pairs(
         )
         cond = cond + [F.col("_salt") == F.col("_salt_m")]
         drop += ["_salt", "_salt_m"]
-    elif shard_rows:
-        # Adaptive output-skew salting: per-block shard count ∝ block size,
-        # but ONLY hot blocks (n > shard_rows) carry a count row — by
-        # definition there are few of them, so the attach is a broadcast
-        # left-join (no extra shuffle of either full side); cold blocks
-        # default to 1 shard. Replication cost: a hot block of n rows adds
-        # n·ceil(n/t) mem rows — linear in its PAIR output / t, never a
-        # blind `salt`-fold.
-        hot = (
-            r.groupBy(*[f"bk_{k}" for k in keys])
-            .agg(F.count(F.lit(1)).alias("_bn"))
-            .filter(F.col("_bn") > shard_rows)
-            .select(
-                *[F.col(f"bk_{k}") for k in keys],
-                F.ceil(F.col("_bn") / F.lit(float(shard_rows)))
-                .cast("int")
-                .alias("_nsh_h"),
-            )
-        )
-        r = (
-            r.join(F.broadcast(hot), on=[f"bk_{k}" for k in keys], how="left")
-            .withColumn("_nsh", F.coalesce(F.col("_nsh_h"), F.lit(1)))
-            .withColumn(
-                "_shard",
-                F.pmod(F.xxhash64(F.col("id_rec")), F.col("_nsh")).cast("int"),
-            )
-        )
-        hot_m = hot.select(
-            *[F.col(f"bk_{k}").alias(f"bk_{k}_m") for k in keys],
-            F.col("_nsh_h").alias("_nsh_hm"),
-        )
-        m = (
-            m.join(F.broadcast(hot_m), on=[f"bk_{k}_m" for k in keys], how="left")
-            .withColumn("_nsh_m", F.coalesce(F.col("_nsh_hm"), F.lit(1)))
-            .withColumn(
-                "_shard_m", F.explode(F.sequence(F.lit(0), F.col("_nsh_m") - 1))
-            )
-        )
+    elif sharded:
+        # Adaptive output-skew salting: a hot block's rec rows split over
+        # its shards by id hash and its mem rows are replicated once per
+        # shard, so the join key becomes (block key, shard). Replication
+        # cost: a hot block of n rows adds n·ceil(n/t) mem rows — linear
+        # in its PAIR output / t, never a blind `salt`-fold; cold blocks
+        # (one shard) pay nothing.
         cond = cond + [F.col("_shard") == F.col("_shard_m")]
-        drop += ["_nsh", "_nsh_h", "_nsh_m", "_nsh_hm", "_shard", "_shard_m"]
+        drop += ["_shard", "_shard_m"]
 
     mm = F.broadcast(m) if broadcast_mem else m
     joined = r.join(mm, on=cond, how="inner")

@@ -21,7 +21,11 @@ metrics, supplied here as driver-side orchestration:
   plan, because a block lives wholly inside one slice; the union over
   slices is therefore exactly the full pass output;
 * metrics rows (pass, slice, rows, pairs, wall seconds, partitions)
-  append to ``<out>/metrics/`` — the lineage/metrics table.
+  append to ``<out>/metrics/`` — the lineage/metrics table. Each committed
+  unit adds one JSON-lines ``part-<uuid>.json`` file, written on the
+  driver through the Hadoop FileSystem API like the markers (no Spark
+  job); `CheckpointedMatch.metrics` reads the directory with
+  ``spark.read.json``.
 
 On restart, completed passes/slices are read back from their parquet
 instead of recomputed: resume cost is O(completed output), not O(input).
@@ -101,11 +105,18 @@ class CheckpointedMatch:
         self._write_json(self._marker_path(pass_id, slice_id), payload)
 
     def _write_json(self, path: str, payload: dict) -> None:
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+        self._commit(path, json.dumps(payload))
+
+    def _commit(self, path: str, text: str) -> None:
+        """Write ``text`` to ``path`` atomically: a hidden tmp file in the
+        same directory (``spark.read`` skips ``.``-prefixed names), then a
+        rename."""
+        head, name = path.rsplit("/", 1)
+        tmp = f"{head}/.{name}.tmp.{uuid.uuid4().hex}"
         fs = self._fs(path)
         out = fs.create(self._hpath(tmp), True)
         try:
-            out.write(bytearray(json.dumps(payload).encode("utf-8")))
+            out.write(bytearray(text.encode("utf-8")))
         finally:
             out.close()
         # HDFS rename refuses to overwrite: clear any stale marker first
@@ -113,13 +124,15 @@ class CheckpointedMatch:
         # BETWEEN data commit and marker rename, which is idempotent).
         fs.delete(self._hpath(path), False)
         if not fs.rename(self._hpath(tmp), self._hpath(path)):
-            raise IOError(f"marker rename failed: {tmp} -> {path}")
+            raise IOError(f"commit rename failed: {tmp} -> {path}")
 
     # -- metrics ---------------------------------------------------------
-    def _append_metrics(self, payload: dict | list[dict]) -> None:
-        rows = payload if isinstance(payload, list) else [payload]
-        self.spark.createDataFrame(rows).write.mode("append").json(
-            f"{self.out}/metrics"
+    def _append_metrics(self, rows: list[dict]) -> None:
+        """One JSON-lines ``part-<uuid>.json`` file per call, written on the
+        driver: a few rows need no Spark job."""
+        self._commit(
+            f"{self.out}/metrics/part-{uuid.uuid4().hex}.json",
+            "".join(json.dumps(r) + "\n" for r in rows),
         )
 
     def metrics(self) -> DataFrame:

@@ -416,7 +416,6 @@ def run_repo_linkage_delta(
         cands = left_hit.unionByName(right_only)
         carry = [mf.name for mf in _FUZZY_FIELDS]
         scored3 = _scored_canopy(cands, prep_all, carry, len(cfg.passes))
-        scored3 = scored3.filter(F.col("weight") >= F.lit(-100.0))
         core = core.unionByName(scored3.select(*core_cols))
 
     combined = first_pass_wins(core)

@@ -3,31 +3,122 @@ passes are not re-executed."""
 
 from __future__ import annotations
 
-from pathlib import Path
+import os
+
+import pytest
 
 from bigmatch_utilities_spark.config import parse_datadict, parse_parmf
 from bigmatch_utilities_spark.operators.pipeline import normalize, run_match
 from bigmatch_utilities_spark.plans.checkpoint import CheckpointedMatch
 from bigmatch_utilities_spark.sources.fixed_width import read_fixed_width
 
-GS = "/root/reference/samplefiles/gs"
+# A two-file person pair in the FIXTURES.md F2 layouts: the memory file is
+# the same people with perturbations (TOM vs THOMAS, blank dob/race) and
+# no mname column. Rows 12 and 20 are blank in every field, so the
+# blank-flagged keys drop them; JOHNSON and PARKS blocks hold two record
+# rows each, and the (gender, race) pass shares keys across many rows.
+REC_LAYOUT = [("fname", 14), ("mname", 12), ("lname", 14), ("race", 2),
+              ("gender", 2), ("dob", 8), ("id", 4)]
+MEM_LAYOUT = [("fname", 14), ("lname", 14), ("race", 2), ("gender", 2),
+              ("dob", 8), ("id", 4)]
+REC_ROWS = [
+    ("THOMAS", "A", "EDISON", "W", "M", "18470211", 1),
+    ("ALBERT", "", "EINSTEIN", "W", "M", "18790314", 2),
+    ("MARIE", "S", "CURIE", "W", "F", "18671107", 3),
+    ("ISAAC", "", "NEWTON", "W", "M", "16430104", 4),
+    ("ADA", "K", "LOVELACE", "W", "F", "18151210", 5),
+    ("ROSA", "L", "PARKS", "B", "F", "19130204", 6),
+    ("NIKOLA", "", "TESLA", "W", "M", "18560710", 7),
+    ("GRACE", "B", "HOPPER", "W", "F", "19061209", 8),
+    ("ALAN", "M", "TURING", "W", "M", "19120623", 9),
+    ("KATHERINE", "", "JOHNSON", "B", "F", "19180826", 10),
+    ("MARY", "", "JOHNSON", "B", "F", "19200101", 11),
+    ("", "", "", "", "", "", 12),
+    ("JOHN", "Q", "PARKS", "W", "M", "19130204", 13),
+]
+MEM_ROWS = [
+    ("TOM", "EDISON", "W", "M", "18470211", 1),
+    ("ALBERT", "EINSTEIN", "", "M", "", 2),
+    ("MARIE", "CURIE", "W", "F", "18671107", 3),
+    ("ISAAC", "NEWTON", "W", "M", "16430104", 4),
+    ("ADA", "LOVELACE", "W", "F", "18151210", 5),
+    ("ROSA", "PARKS", "B", "F", "19130204", 6),
+    ("NICOLA", "TESLA", "W", "M", "18560710", 7),
+    ("GRACE", "HOPPER", "", "F", "19061209", 8),
+    ("KATHRINE", "JOHNSON", "B", "F", "19180826", 10),
+    ("", "", "", "", "", 20),
+]
+# parmf grammar: pass/field counts, then per pass one row per blocking
+# field (name, rec start/width, mem start/width, blank flag), one per match
+# field (..., 0, comparator, m, u), cutoff hi/lo, print cutoff hi/lo; last
+# the unique id row.
+PARMF = """\
+3 1 1 0 1 0 0 56 44
+1 1 2
+3 2 3
+lname 27 14 15 14 1
+fname 1 14 1 14 0 uo 0.90 0.05
+dob 45 8 33 8 0 c 0.95 0.02
+gender 43 2 31 2 0 c 0.98 0.50
+8.0 0.0
+8.0 -10.0
+dob 45 8 33 8 1
+fname 1 14 1 14 0 uo 0.90 0.05
+lname 27 14 15 14 0 uo 0.95 0.05
+8.0 0.0
+8.0 -10.0
+gender 43 2 31 2 0
+race 41 2 29 2 1
+fname 1 14 1 14 0 uo 0.90 0.05
+lname 27 14 15 14 0 uo 0.95 0.05
+dob 45 8 33 8 0 c 0.95 0.02
+8.0 0.0
+8.0 -10.0
+id 53 4 41 4
+"""
+
+# The schema Spark's JSON writer gave the metrics table, read back with
+# spark.read.json (inference sorts the columns by name).
+METRICS_SCHEMA = (
+    "struct<kind:string,partition:bigint,partitions:bigint,pass_id:bigint,"
+    "rows:bigint,slice:bigint,ts:string,wall_s:double>"
+)
 
 
-def _inputs(spark):
-    cfg = parse_parmf(Path(f"{GS}/parmf.txt").read_text())
-    rec = normalize(
-        read_fixed_width(
-            spark,
-            f"{GS}/sample_fixedwidth.txt",
-            parse_datadict(Path(f"{GS}/sample_fixed_width.dict.csv").read_text()),
-        )
-    )
-    mem = normalize(
-        read_fixed_width(
-            spark,
-            f"{GS}/sample2_fixedwidth.txt",
-            parse_datadict(Path(f"{GS}/sample2_fixed_width.dict.csv").read_text()),
-        )
+def _write_side(d, name, layout, rows):
+    lines = []
+    for row in rows:
+        lines.append("".join(
+            (str(v).rjust(w) if n == "id" else str(v).ljust(w))
+            for (n, w), v in zip(layout, row)
+        ))
+    (d / f"{name}.txt").write_text("\n".join(lines) + "\n")
+    dd = ["column_name,start_pos,width,unique_id_yn,matchfield_yn,"
+          "bigmatch_type,data_format,comments"]
+    pos = 1
+    for n, w in layout:
+        dd.append(f"{n},{pos},{w},{'y' if n == 'id' else ''},y,,,")
+        pos += w
+    (d / f"{name}.dict.csv").write_text("\n".join(dd) + "\n")
+
+
+@pytest.fixture(scope="module")
+def person_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("person_f2")
+    _write_side(d, "rec", REC_LAYOUT, REC_ROWS)
+    _write_side(d, "mem", MEM_LAYOUT, MEM_ROWS)
+    (d / "parmf.txt").write_text(PARMF)
+    return d
+
+
+def _inputs(spark, d):
+    cfg = parse_parmf((d / "parmf.txt").read_text())
+    rec, mem = (
+        normalize(read_fixed_width(
+            spark, str(d / f"{side}.txt"),
+            parse_datadict((d / f"{side}.dict.csv").read_text()),
+        ))
+        for side in ("rec", "mem")
     )
     return cfg, rec, mem
 
@@ -39,16 +130,16 @@ def _pairs_set(result):
     }
 
 
-def test_checkpointed_run_matches_direct(spark, tmp_path):
-    cfg, rec, mem = _inputs(spark)
+def test_checkpointed_run_matches_direct(spark, person_dir, tmp_path):
+    cfg, rec, mem = _inputs(spark, person_dir)
     direct = _pairs_set(run_match(rec, mem, cfg, id_col="id"))
     ckpt = CheckpointedMatch(spark, str(tmp_path / "run1"))
     resumable = _pairs_set(ckpt.run(rec, mem, cfg, id_col="id"))
     assert resumable == direct
 
 
-def test_resume_skips_completed_passes(spark, tmp_path):
-    cfg, rec, mem = _inputs(spark)
+def test_resume_skips_completed_passes(spark, person_dir, tmp_path):
+    cfg, rec, mem = _inputs(spark, person_dir)
     out = str(tmp_path / "run2")
 
     ckpt = CheckpointedMatch(spark, out)
@@ -56,7 +147,7 @@ def test_resume_skips_completed_passes(spark, tmp_path):
     assert all(ckpt.pass_complete(k) for k in range(len(cfg.passes)))
 
     # simulate a crash after pass 0: delete markers+data of passes 1..2
-    import shutil, os
+    import shutil
 
     for k in (1, 2):
         os.remove(f"{out}/markers/pass_{k:02d}.json")
@@ -81,11 +172,11 @@ def test_resume_skips_completed_passes(spark, tmp_path):
     assert {0, 2} & want_pass_ids  # checkpointed passes came from disk
 
 
-def test_file_uri_markers_via_hadoop_fs(spark, tmp_path):
+def test_file_uri_markers_via_hadoop_fs(spark, person_dir, tmp_path):
     """Markers must work through the Hadoop FileSystem layer (file: URI —
     the same code path hdfs:/s3a: paths take on a cluster), not driver
     os.* calls."""
-    cfg, rec, mem = _inputs(spark)
+    cfg, rec, mem = _inputs(spark, person_dir)
     out = f"file://{tmp_path}/run_uri"
     ckpt = CheckpointedMatch(spark, out)
     full = _pairs_set(ckpt.run(rec, mem, cfg, id_col="id"))
@@ -100,11 +191,11 @@ def test_file_uri_markers_via_hadoop_fs(spark, tmp_path):
     assert _pairs_set(resumed) == full
 
 
-def test_sliced_run_matches_direct(spark, tmp_path):
+def test_sliced_run_matches_direct(spark, person_dir, tmp_path):
     """slices>1 shards each pass by blocking-key hash; the union over
     slices must be exactly the unsliced result (blocks never straddle a
     slice, so pairs and per-block guardrails are identical)."""
-    cfg, rec, mem = _inputs(spark)
+    cfg, rec, mem = _inputs(spark, person_dir)
     direct = _pairs_set(run_match(rec, mem, cfg, id_col="id"))
     ckpt = CheckpointedMatch(spark, str(tmp_path / "run_sliced"))
     sliced = _pairs_set(ckpt.run(rec, mem, cfg, id_col="id", slices=3))
@@ -117,13 +208,15 @@ def test_sliced_run_matches_direct(spark, tmp_path):
     )
 
 
-def test_mid_pass_failure_resumes_at_slice_granularity(spark, tmp_path, monkeypatch):
+def test_mid_pass_failure_resumes_at_slice_granularity(
+    spark, person_dir, tmp_path, monkeypatch
+):
     """Kill the run after k slices of pass 0: the resume must re-score
     ONLY the incomplete slices (no duplicated work — counted via a
     score_pass spy) and still produce the exact full result."""
     from bigmatch_utilities_spark.plans import checkpoint as ck_mod
 
-    cfg, rec, mem = _inputs(spark)
+    cfg, rec, mem = _inputs(spark, person_dir)
     out = str(tmp_path / "run_kill")
     slices = 4
     real_score = ck_mod.score_pass
@@ -164,17 +257,15 @@ def test_mid_pass_failure_resumes_at_slice_granularity(spark, tmp_path, monkeypa
 
 
 def test_resume_with_different_slice_count_fails_fast(
-    spark, tmp_path, monkeypatch
+    spark, person_dir, tmp_path, monkeypatch
 ):
     """ADVICE r3: a partially completed sliced pass pins its slice count in
     a sidecar; resuming with a different --slices must raise instead of
     silently mixing hash-mod layouts (which would duplicate some blocks'
     pairs and drop others)."""
-    import pytest
-
     from bigmatch_utilities_spark.plans import checkpoint as ck_mod
 
-    cfg, rec, mem = _inputs(spark)
+    cfg, rec, mem = _inputs(spark, person_dir)
     out = str(tmp_path / "run_slicemix")
     real_score = ck_mod.score_pass
     calls = {"n": 0}
@@ -201,11 +292,56 @@ def test_resume_with_different_slice_count_fails_fast(
     assert _pairs_set(resumed) == direct
 
 
-def test_metrics_table(spark, tmp_path):
-    cfg, rec, mem = _inputs(spark)
-    ckpt = CheckpointedMatch(spark, str(tmp_path / "run3"))
+def test_metrics_table(spark, person_dir, tmp_path):
+    cfg, rec, mem = _inputs(spark, person_dir)
+    out = tmp_path / "run3"
+    ckpt = CheckpointedMatch(spark, str(out))
     ckpt.run(rec, mem, cfg, id_col="id")
-    m = ckpt.metrics().collect()
+    metrics = ckpt.metrics()
+    assert metrics.schema.simpleString() == METRICS_SCHEMA
+    m = metrics.collect()
     assert {r["pass_id"] for r in m} == {0, 1, 2}
     assert all(r["wall_s"] > 0 for r in m)
     assert all(r["partitions"] >= 1 for r in m)
+    for k in range(len(cfg.passes)):
+        unit = [r for r in m if r["pass_id"] == k and r["kind"] == "pass"]
+        parts = [r for r in m if r["pass_id"] == k and r["kind"] == "partition"]
+        assert len(unit) == 1, k
+        assert unit[0]["partition"] == -1 and unit[0]["slice"] == -1
+        assert len(parts) == unit[0]["partitions"], k
+        assert len({r["partition"] for r in parts}) == len(parts), k
+        assert sum(r["rows"] for r in parts) == unit[0]["rows"], k
+        assert unit[0]["rows"] == ckpt.read_marker(k)["pairs"], k
+        assert unit[0]["rows"] == spark.read.parquet(
+            f"{out}/pairs/pass={k:02d}"
+        ).count(), k
+    assert len(m) == sum(1 + r["partitions"] for r in m if r["kind"] == "pass")
+
+    # a resume over the finished checkpoint appends nothing
+    files = sorted(os.listdir(out / "metrics"))
+    CheckpointedMatch(spark, str(out)).run(rec.limit(0), mem, cfg, id_col="id")
+    assert sorted(os.listdir(out / "metrics")) == files
+    assert ckpt.metrics().count() == len(m)
+
+
+def test_metrics_append_runs_no_spark_job(spark, tmp_path):
+    """A metrics append is a driver-side file write: one JSON-lines part
+    file, no Spark job."""
+    ckpt = CheckpointedMatch(spark, str(tmp_path / "run4"))
+    row = {"kind": "pass", "pass_id": 0, "slice": -1, "partition": -1,
+           "rows": 3, "wall_s": 0.5, "partitions": 1,
+           "ts": "2026-01-01T00:00:00Z"}
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "metrics-append")
+    try:
+        ckpt._append_metrics([row, dict(row, kind="partition", partition=0)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("metrics-append")) == []
+    files = [f for f in os.listdir(tmp_path / "run4" / "metrics")
+             if not f.startswith(".")]
+    assert len(files) == 1 and files[0].startswith("part-")
+    assert files[0].endswith(".json")
+    got = ckpt.metrics()
+    assert got.schema.simpleString() == METRICS_SCHEMA
+    assert sorted(r["kind"] for r in got.collect()) == ["partition", "pass"]

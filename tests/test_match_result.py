@@ -184,17 +184,22 @@ def repo_input(spark):
     return spark.createDataFrame(repo_files_df(spark, seed=11, n_clusters=30).toPandas())
 
 
-def _node_names(plan) -> list[str]:
+def _node_names(plan, into_cache: bool = False) -> list[str]:
     """Operator names of an executed plan, descending into adaptive and
-    query-stage wrappers but not into a cached relation's own plan."""
+    query-stage wrappers, and into a cached relation's own plan only when
+    ``into_cache``."""
     name = plan.nodeName()
     if name == "AdaptiveSparkPlan":
-        return [name, *_node_names(plan.executedPlan())]
+        return [name, *_node_names(plan.executedPlan(), into_cache)]
     if hasattr(plan, "plan") and "QueryStage" in name:
-        return [name, *_node_names(plan.plan())]
+        return [name, *_node_names(plan.plan(), into_cache)]
+    if into_cache and name == "InMemoryTableScan":
+        return [name, *_node_names(plan.relation().cachedPlan(), into_cache)]
     children = plan.children()
     return [name] + [
-        n for i in range(children.size()) for n in _node_names(children.apply(i))
+        n
+        for i in range(children.size())
+        for n in _node_names(children.apply(i), into_cache)
     ]
 
 
@@ -240,4 +245,25 @@ def test_repo_linkage_delta_splits_match_legacy(repo_input):
     assert result.pairs.is_cached
     accept = repo_match_config().accept_threshold
     assert_matches_legacy(result, *legacy_sets(result.pairs, accept))
+    result.pairs.unpersist()
+
+
+def test_repo_linkage_delta_scores_each_fuzzy_pass_once(spark):
+    """The delta run's hand-composed MinHash pass evaluates its
+    Jaro-Winkler UDF in one plan node. Its candidates' weight is at least
+    about -10.9, so a ``weight >= -100`` floor there dropped no row but
+    doubled the node: 6 ``ArrowEvalPython`` nodes, now 5 (the two scored
+    passes of delta-delta and delta-standing keep two each, one per
+    score_pass emission floor). Pairs and good pairs are unchanged."""
+    from bigmatch_utilities_spark.repo_linkage import run_repo_linkage_delta
+    from bigmatch_utilities_spark.synthdata import repo_files_df
+
+    df = spark.createDataFrame(repo_files_df(spark, seed=41, n_clusters=60).toPandas())
+    delta = df.filter(F.crc32("path") % 5 == 0)
+    standing = df.filter(F.crc32("path") % 5 != 0)
+    result = run_repo_linkage_delta(delta, standing, use_minhash_pass=True)
+    assert result.pairs.count() == 38
+    assert result.good_pairs().count() == 34
+    names = _node_names(result.pairs._jdf.queryExecution().executedPlan(), True)
+    assert sum("ArrowEvalPython" in n for n in names) == 5, names
     result.pairs.unpersist()

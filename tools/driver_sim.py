@@ -9,11 +9,12 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bigmatch_utilities_spark.session import get_spark  # noqa: E402

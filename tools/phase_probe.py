@@ -6,8 +6,9 @@ Usage: python tools/phase_probe.py <cpus> [input] [shard_rows|none]
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 

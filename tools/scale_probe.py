@@ -7,8 +7,9 @@ Prints one JSON line. Used to diagnose local-mode scaling behavior.
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from bigmatch_utilities_spark.session import get_spark
 from bigmatch_utilities_spark.repo_linkage import run_repo_linkage
