@@ -113,11 +113,9 @@ def main() -> None:
     )
 
     def q_linkage_docs():
-        caches: list = []
-        r = run_repo_linkage(repo_files, use_minhash_pass=True, cache_handle=caches)
+        r = run_repo_linkage(repo_files, use_minhash_pass=True)
         n = r.pairs.count()
-        for c in caches + [r.pairs]:
-            c.unpersist()
+        r.pairs.unpersist()
         return n
 
     counters["linkage_docs_pairs"] = timed("linkage_docs", q_linkage_docs)
@@ -329,13 +327,11 @@ def main() -> None:
     def q_delta_linkage():
         from bigmatch_utilities_spark.repo_linkage import run_repo_linkage_delta
 
-        caches: list = []
         d = repo_files.filter(F.crc32("path") % 5 == 0)
         s = repo_files.filter(F.crc32("path") % 5 != 0)
-        r = run_repo_linkage_delta(d, s, cache_handle=caches)
+        r = run_repo_linkage_delta(d, s)
         n = r.pairs.count()
-        for c in caches + [r.pairs]:
-            c.unpersist()
+        r.pairs.unpersist()
         return n
 
     counters["delta_pairs"] = timed("delta_linkage", q_delta_linkage)

@@ -216,8 +216,11 @@ class Lsh:
     """MinHash-LSH canopy over ``field`` (operators/dedup.minhash_candidates):
     candidates collide in at least one of ``bands`` band keys. Band buckets
     above ``max_bucket`` are boilerplate canopies, dropped whole (None =
-    uncapped). A two-file canopy needs the delta-touching filter
-    repo_linkage.run_repo_linkage_delta composes explicitly."""
+    uncapped). repo_linkage.MINHASH_PASS, the repo linkage's pass 3, is
+    one. A two-file canopy is this pass over the union of both files,
+    filtered to the pairs that touch one side before scoring, as
+    repo_linkage.run_repo_linkage_delta does. A pass has no block key to
+    slice by, so CheckpointedMatch commits it whole under ``slices``."""
 
     kind = "lsh"
     field: str

@@ -173,6 +173,13 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     return pd.Series(jaro_winkler_np(s1, s2))
 
 
+#: The kernel as a second, nondeterministic UDF (:func:`similarity_once`);
+#: ``asNondeterministic()`` mutates its UDF, so never call it on the first.
+_jaro_winkler_once = pandas_udf(
+    jaro_winkler_udf.func, DoubleType()
+).asNondeterministic()
+
+
 def jaro_winkler(c1: Column | str, c2: Column | str) -> Column:
     return jaro_winkler_udf(F.col(c1) if isinstance(c1, str) else c1,
                             F.col(c2) if isinstance(c2, str) else c2)
@@ -199,17 +206,30 @@ def _tok_sorted(c: Column) -> Column:
 def similarity(comparator: str, left: Column | str, right: Column | str) -> Column:
     """Similarity in [0,1] for one comparator code. Blank semantics are the
     caller's job (the scoring layer zero-weights blank-either-side)."""
-    lc, rc = _col(left), _col(right)
+    return _similarity(comparator, _col(left), _col(right), jaro_winkler_udf)
+
+
+def similarity_once(
+    comparator: str, left: Column | str, right: Column | str
+) -> Column:
+    """:func:`similarity` with the Jaro-Winkler kernel marked
+    nondeterministic: the same values, but a ``select`` of such columns is
+    a plan barrier (operators.pipeline.score_pass). Each call must appear
+    once in that ``select``: a repeated nondeterministic call runs again."""
+    return _similarity(comparator, _col(left), _col(right), _jaro_winkler_once)
+
+
+def _similarity(comparator: str, lc: Column, rc: Column, jw) -> Column:
     if comparator == "c":
         return F.when(lc == rc, F.lit(1.0)).otherwise(F.lit(0.0))
     if comparator == "ci":
         return F.when(F.lower(lc) == F.lower(rc), F.lit(1.0)).otherwise(F.lit(0.0))
     if comparator == "uo":
-        return jaro_winkler(lc, rc)
+        return jw(lc, rc)
     if comparator == "uoi":
-        return jaro_winkler(F.lower(lc), F.lower(rc))
+        return jw(F.lower(lc), F.lower(rc))
     if comparator == "s":
-        return jaro_winkler(_tok_sorted(F.lower(lc)), _tok_sorted(F.lower(rc)))
+        return jw(_tok_sorted(F.lower(lc)), _tok_sorted(F.lower(rc)))
     if comparator in ("e", "ei"):
         # normalized edit similarity: 1 - lev/max(len) — the classic
         # typo-tolerant comparator BigMatch lacks (its string codes are all
@@ -572,13 +592,17 @@ def swapped_agreement(
     swap tolerance is the standard remedy the engine itself lacks. Pure
     column expression — whole-stage codegen, no UDF, no shuffle.
     """
-    straight = (
-        similarity(comparator, rec_a, mem_a) + similarity(comparator, rec_b, mem_b)
-    ) / 2.0
-    crossed = (
-        similarity(comparator, rec_a, mem_b) + similarity(comparator, rec_b, mem_a)
-    ) / 2.0
-    return F.greatest(straight, crossed)
+    return best_alignment(
+        similarity(comparator, rec_a, mem_a),
+        similarity(comparator, rec_b, mem_b),
+        similarity(comparator, rec_a, mem_b),
+        similarity(comparator, rec_b, mem_a),
+    )
+
+
+def best_alignment(aa: Column, bb: Column, ab: Column, ba: Column) -> Column:
+    """The better mean of the straight and the crossed alignment."""
+    return F.greatest((aa + bb) / 2.0, (ab + ba) / 2.0)
 
 
 def swapped_agreement_sql(

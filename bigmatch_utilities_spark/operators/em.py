@@ -59,10 +59,17 @@ def gamma_column(
     and similarity >= agree_threshold (blank-on-either-side counts as
     disagreement — EM needs a 2-state gamma; the 3-state missing treatment
     is a refinement the reference has no analog of)."""
+    sim = similarity(mf.comparator, left, right)
+    return gamma_at(sim, left, right, agree_threshold)
+
+
+def gamma_at(
+    sim: Column, left: Column, right: Column, agree_threshold: float = PARTIAL_FLOOR
+) -> Column:
+    """:func:`gamma_column` given the field's similarity column."""
     blank = (left.isNull() | (F.trim(left) == "")) | (
         right.isNull() | (F.trim(right) == "")
     )
-    sim = similarity(mf.comparator, left, right)
     return (
         F.when(blank, F.lit(0))
         .when(sim >= F.lit(agree_threshold), F.lit(1))

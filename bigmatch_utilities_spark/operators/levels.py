@@ -152,8 +152,14 @@ def level_index_sql(cl: ComparisonLevels, left: str, right: str) -> str:
 def level_weight(cl: ComparisonLevels, left: Column, right: Column) -> Column:
     """log2(m_l/u_l) at this pair's level; 0.0 when blank. Same literals
     as :meth:`ComparisonLevels.weights` so SQL and Column agree exactly."""
+    return level_weight_at(cl, similarity(cl.comparator, left, right), left, right)
+
+
+def level_weight_at(
+    cl: ComparisonLevels, sim: Column, left: Column, right: Column
+) -> Column:
+    """:func:`level_weight` given the comparison's similarity column."""
     ws = cl.weights()
-    sim = similarity(cl.comparator, left, right)
     expr = F.when(_blank(left) | _blank(right), F.lit(0.0)).when(
         sim >= 1.0, F.lit(ws[0])
     )

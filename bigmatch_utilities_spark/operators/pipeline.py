@@ -24,6 +24,7 @@ one-sequential-read-per-pass contract without re-reading the source.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,8 +35,9 @@ from bigmatch_utilities_spark.config import (
     MatchConfig,
     Snm,
 )
+from bigmatch_utilities_spark.functions.comparators import similarity_once
 from bigmatch_utilities_spark.operators.blocking import candidate_pairs
-from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
+from bigmatch_utilities_spark.operators.scoring import is_exact, weight_terms
 
 PAIR_KEY = ["id_rec", "id_mem"]
 
@@ -159,18 +161,51 @@ def score_pass(
     max_block_rows: int | None = None,
     gamma_fields: tuple | None = None,
 ) -> DataFrame:
-    """One blocking pass → scored candidate pairs.
+    """One blocking pass → scored candidate pairs: :func:`pass_candidates`
+    (carrying the ``gamma_fields`` too), then :func:`score_candidates`, the
+    one scoring path of every pass kind.
+
+    Every similarity the pass reads is a column of one projection that the
+    optimizer treats as a barrier (functions.comparators.similarity_once);
+    the weight, the emission-floor filter, the decision and the gammas read
+    those columns. Each Python comparator therefore runs once per candidate
+    pair, in one plan node. Were the similarities ordinary deterministic
+    columns, the optimizer would push the floor filter below the weight
+    projection, inlining the weight into it, and run every comparator
+    twice, in two nodes."""
+    pairs = pass_candidates(
+        rec, mem, spec, id_col, dedupe=dedupe, broadcast_mem=broadcast_mem,
+        salt=salt, shard_rows=shard_rows, max_block_rows=max_block_rows,
+        extra_carry=[mf.name for mf in gamma_fields or ()],
+    )
+    return score_candidates(pairs, mem, spec, pass_id, gamma_fields)
+
+
+def score_candidates(
+    pairs: DataFrame,
+    mem: DataFrame,
+    spec: BlockingPassSpec,
+    pass_id: int,
+    gamma_fields: tuple | None = None,
+) -> DataFrame:
+    """A pass's candidate pairs (the :func:`pass_candidates` contract) →
+    scored pairs: the candidates' columns, then ``weight``, ``is_exact``,
+    ``pass_id``, ``g_<field>``..., ``decision``.
 
     Emission floor: pairs below the *print* low cutoff are not emitted at
     all (print-cutoff bounds what is written, BigMatchParmFile.py:529-549);
     `decision` is 'match' for weight ≥ cutoff hi, else 'possible' for
     weight ≥ cutoff lo, else 'below'.
 
+    The similarity columns of the barrier (see :func:`score_pass`) — match
+    fields, each alignment of a field pair, level fields, gamma fields —
+    are dropped before returning.
+
     gamma_fields: MatchFields for which to attach binary agreement
     indicators ``g_<field>`` (operators.em.gamma_column) in the SAME stage
     as the weights — the EM estimator then folds onto this scoring pass
-    instead of re-joining the source table (VERDICT r4 item 4). Fields not
-    scored by this pass are carried through the blocked join for it.
+    instead of re-joining the source table (VERDICT r4 item 4). The
+    candidates must carry them (``pass_candidates(extra_carry=...)``).
 
     TF adjustment: match fields declared ``tf_adjust=True`` (Winkler 1995;
     operators/tf_adjust.py) score exact agreement with the per-value
@@ -184,77 +219,76 @@ def score_pass(
     """
     gamma_fields = tuple(gamma_fields or ())
     tf_fields = tuple(mf for mf in spec.match_fields if mf.tf_adjust)
-    pairs = pass_candidates(
-        rec,
-        mem,
-        spec,
-        id_col,
-        dedupe=dedupe,
-        broadcast_mem=broadcast_mem,
-        salt=salt,
-        shard_rows=shard_rows,
-        max_block_rows=max_block_rows,
-        extra_carry=[mf.name for mf in gamma_fields],
-    )
+    plain = tuple(mf for mf in spec.match_fields if not mf.tf_adjust)
     if tf_fields:
         from bigmatch_utilities_spark.operators.tf_adjust import (
             tf_table,
             with_tf_weight,
         )
 
-        plain = tuple(mf for mf in spec.match_fields if not mf.tf_adjust)
         for mf in tf_fields:
             pairs = with_tf_weight(
                 pairs, mf, tf_table(mem, mf.name), out_col=f"_w_tf_{mf.name}"
             )
-        w = (
-            pair_weight(plain, field_pairs=spec.match_field_pairs)
-            if (plain or spec.match_field_pairs)
-            else F.lit(0.0)
-        )
-        for mf in tf_fields:
-            w = w + F.col(f"_w_tf_{mf.name}")
-    else:
-        w = (
-            pair_weight(spec.match_fields, field_pairs=spec.match_field_pairs)
-            if (spec.match_fields or spec.match_field_pairs)
-            else F.lit(0.0)
-        )
+
+    # (comparator, rec column, mem column) -> name of its similarity column
+    sims: dict[tuple[str, str, str], str] = {}
+
+    def sim(comparator: str, rec_col: str, mem_col: str) -> Column:
+        key = (comparator, rec_col, mem_col)
+        return F.col(sims.setdefault(key, f"_sim_{len(sims)}"))
+
+    def field(f) -> tuple[Column, Column, Column]:
+        """(similarity, rec value, mem value) of a level or gamma field."""
+        rec, mem_c = f"rec_{f.name}", f"mem_{f.name}"
+        return sim(f.comparator, rec, mem_c), F.col(rec), F.col(mem_c)
+
+    terms = weight_terms(plain, spec.match_field_pairs, sim)
+    w = reduce(lambda a, b: a + b, terms) if terms else F.lit(0.0)
+    for mf in tf_fields:
+        w = w + F.col(f"_w_tf_{mf.name}")
     if spec.level_fields:
-        from bigmatch_utilities_spark.operators.levels import (
-            levels_pair_weight,
-        )
+        from bigmatch_utilities_spark.operators.levels import level_weight_at
 
-        w = w + levels_pair_weight(spec.level_fields)
-    scored = (
-        pairs.withColumn("weight", w)
-        .withColumn(
-            "is_exact",
-            is_exact(
-                spec.match_fields,
-                field_pairs=spec.match_field_pairs,
-                level_fields=spec.level_fields,
-            ),
-        )
-        .withColumn("pass_id", F.lit(pass_id))
-        .drop(*[f"_w_tf_{mf.name}" for mf in tf_fields])
-    )
+        levels = F.lit(0.0)
+        for cl in spec.level_fields:
+            levels = levels + level_weight_at(cl, *field(cl))
+        w = w + levels
+    gammas = []
     if gamma_fields:
-        from bigmatch_utilities_spark.operators.em import gamma_column
+        from bigmatch_utilities_spark.operators.em import gamma_at
 
-        for mf in gamma_fields:
-            scored = scored.withColumn(
-                f"g_{mf.name}",
-                gamma_column(mf, F.col(f"rec_{mf.name}"), F.col(f"mem_{mf.name}")),
-            )
+        gammas = [gamma_at(*field(mf)).alias(f"g_{mf.name}") for mf in gamma_fields]
+
+    # The barrier: only this projection's Jaro-Winkler UDF is marked
+    # nondeterministic (score_pass says why); other callers keep the plain one
+    scored = pairs.select(
+        "*",
+        *[
+            similarity_once(c, F.col(r), F.col(m)).alias(name)
+            for (c, r, m), name in sims.items()
+        ],
+    ).select(
+        "*",
+        w.alias("weight"),
+        is_exact(
+            spec.match_fields, field_pairs=spec.match_field_pairs,
+            level_fields=spec.level_fields,
+        ).alias("is_exact"),
+        F.lit(pass_id).alias("pass_id"),
+        *gammas,
+    )
     emit_floor = min(spec.print_cutoff.lo, spec.cutoff.lo)
-    scored = scored.filter(F.col("weight") >= F.lit(float(emit_floor)))
     decision = (
         F.when(F.col("weight") >= F.lit(float(spec.cutoff.hi)), F.lit("match"))
         .when(F.col("weight") >= F.lit(float(spec.cutoff.lo)), F.lit("possible"))
         .otherwise(F.lit("below"))
     )
-    return scored.withColumn("decision", decision)
+    return (
+        scored.filter(F.col("weight") >= F.lit(float(emit_floor)))
+        .withColumn("decision", decision)
+        .drop(*sims.values(), *[f"_w_tf_{mf.name}" for mf in tf_fields])
+    )
 
 
 def accept_at(threshold: float) -> Column:
@@ -460,17 +494,23 @@ def match_pairs(
         )
         for k, spec in enumerate(config.passes)
     ]
-    # Only the decision core crosses the multi-pass union: the carried
-    # rec_/mem_ field values are ~10x the bytes of the decision columns and
-    # nothing downstream of the union reads them (the legacy emit path
-    # formats per-pass frames BEFORE the union). At 10^8+ pairs this is the
-    # difference between shuffling ~50 B and ~500 B per row through the
-    # first-pass-wins aggregation.
-    gcols = [f"g_{mf.name}" for mf in (gamma_fields or ())]
+    return union_passes(per_pass)
+
+
+def union_passes(per_pass: list[DataFrame]) -> DataFrame:
+    """Scored passes → one first-pass-wins table of the decision core
+    ``(id_rec, id_mem, pass_id, weight, is_exact, decision, g_<field>...)``.
+
+    Only the decision core (with the gammas EM reads) crosses the union:
+    the carried rec_/mem_ field values are ~10x its bytes and nothing
+    downstream of the union reads them (the legacy emit path formats
+    per-pass frames BEFORE the union) — at 10^8+ pairs, ~50 B instead of
+    ~500 B per row through the first-pass-wins shuffle."""
     core = None
     for df in per_pass:
         slim = df.select(
-            *PAIR_KEY, "pass_id", "weight", "is_exact", "decision", *gcols
+            *PAIR_KEY, "pass_id", "weight", "is_exact", "decision",
+            *[c for c in df.columns if c.startswith("g_")],
         )
         core = slim if core is None else core.unionByName(slim)
     return first_pass_wins(core)

@@ -26,6 +26,7 @@ scoring path is the Jaro-Winkler Arrow kernel upstream.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column
@@ -33,9 +34,9 @@ from pyspark.sql import functions as F
 
 from bigmatch_utilities_spark.config import MatchField, MatchFieldPair
 from bigmatch_utilities_spark.functions.comparators import (
+    best_alignment,
     similarity,
     similarity_sql,
-    swapped_agreement,
     swapped_agreement_sql,
 )
 
@@ -101,22 +102,16 @@ def _pair_blank(
 
 def pair_field_weight(
     fp: MatchFieldPair,
+    sim: Column,
     rec_prefix: str = "rec_",
     mem_prefix: str = "mem_",
     partial_floor: float = PARTIAL_FLOOR,
 ) -> Column:
-    """FS weight term for a transposition-tolerant field pair: the
-    swapped_agreement similarity (best of straight/crossed alignment)
+    """FS weight term for a transposition-tolerant field pair given its
+    swapped_agreement similarity (best of straight/crossed alignment),
     interpolated between this pair's (m, u) weights."""
     agr = agreement_weight(fp.m, fp.u)
     dis = disagreement_weight(fp.m, fp.u)
-    sim = swapped_agreement(
-        fp.comparator,
-        F.col(rec_prefix + fp.name_a),
-        F.col(rec_prefix + fp.name_b),
-        F.col(mem_prefix + fp.name_a),
-        F.col(mem_prefix + fp.name_b),
-    )
     return _weight_from_sim(
         agr, dis, sim, _pair_blank(fp, rec_prefix, mem_prefix), partial_floor
     )
@@ -183,15 +178,38 @@ def pair_weight(
 ) -> Column:
     """Total pair weight = Σ field weights (+ Σ swap-tolerant pair-field
     weights), over `rec_<f>` / `mem_<f>` cols."""
+    terms = weight_terms(match_fields, field_pairs, _sim, rec_prefix, mem_prefix)
+    return reduce(lambda a, b: a + b, terms)
+
+
+def _sim(comparator: str, rec_col: str, mem_col: str) -> Column:
+    return similarity(comparator, F.col(rec_col), F.col(mem_col))
+
+
+def weight_terms(
+    match_fields: tuple[MatchField, ...],
+    field_pairs: tuple[MatchFieldPair, ...],
+    sim: Callable[[str, str, str], Column],
+    rec_prefix: str = "rec_",
+    mem_prefix: str = "mem_",
+) -> list[Column]:
+    """The terms :func:`pair_weight` sums, in its order, each similarity
+    read from ``sim(comparator, rec column name, mem column name)``."""
     terms = []
     for mf in match_fields:
-        lc = F.col(rec_prefix + mf.name)
-        rc = F.col(mem_prefix + mf.name)
-        sim = similarity(mf.comparator, lc, rc)
-        terms.append(field_weight(mf, sim, lc, rc))
+        rec, mem = rec_prefix + mf.name, mem_prefix + mf.name
+        terms.append(
+            field_weight(mf, sim(mf.comparator, rec, mem), F.col(rec), F.col(mem))
+        )
     for fp in field_pairs:
-        terms.append(pair_field_weight(fp, rec_prefix, mem_prefix))
-    return reduce(lambda a, b: a + b, terms)
+        ra, rb = rec_prefix + fp.name_a, rec_prefix + fp.name_b
+        ma, mb = mem_prefix + fp.name_a, mem_prefix + fp.name_b
+        c = fp.comparator
+        s = best_alignment(
+            sim(c, ra, ma), sim(c, rb, mb), sim(c, ra, mb), sim(c, rb, ma)
+        )
+        terms.append(pair_field_weight(fp, s, rec_prefix, mem_prefix))
+    return terms
 
 
 def field_weight_columns(
@@ -205,13 +223,8 @@ def field_weight_columns(
     per-field decomposition is the review view that explains WHY a pair
     scored where it did (popularized by Splink's waterfall chart).  Same
     Column arithmetic as pair_weight, so Σ breakdown == total exactly."""
-    out: dict[str, Column] = {}
-    for mf in match_fields:
-        lc = F.col(rec_prefix + mf.name)
-        rc = F.col(mem_prefix + mf.name)
-        sim = similarity(mf.comparator, lc, rc)
-        out[mf.name] = field_weight(mf, sim, lc, rc)
-    return out
+    terms = weight_terms(match_fields, (), _sim, rec_prefix, mem_prefix)
+    return {mf.name: t for mf, t in zip(match_fields, terms)}
 
 
 def pair_weight_sql(
@@ -247,12 +260,11 @@ def pair_weight_rescaled(
     Same Column arithmetic as :func:`pair_weight` on the observed terms,
     so the two agree exactly when nothing is blank. Pure JVM expression.
     """
-    terms, obs = [], []
+    terms = weight_terms(match_fields, (), _sim, rec_prefix, mem_prefix)
+    obs = []
     for mf in match_fields:
         lc = F.col(rec_prefix + mf.name)
         rc = F.col(mem_prefix + mf.name)
-        sim = similarity(mf.comparator, lc, rc)
-        terms.append(field_weight(mf, sim, lc, rc))
         blank = (lc.isNull() | (F.trim(lc) == "")) | (
             rc.isNull() | (F.trim(rc) == "")
         )

@@ -19,7 +19,8 @@ metrics, supplied here as driver-side orchestration:
   (not by row) keeps every per-block guardrail — blank flags, size caps,
   star emission, adaptive shard counts — bit-identical to the unsliced
   plan, because a block lives wholly inside one slice; the union over
-  slices is therefore exactly the full pass output;
+  slices is therefore exactly the full pass output. A pass with no block
+  fields (a MinHash canopy) has no key to slice by and commits whole;
 * metrics rows (pass, slice, rows, pairs, wall seconds, partitions)
   append to ``<out>/metrics/`` — the lineage/metrics table. Each committed
   unit adds one JSON-lines ``part-<uuid>.json`` file, written on the
@@ -44,8 +45,8 @@ from bigmatch_utilities_spark.config import MatchConfig
 from bigmatch_utilities_spark.operators.pipeline import (
     MatchResult,
     accept_at,
-    first_pass_wins,
     score_pass,
+    union_passes,
 )
 
 
@@ -196,7 +197,8 @@ class CheckpointedMatch:
         docstring): a crash re-runs only the incomplete slices. The
         result is provably identical to the unsliced run because every
         block — and therefore every candidate pair and every per-block
-        guardrail decision — falls in exactly one slice."""
+        guardrail decision — falls in exactly one slice. A pass with no
+        block fields is committed whole, as in an unsliced run."""
         id_col = id_col or config.id_field.name
         dedupe = mem is None or config.dedupe_single_file
         if mem is None:
@@ -212,7 +214,10 @@ class CheckpointedMatch:
                 df = self.spark.read.parquet(pairs_path)
                 per_pass.append(df.drop("slice") if "slice" in df.columns else df)
                 continue
-            if slices <= 1:
+            # a pass without block fields (a MinHash canopy, say) has no
+            # key to slice by: a hash-mod split would cut its candidate
+            # groups apart, so it commits as one unit
+            if slices <= 1 or not spec.block_fields:
                 t0 = time.time()
                 scored = score_pass(
                     rec, mem, spec, k, id_col, dedupe=dedupe, **pass_kwargs
@@ -278,20 +283,8 @@ class CheckpointedMatch:
             self._write_marker(k, {"pairs": total_pairs, "slices": slices})
             per_pass.append(df)
 
-        # Same slim union as pipeline.run_match: the per-pass parquet keeps
-        # the full carried rec_*/mem_* values (that's what review emitters
-        # and resumes read), but MatchResult.pairs is the decision core in
-        # BOTH modes — one output contract, and the first-pass-wins shuffle
-        # moves ~50 B rows instead of ~500 B.
-        core = None
-        for df in per_pass:
-            slim = df.select(
-                "id_rec", "id_mem", "pass_id", "weight", "is_exact", "decision",
-                # gamma indicator columns (score_pass gamma_fields=...) ride
-                # the slim union so EM reads them off result.pairs directly
-                *[c for c in df.columns if c.startswith("g_")],
-            )
-            core = slim if core is None else core.unionByName(slim)
+        # the per-pass parquet keeps the carried rec_*/mem_* values (review
+        # emitters and resumes read them); result.pairs is the decision core
         return MatchResult.from_pairs(
-            first_pass_wins(core), accept_at(config.accept_threshold)
+            union_passes(per_pass), accept_at(config.accept_threshold)
         )

@@ -3,11 +3,12 @@
 Input schema (BASELINE.json input_hint):
     (repo: string, path: string, commit: string, lang: string, content: string)
 
-This module derives blocking/matching columns from `content` and assembles
-a multi-pass MatchConfig so the generic engine (operators.pipeline +
-operators.closure) does the rest. The pass design mirrors the reference's
-strict-first multi-pass strategy (samplefiles/parmf_new.txt: exact pass →
-looser passes):
+This module derives blocking/matching columns from `content` and declares
+a multi-pass MatchConfig; the generic engine (operators.pipeline +
+operators.closure) does the rest, every pass scored by the same
+score_pass and reduced first-pass-wins. The pass design mirrors the
+reference's strict-first multi-pass strategy (samplefiles/parmf_new.txt:
+exact pass → looser passes):
 
   pass 0  block content_sha                — byte-identical duplicates
   pass 1  block content_sha_nows           — whitespace/comment-insensitive
@@ -16,8 +17,10 @@ looser passes):
           (the distinctive last non-comment line; analogous to the census
           config's precomputed soundex keys) + fuzzy head/tail scoring
   pass 3  MinHash-LSH band keys            — general near-dup canopy
-          (operators.dedup.minhash_candidates supplies candidates; they are
-          scored with the same FS fields as pass 2)
+          (MINHASH_PASS, an ``Lsh`` pass: operators.dedup.minhash_candidates
+          supplies candidates; they are scored with the same FS fields as
+          pass 2). repo_match_config() holds passes 0-2 and
+          repo_linkage_config() appends pass 3.
 
 All derived columns are built-in expressions (sha2 / regexp / split);
 content never crosses into Python except inside the Arrow JW kernel on the
@@ -36,21 +39,21 @@ from bigmatch_utilities_spark.config import (
     BlockingPassSpec,
     CutoffSpec,
     Equi,
-    MatchConfig,
     FieldRef,
+    Lsh,
+    MatchConfig,
     MatchField,
 )
 from bigmatch_utilities_spark.operators.closure import cluster_accepted_pairs
-from bigmatch_utilities_spark.operators.dedup import minhash_candidates
 from bigmatch_utilities_spark.operators.pipeline import (
     MatchResult,
     accept_at,
-    attach_carry,
-    first_pass_wins,
     match_pairs,
     pass_candidates,
+    run_match,
+    score_candidates,
+    union_passes,
 )
-from bigmatch_utilities_spark.operators.scoring import is_exact, pair_weight
 
 ID_COL = "record_id"
 
@@ -161,8 +164,7 @@ def with_tf_adjust(cfg: MatchConfig, names: tuple[str, ...]) -> MatchConfig:
     """Flip ``tf_adjust`` on every match field named in ``names`` across all
     passes of ``cfg`` (jobs/run_match --tf-adjust). Naming a non-exact-
     comparator field raises MatchField's own validation error — loud, not
-    silent. run_repo_linkage's MinHash pass 3 is not part of ``cfg``: it
-    always scores with the plain fuzzy fields."""
+    silent."""
     return replace(
         cfg,
         passes=tuple(
@@ -178,41 +180,38 @@ def with_tf_adjust(cfg: MatchConfig, names: tuple[str, ...]) -> MatchConfig:
     )
 
 
-def _canopy(src, max_bucket, shard_rows, cache_handle) -> DataFrame:
-    """Pass 3's MinHash-LSH candidates over ``content_norm``. b=4 x r=4
-    (same 16 hashes as 8x2, sharply lower false-candidate rate: P(collide)
-    at J=0.3 is 4*0.3^16-ish vs 8*0.3^2 — the candidate volume, and with
-    it the whole pass-3 cost, drops an order of magnitude while true
-    near-dups at J>=0.85 still collide with P >= 0.93)."""
-    return minhash_candidates(
-        src, "content_norm", ID_COL, shingle_k=3, bands=4, rows_per_band=4,
-        max_bucket=max_bucket, shard_rows=shard_rows, cache_handle=cache_handle,
-    )
+#: Pass 3: a MinHash-LSH canopy over ``content_norm``, scored with the
+#: fuzzy fields and decided at 4.0. b=4 x r=4 (same 16 hashes as 8x2,
+#: sharply lower false-candidate rate: P(collide) at J=0.3 is 4*0.3^16-ish
+#: vs 8*0.3^2 — the candidate volume, and with it the whole pass-3 cost,
+#: drops an order of magnitude while true near-dups at J>=0.85 still
+#: collide with P >= 0.93). Buckets above 256 rows are template/boilerplate
+#: canopies, not duplicate evidence: their members' true duplicates are
+#: exact/nows/anchor-pass catches, and 256 keeps the worst bucket ~32k
+#: pairs before sharding. Pairs an exact pass already decided
+#: (content_sha_nows-equal, see pass 2) are not scored again.
+MINHASH_PASS = BlockingPassSpec(
+    block_fields=(),
+    match_fields=_FUZZY_FIELDS,
+    cutoff=CutoffSpec(hi=4.0, lo=-100.0),
+    print_cutoff=CutoffSpec(hi=4.0, lo=-100.0),
+    suppress_equal=("content_sha_nows",),
+    blocker=Lsh("content_norm", shingle_k=3, bands=4, rows_per_band=4, max_bucket=256),
+)
 
 
-def _scored_canopy(cands, src, carry, pass_id) -> DataFrame:
-    """Pass 3's candidates with ``carry`` attached from ``src``, minus the
-    pairs an exact pass already decided (content_sha_nows-equal, see the
-    pass-2 note), weighted with the fuzzy fields and decided at 4.0.
-    Composed here rather than declared as an ``Lsh`` pass of the config: score_pass's emission
-    floor filter is pushed below its weight projection, so through it this
-    pass would evaluate the Jaro-Winkler UDF twice."""
-    pairs3 = attach_carry(cands, src, ID_COL, [*carry, "content_sha_nows"])
-    return (
-        pairs3.filter(
-            F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
-        )
-        .drop("rec_content_sha_nows", "mem_content_sha_nows")
-        .withColumn("weight", pair_weight(_FUZZY_FIELDS))
-        .withColumn("is_exact", is_exact(_FUZZY_FIELDS))
-        .withColumn("pass_id", F.lit(pass_id))
-        .withColumn(
-            "decision",
-            F.when(F.col("weight") >= 4.0, F.lit("match")).otherwise(
-                F.lit("possible")
-            ),
-        )
-    )
+def repo_linkage_config(
+    use_minhash_pass: bool = True, tf_adjust_fields: tuple[str, ...] = ()
+) -> MatchConfig:
+    """The passes :func:`run_repo_linkage` runs: :func:`repo_match_config`'s
+    three, TF-adjusted on ``tf_adjust_fields``, then :data:`MINHASH_PASS`,
+    which always scores with the plain fuzzy fields."""
+    cfg = repo_match_config()
+    if tf_adjust_fields:
+        cfg = with_tf_adjust(cfg, tuple(tf_adjust_fields))
+    if use_minhash_pass:
+        cfg = replace(cfg, passes=(*cfg.passes, MINHASH_PASS))
+    return cfg
 
 
 def run_repo_linkage(
@@ -220,27 +219,13 @@ def run_repo_linkage(
     *,
     use_minhash_pass: bool = True,
     max_block_rows: int | None = 2_000,
-    minhash_max_bucket: int | None = 256,
     shard_rows: int | None = 192,
-    persist: bool = False,
-    cache_handle: list | None = None,
     gamma_fields: tuple | None = None,
-    transform=None,
     tf_adjust_fields: tuple[str, ...] = (),
 ) -> MatchResult:
-    """Full multi-pass linkage over a prepared repo-files DataFrame.
-
-    transform: optional DataFrame -> DataFrame hook applied to the
-    PREPARED frame before any pass runs — the quality-step seam (e.g.
-    jobs/run_match --standardize rewrites match columns through
-    operators.standardize here, so every blocking and scoring pass —
-    including the LSH canopy — sees canonicalized values).
-
-    minhash_max_bucket: LSH buckets above this are template/boilerplate
-    canopies, not duplicate evidence — their members' true duplicates are
-    exact/nows/anchor-pass catches. The cap bounds the canopy pass's pair
-    volume (a 1000-row bucket is 500k pairs in ONE bucket); 256 keeps the
-    worst bucket ~32k pairs pre-shard.
+    """Full multi-pass linkage over a repo-files DataFrame: the
+    :func:`repo_linkage_config` passes over :func:`prepare`'s columns,
+    through ``run_match``.
 
     shard_rows: adaptive hot-block salting target (see operators.blocking):
     fuzzy blocks and LSH buckets bigger than this get their quadratic pair
@@ -248,66 +233,20 @@ def run_repo_linkage(
     property depends on it — without it a handful of boilerplate anchor
     blocks serialize the whole comparator stage onto a few cores.
 
-    cache_handle: receives every frame this run persists (the LSH bands,
-    plus `prepared` when persist=True); callers that materialize the result
-    unpersist them afterwards (see operators.dedup.minhash_candidates), and
-    ``result.pairs`` with them (persisted by MatchResult.from_pairs).
-
     gamma_fields: attach per-pair ``g_<field>`` agreement indicators in the
     scoring stage of every pass (incl. the LSH pass) so EM calibration
     reads them straight off ``result.pairs`` — no second scan
     (operators.pipeline.score_pass)."""
-    prepared = prepare(df)
-    if transform is not None:
-        prepared = transform(prepared)
-    if persist:
-        prepared = prepared.persist()
-        if cache_handle is not None:
-            cache_handle.append(prepared)
-    cfg = repo_match_config()
-    if tf_adjust_fields:
-        cfg = with_tf_adjust(cfg, tuple(tf_adjust_fields))
-    # the equi passes' pairs stay unpersisted: they feed the LSH union below,
-    # and a cached subtree inside that plan would run as its own stage
-    pairs = match_pairs(
-        prepared,
+    return run_match(
+        prepare(df),
         None,
-        cfg,
-        id_col=ID_COL,
+        repo_linkage_config(use_minhash_pass, tf_adjust_fields),
+        ID_COL,
         max_block_rows=max_block_rows,
         shard_rows=shard_rows,
         persist=False,
         gamma_fields=gamma_fields,
     )
-    if not use_minhash_pass:
-        return MatchResult.from_pairs(pairs, accept_at(cfg.accept_threshold))
-
-    # pass 3: MinHash-LSH canopy scored with the plain fuzzy fields
-    carry = [mf.name for mf in _FUZZY_FIELDS]
-    for mf in gamma_fields or ():
-        if mf.name not in carry:
-            carry.append(mf.name)
-    cands = _canopy(prepared, minhash_max_bucket, shard_rows, cache_handle)
-    scored3 = _scored_canopy(cands, prepared, carry, len(cfg.passes))
-    gcols = []
-    if gamma_fields:
-        from bigmatch_utilities_spark.operators.em import gamma_column
-
-        for mf in gamma_fields:
-            scored3 = scored3.withColumn(
-                f"g_{mf.name}",
-                gamma_column(mf, F.col(f"rec_{mf.name}"), F.col(f"mem_{mf.name}")),
-            )
-        gcols = [f"g_{mf.name}" for mf in gamma_fields]
-    combined = first_pass_wins(
-        pairs.unionByName(
-            scored3.select(
-                "id_rec", "id_mem", "pass_id", "weight", "is_exact", "decision",
-                *gcols,
-            )
-        )
-    )
-    return MatchResult.from_pairs(combined, accept_at(cfg.accept_threshold))
 
 
 def run_repo_linkage_delta(
@@ -316,11 +255,7 @@ def run_repo_linkage_delta(
     *,
     use_minhash_pass: bool = True,
     max_block_rows: int | None = 2_000,
-    minhash_max_bucket: int | None = 256,
     shard_rows: int | None = 192,
-    cache_handle: list | None = None,
-    transform=None,
-    tf_adjust_fields: tuple[str, ...] = (),
 ) -> MatchResult:
     """Incremental (nightly-delta) linkage: every pair TOUCHING the delta,
     never an old-old pair — the match stage of "link today's records into
@@ -331,19 +266,18 @@ def run_repo_linkage_delta(
     Decomposition, exact by construction (ids disjoint by the with_record_id
     business-key contract):
 
-    * delta-delta: the ordinary self-dedupe `run_match` over the delta
-      alone — the standing table is never scanned;
+    * delta-delta: the ordinary self-dedupe `run_match` of the three
+      blocked passes over the delta alone — the standing table is never
+      scanned;
     * delta-standing: the same passes in two-file LINKAGE mode (rec=delta,
       mem=standing) — BigMatch's rec/mem shape
       (/root/reference/app/BigMatchParmFile.py REC/MEM file slots); no
       canonicalization is needed because the id sets are disjoint. Each
       pass streams the standing table once against the (typically
-      broadcastable — AQE decides from measured size) delta side. TF
-      value-frequency tables keep reading the MEMORY file, i.e. the
-      standing corpus — the statistically right population;
-    * LSH canopy: band keys over standing ∪ delta, candidates filtered to
-      delta-touching pairs with two map-only broadcast semi/anti joins on
-      the delta id set, scored exactly like run_repo_linkage's pass 3.
+      broadcastable — AQE decides from measured size) delta side;
+    * LSH canopy: :data:`MINHASH_PASS`'s candidates over standing ∪ delta,
+      filtered to delta-touching pairs with two map-only broadcast
+      semi/anti joins on the delta id set, then scored like any pass.
 
     Union + first_pass_wins yields the standard decision sets over the
     delta-touching pair universe.
@@ -365,13 +299,8 @@ def run_repo_linkage_delta(
     """
     prep_d = prepare(delta)
     prep_s = prepare(standing)
-    if transform is not None:
-        prep_d = transform(prep_d)
-        prep_s = transform(prep_s)
 
     cfg = repo_match_config()
-    if tf_adjust_fields:
-        cfg = with_tf_adjust(cfg, tuple(tf_adjust_fields))
     # star emission is a self-join device; in two-file mode the exact-hash
     # passes join delta x standing directly — per delta row the fan-out is
     # the standing block size, bounded by max_block_rows (linear, not
@@ -381,45 +310,42 @@ def run_repo_linkage_delta(
         dedupe_single_file=False,
         passes=tuple(replace(p, blocker=Equi()) for p in cfg.passes),
     )
-
-    dd = match_pairs(
-        prep_d, None, cfg, id_col=ID_COL,
-        max_block_rows=max_block_rows, shard_rows=shard_rows, persist=False,
-    )
-    ds = match_pairs(
-        prep_d, prep_s, cfg_link, id_col=ID_COL,
-        max_block_rows=max_block_rows, shard_rows=shard_rows, persist=False,
-    )
-    core_cols = ["id_rec", "id_mem", "pass_id", "weight", "is_exact", "decision"]
+    kw = dict(max_block_rows=max_block_rows, shard_rows=shard_rows, persist=False)
+    dd = match_pairs(prep_d, None, cfg, ID_COL, **kw)
+    ds = match_pairs(prep_d, prep_s, cfg_link, ID_COL, **kw)
     # canonicalize the linkage run's (delta, standing) orientation to
     # (min id, max id) so first_pass_wins dedupes it against the id-sorted
     # LSH pairs — every scored field comparator is orientation-symmetric
-    ds_core = ds.select(
-        F.least("id_rec", "id_mem").alias("id_rec"),
-        F.greatest("id_rec", "id_mem").alias("id_mem"),
-        *core_cols[2:],
-    )
-    core = dd.select(*core_cols).unionByName(ds_core)
-
+    per_pass = [
+        dd,
+        ds.select(
+            F.least("id_rec", "id_mem").alias("id_rec"),
+            F.greatest("id_rec", "id_mem").alias("id_mem"),
+            "pass_id", "weight", "is_exact", "decision",
+        ),
+    ]
     if use_minhash_pass:
         prep_all = prep_s.unionByName(prep_d)
-        cands = _canopy(prep_all, minhash_max_bucket, shard_rows, cache_handle)
+        cands = pass_candidates(
+            prep_all, prep_all, MINHASH_PASS, ID_COL, dedupe=True, shard_rows=shard_rows
+        )
         # delta-touching only, via two map-only broadcast joins on the
         # delta id set (old-old canopies belong to the batch path)
         d_ids = prep_d.select(F.col(ID_COL).alias("_did"))
         left_hit = cands.join(
-            F.broadcast(d_ids), cands["id_l"] == F.col("_did"), "left_semi"
+            F.broadcast(d_ids), cands["id_rec"] == F.col("_did"), "left_semi"
         )
         right_only = cands.join(
-            F.broadcast(d_ids), cands["id_l"] == F.col("_did"), "left_anti"
-        ).join(F.broadcast(d_ids), cands["id_r"] == F.col("_did"), "left_semi")
-        cands = left_hit.unionByName(right_only)
-        carry = [mf.name for mf in _FUZZY_FIELDS]
-        scored3 = _scored_canopy(cands, prep_all, carry, len(cfg.passes))
-        core = core.unionByName(scored3.select(*core_cols))
-
-    combined = first_pass_wins(core)
-    return MatchResult.from_pairs(combined, accept_at(cfg.accept_threshold))
+            F.broadcast(d_ids), cands["id_rec"] == F.col("_did"), "left_anti"
+        ).join(F.broadcast(d_ids), cands["id_mem"] == F.col("_did"), "left_semi")
+        per_pass.append(
+            score_candidates(
+                left_hit.unionByName(right_only), prep_all, MINHASH_PASS, len(cfg.passes)
+            )
+        )
+    return MatchResult.from_pairs(
+        union_passes(per_pass), accept_at(cfg.accept_threshold)
+    )
 
 
 def count_candidates(
@@ -427,7 +353,6 @@ def count_candidates(
     *,
     use_minhash_pass: bool = True,
     max_block_rows: int | None = 2_000,
-    minhash_max_bucket: int | None = 256,
 ) -> int:
     """Candidate pairs entering the comparator stage across every pass —
     the denominator of the BASELINE candidate-pairs/sec throughput metric.
@@ -435,27 +360,12 @@ def count_candidates(
     blank/suppress filtering), but without the scoring UDFs, so the count
     job is cheap relative to the pipeline it calibrates."""
     prepared = prepare(df)
-    cfg = repo_match_config()
-    total = 0
-    for spec in cfg.passes:
-        total += pass_candidates(
-            prepared,
-            prepared,
-            spec,
-            ID_COL,
-            dedupe=True,
-            max_block_rows=max_block_rows,
+    return sum(
+        pass_candidates(
+            prepared, prepared, spec, ID_COL, dedupe=True, max_block_rows=max_block_rows
         ).count()
-    if use_minhash_pass:
-        caches: list = []
-        cands = _canopy(prepared, minhash_max_bucket, None, caches)
-        pairs3 = attach_carry(cands, prepared, ID_COL, ["content_sha_nows"])
-        total += pairs3.filter(
-            F.col("rec_content_sha_nows") != F.col("mem_content_sha_nows")
-        ).count()
-        for c in caches:
-            c.unpersist()
-    return total
+        for spec in repo_linkage_config(use_minhash_pass).passes
+    )
 
 
 def link_and_cluster(df: DataFrame, **kwargs) -> DataFrame:

@@ -21,13 +21,13 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import SparkSession
 
+from bigmatch_utilities_spark.operators.pipeline import run_match
 from bigmatch_utilities_spark.plans.checkpoint import CheckpointedMatch
 from bigmatch_utilities_spark.plans.tables import read_table
 from bigmatch_utilities_spark.repo_linkage import (
     ID_COL,
     prepare,
-    repo_match_config,
-    run_repo_linkage,
+    repo_linkage_config,
 )
 
 
@@ -133,8 +133,9 @@ def add_match_args(p: argparse.ArgumentParser) -> None:
         "1995; operators/tf_adjust): agreement on a rare value counts for "
         "more. Frequencies are one groupBy over the memory file per field. "
         "Repeatable; the field must use the exact comparator (validated "
-        "loudly). E.g. --tf-adjust anchor_line on the repo config; the "
-        "repo config's MinHash pass 3 scores with the plain fuzzy fields",
+        "loudly). E.g. --tf-adjust anchor_line on the repo config. It "
+        "applies to passes 0-2 only: the MinHash pass 3 always scores with "
+        "the plain fuzzy fields, with or without --checkpoint",
     )
     p.add_argument(
         "--assign",
@@ -206,32 +207,22 @@ def match_stage(spark: SparkSession, args: argparse.Namespace) -> None:
 
         gamma_fields = _FUZZY_FIELDS
 
-    standardize = _standardizer(spark, args.standardize)
-
-    tf_fields = tuple(args.tf_adjust)
+    # one config and one prepared frame for both runners, so a
+    # checkpointed run matches the same pairs as a direct one
+    cfg = repo_linkage_config(
+        use_minhash_pass=not args.no_minhash, tf_adjust_fields=tuple(args.tf_adjust)
+    )
+    prepared = _standardizer(spark, args.standardize)(prepare(df))
+    kw = dict(
+        id_col=ID_COL, max_block_rows=args.max_block_rows, shard_rows=shard_rows,
+        gamma_fields=gamma_fields,
+    )
     if args.checkpoint:
-        from bigmatch_utilities_spark.repo_linkage import with_tf_adjust
-
-        cfg = repo_match_config()
-        if tf_fields:
-            cfg = with_tf_adjust(cfg, tf_fields)
-        ckpt = CheckpointedMatch(spark, args.checkpoint)
-        result = ckpt.run(
-            standardize(prepare(df)), None, cfg, id_col=ID_COL,
-            slices=args.slices,
-            max_block_rows=args.max_block_rows, shard_rows=shard_rows,
-            gamma_fields=gamma_fields,
+        result = CheckpointedMatch(spark, args.checkpoint).run(
+            prepared, None, cfg, slices=args.slices, **kw
         )
     else:
-        result = run_repo_linkage(
-            df,
-            use_minhash_pass=not args.no_minhash,
-            max_block_rows=args.max_block_rows,
-            shard_rows=shard_rows,
-            gamma_fields=gamma_fields,
-            transform=standardize,
-            tf_adjust_fields=tf_fields,
-        )
+        result = run_match(prepared, None, cfg, persist=False, **kw)
 
     # every frame below reads the persisted pairs; release them once both
     # are written (run_pipeline goes on in the same session)

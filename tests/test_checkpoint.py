@@ -7,75 +7,9 @@ import os
 
 import pytest
 
-from bigmatch_utilities_spark.config import parse_datadict, parse_parmf
-from bigmatch_utilities_spark.operators.pipeline import normalize, run_match
+from bigmatch_utilities_spark.operators.pipeline import run_match
 from bigmatch_utilities_spark.plans.checkpoint import CheckpointedMatch
-from bigmatch_utilities_spark.sources.fixed_width import read_fixed_width
-
-# A two-file person pair in the FIXTURES.md F2 layouts: the memory file is
-# the same people with perturbations (TOM vs THOMAS, blank dob/race) and
-# no mname column. Rows 12 and 20 are blank in every field, so the
-# blank-flagged keys drop them; JOHNSON and PARKS blocks hold two record
-# rows each, and the (gender, race) pass shares keys across many rows.
-REC_LAYOUT = [("fname", 14), ("mname", 12), ("lname", 14), ("race", 2),
-              ("gender", 2), ("dob", 8), ("id", 4)]
-MEM_LAYOUT = [("fname", 14), ("lname", 14), ("race", 2), ("gender", 2),
-              ("dob", 8), ("id", 4)]
-REC_ROWS = [
-    ("THOMAS", "A", "EDISON", "W", "M", "18470211", 1),
-    ("ALBERT", "", "EINSTEIN", "W", "M", "18790314", 2),
-    ("MARIE", "S", "CURIE", "W", "F", "18671107", 3),
-    ("ISAAC", "", "NEWTON", "W", "M", "16430104", 4),
-    ("ADA", "K", "LOVELACE", "W", "F", "18151210", 5),
-    ("ROSA", "L", "PARKS", "B", "F", "19130204", 6),
-    ("NIKOLA", "", "TESLA", "W", "M", "18560710", 7),
-    ("GRACE", "B", "HOPPER", "W", "F", "19061209", 8),
-    ("ALAN", "M", "TURING", "W", "M", "19120623", 9),
-    ("KATHERINE", "", "JOHNSON", "B", "F", "19180826", 10),
-    ("MARY", "", "JOHNSON", "B", "F", "19200101", 11),
-    ("", "", "", "", "", "", 12),
-    ("JOHN", "Q", "PARKS", "W", "M", "19130204", 13),
-]
-MEM_ROWS = [
-    ("TOM", "EDISON", "W", "M", "18470211", 1),
-    ("ALBERT", "EINSTEIN", "", "M", "", 2),
-    ("MARIE", "CURIE", "W", "F", "18671107", 3),
-    ("ISAAC", "NEWTON", "W", "M", "16430104", 4),
-    ("ADA", "LOVELACE", "W", "F", "18151210", 5),
-    ("ROSA", "PARKS", "B", "F", "19130204", 6),
-    ("NICOLA", "TESLA", "W", "M", "18560710", 7),
-    ("GRACE", "HOPPER", "", "F", "19061209", 8),
-    ("KATHRINE", "JOHNSON", "B", "F", "19180826", 10),
-    ("", "", "", "", "", 20),
-]
-# parmf grammar: pass/field counts, then per pass one row per blocking
-# field (name, rec start/width, mem start/width, blank flag), one per match
-# field (..., 0, comparator, m, u), cutoff hi/lo, print cutoff hi/lo; last
-# the unique id row.
-PARMF = """\
-3 1 1 0 1 0 0 56 44
-1 1 2
-3 2 3
-lname 27 14 15 14 1
-fname 1 14 1 14 0 uo 0.90 0.05
-dob 45 8 33 8 0 c 0.95 0.02
-gender 43 2 31 2 0 c 0.98 0.50
-8.0 0.0
-8.0 -10.0
-dob 45 8 33 8 1
-fname 1 14 1 14 0 uo 0.90 0.05
-lname 27 14 15 14 0 uo 0.95 0.05
-8.0 0.0
-8.0 -10.0
-gender 43 2 31 2 0
-race 41 2 29 2 1
-fname 1 14 1 14 0 uo 0.90 0.05
-lname 27 14 15 14 0 uo 0.95 0.05
-dob 45 8 33 8 0 c 0.95 0.02
-8.0 0.0
-8.0 -10.0
-id 53 4 41 4
-"""
+from tests.person_f2 import read_person_f2, write_person_f2
 
 # The schema Spark's JSON writer gave the metrics table, read back with
 # spark.read.json (inference sorts the columns by name).
@@ -85,42 +19,9 @@ METRICS_SCHEMA = (
 )
 
 
-def _write_side(d, name, layout, rows):
-    lines = []
-    for row in rows:
-        lines.append("".join(
-            (str(v).rjust(w) if n == "id" else str(v).ljust(w))
-            for (n, w), v in zip(layout, row)
-        ))
-    (d / f"{name}.txt").write_text("\n".join(lines) + "\n")
-    dd = ["column_name,start_pos,width,unique_id_yn,matchfield_yn,"
-          "bigmatch_type,data_format,comments"]
-    pos = 1
-    for n, w in layout:
-        dd.append(f"{n},{pos},{w},{'y' if n == 'id' else ''},y,,,")
-        pos += w
-    (d / f"{name}.dict.csv").write_text("\n".join(dd) + "\n")
-
-
 @pytest.fixture(scope="module")
 def person_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("person_f2")
-    _write_side(d, "rec", REC_LAYOUT, REC_ROWS)
-    _write_side(d, "mem", MEM_LAYOUT, MEM_ROWS)
-    (d / "parmf.txt").write_text(PARMF)
-    return d
-
-
-def _inputs(spark, d):
-    cfg = parse_parmf((d / "parmf.txt").read_text())
-    rec, mem = (
-        normalize(read_fixed_width(
-            spark, str(d / f"{side}.txt"),
-            parse_datadict((d / f"{side}.dict.csv").read_text()),
-        ))
-        for side in ("rec", "mem")
-    )
-    return cfg, rec, mem
+    return write_person_f2(tmp_path_factory.mktemp("person_f2"))
 
 
 def _pairs_set(result):
@@ -131,7 +32,7 @@ def _pairs_set(result):
 
 
 def test_checkpointed_run_matches_direct(spark, person_dir, tmp_path):
-    cfg, rec, mem = _inputs(spark, person_dir)
+    cfg, rec, mem = read_person_f2(spark, person_dir)
     direct = _pairs_set(run_match(rec, mem, cfg, id_col="id"))
     ckpt = CheckpointedMatch(spark, str(tmp_path / "run1"))
     resumable = _pairs_set(ckpt.run(rec, mem, cfg, id_col="id"))
@@ -139,7 +40,7 @@ def test_checkpointed_run_matches_direct(spark, person_dir, tmp_path):
 
 
 def test_resume_skips_completed_passes(spark, person_dir, tmp_path):
-    cfg, rec, mem = _inputs(spark, person_dir)
+    cfg, rec, mem = read_person_f2(spark, person_dir)
     out = str(tmp_path / "run2")
 
     ckpt = CheckpointedMatch(spark, out)
@@ -176,7 +77,7 @@ def test_file_uri_markers_via_hadoop_fs(spark, person_dir, tmp_path):
     """Markers must work through the Hadoop FileSystem layer (file: URI —
     the same code path hdfs:/s3a: paths take on a cluster), not driver
     os.* calls."""
-    cfg, rec, mem = _inputs(spark, person_dir)
+    cfg, rec, mem = read_person_f2(spark, person_dir)
     out = f"file://{tmp_path}/run_uri"
     ckpt = CheckpointedMatch(spark, out)
     full = _pairs_set(ckpt.run(rec, mem, cfg, id_col="id"))
@@ -195,7 +96,7 @@ def test_sliced_run_matches_direct(spark, person_dir, tmp_path):
     """slices>1 shards each pass by blocking-key hash; the union over
     slices must be exactly the unsliced result (blocks never straddle a
     slice, so pairs and per-block guardrails are identical)."""
-    cfg, rec, mem = _inputs(spark, person_dir)
+    cfg, rec, mem = read_person_f2(spark, person_dir)
     direct = _pairs_set(run_match(rec, mem, cfg, id_col="id"))
     ckpt = CheckpointedMatch(spark, str(tmp_path / "run_sliced"))
     sliced = _pairs_set(ckpt.run(rec, mem, cfg, id_col="id", slices=3))
@@ -216,7 +117,7 @@ def test_mid_pass_failure_resumes_at_slice_granularity(
     score_pass spy) and still produce the exact full result."""
     from bigmatch_utilities_spark.plans import checkpoint as ck_mod
 
-    cfg, rec, mem = _inputs(spark, person_dir)
+    cfg, rec, mem = read_person_f2(spark, person_dir)
     out = str(tmp_path / "run_kill")
     slices = 4
     real_score = ck_mod.score_pass
@@ -265,7 +166,7 @@ def test_resume_with_different_slice_count_fails_fast(
     pairs and drop others)."""
     from bigmatch_utilities_spark.plans import checkpoint as ck_mod
 
-    cfg, rec, mem = _inputs(spark, person_dir)
+    cfg, rec, mem = read_person_f2(spark, person_dir)
     out = str(tmp_path / "run_slicemix")
     real_score = ck_mod.score_pass
     calls = {"n": 0}
@@ -293,7 +194,7 @@ def test_resume_with_different_slice_count_fails_fast(
 
 
 def test_metrics_table(spark, person_dir, tmp_path):
-    cfg, rec, mem = _inputs(spark, person_dir)
+    cfg, rec, mem = read_person_f2(spark, person_dir)
     out = tmp_path / "run3"
     ckpt = CheckpointedMatch(spark, str(out))
     ckpt.run(rec, mem, cfg, id_col="id")

@@ -248,22 +248,57 @@ def test_repo_linkage_delta_splits_match_legacy(repo_input):
     result.pairs.unpersist()
 
 
-def test_repo_linkage_delta_scores_each_fuzzy_pass_once(spark):
-    """The delta run's hand-composed MinHash pass evaluates its
-    Jaro-Winkler UDF in one plan node. Its candidates' weight is at least
-    about -10.9, so a ``weight >= -100`` floor there dropped no row but
-    doubled the node: 6 ``ArrowEvalPython`` nodes, now 5 (the two scored
-    passes of delta-delta and delta-standing keep two each, one per
-    score_pass emission floor). Pairs and good pairs are unchanged."""
-    from bigmatch_utilities_spark.repo_linkage import run_repo_linkage_delta
+def _arrow_nodes(df) -> int:
+    """``ArrowEvalPython`` nodes of ``df``'s executed plan, a cached
+    relation's plan included (run ``df`` first: AQE plans lazily)."""
+    names = _node_names(df._jdf.queryExecution().executedPlan(), True)
+    return sum("ArrowEvalPython" in n for n in names)
+
+
+def _repo_seed41(spark):
     from bigmatch_utilities_spark.synthdata import repo_files_df
 
-    df = spark.createDataFrame(repo_files_df(spark, seed=41, n_clusters=60).toPandas())
+    return spark.createDataFrame(
+        repo_files_df(spark, seed=41, n_clusters=60).toPandas()
+    )
+
+
+def test_repo_linkage_delta_scores_each_fuzzy_pass_once(spark):
+    """Each fuzzy pass of the delta run evaluates its Jaro-Winkler UDF in
+    one plan node, under its emission floor: delta-delta pass 2,
+    delta-standing pass 2 and the MinHash pass."""
+    from bigmatch_utilities_spark.repo_linkage import run_repo_linkage_delta
+
+    df = _repo_seed41(spark)
     delta = df.filter(F.crc32("path") % 5 == 0)
     standing = df.filter(F.crc32("path") % 5 != 0)
     result = run_repo_linkage_delta(delta, standing, use_minhash_pass=True)
     assert result.pairs.count() == 38
     assert result.good_pairs().count() == 34
-    names = _node_names(result.pairs._jdf.queryExecution().executedPlan(), True)
-    assert sum("ArrowEvalPython" in n for n in names) == 5, names
+    assert _arrow_nodes(result.pairs) == 3
     result.pairs.unpersist()
+
+
+def test_repo_linkage_scores_each_fuzzy_pass_once(spark):
+    """run_repo_linkage's fuzzy passes 2 and 3 each evaluate the
+    Jaro-Winkler UDF in one plan node, under their emission floors."""
+    from bigmatch_utilities_spark.repo_linkage import run_repo_linkage
+
+    result = run_repo_linkage(_repo_seed41(spark), use_minhash_pass=True)
+    assert result.pairs.count() == 121
+    assert result.good_pairs().count() == 112
+    assert _arrow_nodes(result.pairs) == 2
+    result.pairs.unpersist()
+
+
+def test_parmf_passes_score_each_comparison_once(spark, tmp_path):
+    """Every pass of the F2 3-pass parmf scores its Jaro-Winkler fields in
+    one plan node, though its floor filter and decision read the weight."""
+    from bigmatch_utilities_spark.operators.pipeline import score_pass
+    from tests.person_f2 import read_person_f2, write_person_f2
+
+    cfg, rec, mem = read_person_f2(spark, write_person_f2(tmp_path))
+    for k, spec in enumerate(cfg.passes):
+        scored = score_pass(rec, mem, spec, k, "id")
+        scored.collect()
+        assert _arrow_nodes(scored) == 1, k

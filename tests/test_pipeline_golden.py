@@ -1,18 +1,22 @@
-"""Golden end-to-end: the reference's 3-pass gs config over its two
-famous-names sample files, asserted pair-for-pair and weight-for-weight
-against an independent pandas oracle implementing the same published
-semantics (Fellegi-Sunter weights over blocked candidate pairs)."""
+"""Golden end-to-end: a 3-pass parmf over a two-file person pair in the
+reference's fixed-width layouts (tests/person_f2.py), asserted
+pair-for-pair and weight-for-weight against an independent pandas oracle
+implementing the same published semantics (Fellegi-Sunter weights over
+blocked candidate pairs, the print-cutoff emission floor, first-pass-wins)."""
 
 from __future__ import annotations
 
 import math
-from pathlib import Path
 
 import pytest
 
-from bigmatch_utilities_spark.config import parse_datadict, parse_parmf
-from bigmatch_utilities_spark.operators.pipeline import normalize, run_match
-from bigmatch_utilities_spark.sources.fixed_width import read_fixed_width
+from bigmatch_utilities_spark.operators.pipeline import run_match
+from tests.person_f2 import (
+    BELOW_FLOOR,
+    PLANTED_LINKS,
+    read_person_f2,
+    write_person_f2,
+)
 from tests.test_comparators import scalar_jaro_winkler
 from tests.test_match_result import (
     assert_matches_legacy,
@@ -20,13 +24,7 @@ from tests.test_match_result import (
     legacy_sets,
 )
 
-GS = "/root/reference/samplefiles/gs"
 PARTIAL_FLOOR = 0.75
-
-
-def _load(spark, data, dct):
-    fields = parse_datadict(Path(f"{GS}/{dct}").read_text())
-    return read_fixed_width(spark, f"{GS}/{data}", fields)
 
 
 def _oracle_weight(match_fields, rrow, mrow):
@@ -35,8 +33,8 @@ def _oracle_weight(match_fields, rrow, mrow):
         a, b = rrow[mf.name].strip(), mrow[mf.name].strip()
         if not a or not b:
             continue
-        assert mf.comparator == "uo"
-        sim = scalar_jaro_winkler(a, b)
+        assert mf.comparator in ("uo", "c")
+        sim = scalar_jaro_winkler(a, b) if mf.comparator == "uo" else float(a == b)
         agr = math.log2(mf.m / mf.u)
         dis = math.log2((1 - mf.m) / (1 - mf.u))
         if sim >= 1.0:
@@ -49,8 +47,11 @@ def _oracle_weight(match_fields, rrow, mrow):
 
 
 def _oracle_pairs(cfg, rec_rows, mem_rows):
-    """Independent multi-pass blocked join + FS scoring + first-pass-wins."""
+    """Independent multi-pass blocked join + FS scoring + first-pass-wins.
+    Returns the kept pairs and the blocked pairs the emission floor
+    dropped in every pass that blocked them."""
     best: dict[tuple[str, str], tuple[int, float, bool]] = {}
+    dropped: set[tuple[str, str]] = set()
     for k, spec in enumerate(cfg.passes):
         for rrow in rec_rows:
             for mrow in mem_rows:
@@ -66,31 +67,32 @@ def _oracle_pairs(cfg, rec_rows, mem_rows):
                 if not ok:
                     continue
                 w = _oracle_weight(spec.match_fields, rrow, mrow)
-                if w < min(spec.cutoff.lo, spec.print_cutoff.lo):
-                    continue
                 key = (rrow["id"], mrow["id"])
+                if w < min(spec.cutoff.lo, spec.print_cutoff.lo):
+                    dropped.add(key)
+                    continue
                 if key not in best:
                     exact = all(
                         rrow[mf.name] == mrow[mf.name] for mf in spec.match_fields
                     )
                     best[key] = (k, w, exact)
-    return best
+    return best, dropped - set(best)
 
 
 @pytest.fixture(scope="module")
-def golden(spark):
-    cfg = parse_parmf(Path(f"{GS}/parmf.txt").read_text())
-    rec = normalize(_load(spark, "sample_fixedwidth.txt", "sample_fixed_width.dict.csv"))
-    mem = normalize(_load(spark, "sample2_fixedwidth.txt", "sample2_fixed_width.dict.csv"))
+def golden(spark, tmp_path_factory):
+    cfg, rec, mem = read_person_f2(
+        spark, write_person_f2(tmp_path_factory.mktemp("golden_f2"))
+    )
     result = run_match(rec, mem, cfg, id_col="id")
     rec_rows = [r.asDict() for r in rec.collect()]
     mem_rows = [r.asDict() for r in mem.collect()]
-    oracle = _oracle_pairs(cfg, rec_rows, mem_rows)
-    return cfg, result, oracle
+    oracle, dropped = _oracle_pairs(cfg, rec_rows, mem_rows)
+    return cfg, result, oracle, dropped
 
 
 def test_pair_set_matches_oracle(golden):
-    _, result, oracle = golden
+    _, result, oracle, dropped = golden
     got = {
         (r["id_rec"], r["id_mem"]): (r["pass_id"], r["weight"], r["is_exact"])
         for r in result.pairs.collect()
@@ -101,22 +103,21 @@ def test_pair_set_matches_oracle(golden):
         assert gk == k, (key, gk, k)
         assert gw == pytest.approx(w, abs=1e-9), (key, gw, w)
         assert gx == exact, (key, gx, exact)
+    # the floor check is exercised: a blocked pair scored below the floor
+    assert BELOW_FLOOR in dropped
 
 
 def test_known_links_found(golden):
-    """Hand-checkable links from the fixture design (FORD, PITCHER, ...)."""
-    _, result, _ = golden
+    """Every link planted in the fixture (the same person in both files,
+    perturbed) is found; the below-floor pair is not emitted."""
+    _, result, _, _ = golden
     got = {(r["id_rec"], r["id_mem"]) for r in result.pairs.collect()}
-    # rec id 2 HENRY FORD ↔ mem id 2 HENRY FORD (pass 2 blocks fname+lname)
-    assert ("2", "2") in got
-    # rec 3 MOLLY PITCHER 17541013 ↔ mem 3 (same dob) — pass 1 exact block
-    assert ("3", "3") in got
-    # GEORGE WASHINGTON 17320222: rec 18 ↔ mem 19
-    assert ("18", "19") in got
+    assert PLANTED_LINKS <= got
+    assert BELOW_FLOOR not in got
 
 
 def test_exact_accepted_possible_partition(golden):
-    cfg, result, _ = golden
+    cfg, result, _, _ = golden
     pairs = result.pairs.collect()
     exact = {(r["id_rec"], r["id_mem"]) for r in result.exact.collect()}
     accepted = {(r["id_rec"], r["id_mem"]) for r in result.accepted.collect()}
@@ -124,16 +125,21 @@ def test_exact_accepted_possible_partition(golden):
     assert not (exact & accepted) and not (accepted & possible) and not (exact & possible)
     for r in pairs:
         key = (r["id_rec"], r["id_mem"])
-        if r["is_exact"]:
+        if r["decision"] == "below":
+            # emitted above the print floor but under the cutoff: no set
+            assert key not in exact | accepted | possible
+        elif r["is_exact"]:
             assert key in exact
-        elif r["weight"] >= cfg.accept_threshold:
+        elif r["decision"] == "match" or r["weight"] >= cfg.accept_threshold:
             assert key in accepted
         else:
             assert key in possible
+    assert exact and accepted and possible
+    assert any(r["decision"] == "below" for r in pairs)
 
 
 def test_good_pairs_schema(golden):
-    cfg, result, _ = golden
+    cfg, result, _, _ = golden
     gp = result.good_pairs()
     assert gp.columns == ["pass_id", "weight", "id_rec", "id_mem"]
     assert gp.count() == result.exact.count() + result.accepted.count()
@@ -147,12 +153,16 @@ def test_manual_accepts_override_threshold(golden, spark):
     not."""
     from bigmatch_utilities_spark.operators.pipeline import apply_manual_accepts
 
-    cfg, result, _ = golden
+    cfg, result, _, _ = golden
     # pick a review threshold strictly between two distinct non-exact
     # weights so the fixture yields both a default-unchecked pair (below)
-    # and a default-checked pair (above) to override.
+    # and a default-checked pair (above) to override. Only pairs at or
+    # over the cutoff are reviewable: a 'below' decision is never accepted.
     rows = sorted(
-        (r for r in result.pairs.collect() if not r["is_exact"]),
+        (
+            r for r in result.pairs.collect()
+            if not r["is_exact"] and r["decision"] != "below"
+        ),
         key=lambda r: r["weight"],
     )
     below = rows[0]

@@ -10,7 +10,8 @@ CLUSTERS=${CLUSTERS:-2000000}
 REPEATS=${REPEATS:-2}
 OUT=${OUT:-/tmp/scaling_gated.json}
 LOG=${LOG:-/tmp/scaling_gated.log}
-cd /root/repo
+# run the checkout this script lives in, wherever it is called from
+cd "$(dirname "$(readlink -f "$0")")/.." || exit 1
 # bounded lifetime: ~3h of polling, then give up — the loop must never
 # outlive the build session (its probe bursts would pollute the round
 # driver's own bench run)
