@@ -1658,7 +1658,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             match_fields=(),
         )
         return candidate_pairs(
-            d, d, spec, "doc_id", dedupe=True, carry_rec=[], carry_mem=[]
+            d, d, spec, "doc_id", dedupe=True, carry=[]
         )
 
     q["ph_soundex_blocking"] = ph
@@ -3265,7 +3265,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             match_fields=(),
         )
         return candidate_pairs(
-            d, d, spec, "doc_id", dedupe=True, carry_rec=[], carry_mem=[]
+            d, d, spec, "doc_id", dedupe=True, carry=[]
         )
 
     q["nv_nysiis_blocking"] = nv

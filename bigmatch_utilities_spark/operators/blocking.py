@@ -11,17 +11,18 @@ The reference's join semantics (parmf blocking rows,
 * single-file dedupe mode (parmf row-1 digit 6, app/BlockingPass.py:1043-47)
   self-joins one table; pairs are canonicalized id_l < id_r;
 * the memory file is the broadcast side (held wholly in RAM by the
-  reference engine, README.md:3) — Spark generalizes it: broadcast when
-  small, shuffle hash/sort-merge with AQE skew splitting when not.
+  reference engine, README.md:3) — Spark generalizes it: AQE converts the
+  join to a broadcast join from the measured size of the memory side when
+  it is small, and shuffles with AQE skew splitting when it is not.
 
 Scale notes (100 TB design point): the join keys are the pass's blocking
 fields, so the shuffle is a single exchange on the composite key; hot keys
 are handled by (a) blank suppression, (b) AQE skew-join splitting, and (c)
-the explicit `salt` option that replicates the memory side S ways —
-preserving exact join semantics — when one side is broadcast-sized per salt
-but the key histogram is pathological. `max_block_rows` is the guardrail
-that drops degenerate blocks instead of letting one key produce 10^10
-pairs.
+`shard_rows`, adaptive salting that splits only a hot block's rec rows
+over ceil(n / shard_rows) shards and replicates its mem rows once per
+shard — preserving exact join semantics. `max_block_rows` is the
+guardrail that drops degenerate blocks instead of letting one key produce
+10^10 pairs.
 
 A two-file pass with guardrails costs one small aggregate before its join:
 one ``groupBy`` over a tagged union of both sides' block keys gives each
@@ -74,7 +75,7 @@ def derive_block_keys(
     """Materialize derived blocking keys (soundex / prefix kinds) as real
     columns and rewrite the spec to reference them as exact keys.
 
-    Map-side projection only — after this, every join/broadcast/salt/skew
+    Map-side projection only — after this, every join/shard/skew
     path in this module treats phonetic and prefix keys exactly like raw
     columns (one exchange on the derived composite key). blank_flag
     filtering applies to the DERIVED key: a name whose soundex is '' (no
@@ -110,21 +111,21 @@ _DROP = 0  # either side over max_block_rows: the block yields no pairs
 
 def _special_blocks(
     r: DataFrame,
-    m: DataFrame | None,
+    m: DataFrame,
     keys: list[str],
     *,
     max_block_rows: int | None,
     shard_rows: int | None,
     star_block_rows: int | None,
 ) -> DataFrame | None:
-    """The blocks a blocked join must treat specially, from ONE aggregate
-    over both sides' block keys; None when no guardrail is set.
+    """The blocks a two-file blocked join must treat specially, from ONE
+    aggregate over both sides' block keys; None when no guardrail is set.
 
     Returns ``keys`` plus ``_nsh``: `_STAR` for a block whose rec side is
     over ``star_block_rows``, else `_DROP` for a block with either side
     over ``max_block_rows``, else ceil(n_rec / shard_rows) for a block whose
     rec side is over ``shard_rows``. Every other block is absent (one
-    shard, kept). ``m=None`` is a self-join: both sides are ``r``.
+    shard, kept).
 
     Per-side caps would give the same pairs: a block capped on one side
     only has no partner rows on the other, so the inner join drops it
@@ -135,17 +136,13 @@ def _special_blocks(
     flagged, so it is as small as the broadcasts it replaces."""
     if not (max_block_rows or shard_rows or star_block_rows):
         return None
-    if m is None:
-        stats = r.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n_rec"))
-        n_rec = n_mem = F.col("_n_rec")
-    else:
-        tagged = r.select(*keys, F.lit(1).alias("_is_rec")).unionByName(
-            m.select(*keys, F.lit(0).alias("_is_rec"))
-        )
-        stats = tagged.groupBy(*keys).agg(
-            F.sum("_is_rec").alias("_n_rec"), F.count(F.lit(1)).alias("_n")
-        )
-        n_rec, n_mem = F.col("_n_rec"), F.col("_n") - F.col("_n_rec")
+    tagged = r.select(*keys, F.lit(1).alias("_is_rec")).unionByName(
+        m.select(*keys, F.lit(0).alias("_is_rec"))
+    )
+    stats = tagged.groupBy(*keys).agg(
+        F.sum("_is_rec").alias("_n_rec"), F.count(F.lit(1)).alias("_n")
+    )
+    n_rec, n_mem = F.col("_n_rec"), F.col("_n") - F.col("_n_rec")
     rules = []
     if star_block_rows:
         rules.append((n_rec > star_block_rows, F.lit(_STAR)))
@@ -208,14 +205,12 @@ def _self_candidate_pairs(
     dedupe: bool,
     shard_rows: int | None,
     max_block_rows: int | None,
-    star_block_rows: int | None,
-    carry_rec: list[str],
-    carry_mem: list[str],
+    carry: list[str],
 ) -> DataFrame:
     """Self-join candidate generation with ONE window computation.
 
     The block-size cap, the star/clique split, and the adaptive shard
-    count all need per-block statistics. The generic path computes them
+    count all need per-block statistics. The two-file plan computes them
     with a groupBy job and a broadcast materialization per pass — extra
     stage barriers of pure latency on the critical path. Here a
     single ``Window.partitionBy(block keys)`` attaches the block count AND
@@ -226,15 +221,15 @@ def _self_candidate_pairs(
     from pyspark.sql.window import Window
 
     keys = [bf.name for bf in spec.block_fields]
-    carry_all = list(dict.fromkeys([*carry_rec, *carry_mem]))
+    star_block_rows = spec.blocker.star_block_rows
     r0 = apply_blank_flags(df, spec)
     w = Window.partitionBy(*keys)
     # id first in the struct → min(struct) is the min-id row of the block
     packed = F.struct(
         F.col(id_col).alias("_id"),
-        *[F.col(c).alias(f"_c_{c}") for c in carry_all],
+        *[F.col(c).alias(f"_c_{c}") for c in carry],
     )
-    cols = list(dict.fromkeys([id_col, *keys, *carry_all]))
+    cols = list(dict.fromkeys([id_col, *keys, *carry]))
     rw = (
         r0.select(*cols)
         .withColumn("_bn", F.count(F.lit(1)).over(w))
@@ -248,8 +243,8 @@ def _self_candidate_pairs(
             F.col("_rep._id").alias("id_rec"),
             F.col(id_col).alias("id_mem"),
             *[F.col(k).alias(f"bk_{k}") for k in keys],
-            *[F.col(f"_rep._c_{c}").alias(f"rec_{c}") for c in carry_rec],
-            *[F.col(c).alias(f"mem_{c}") for c in carry_mem],
+            *[F.col(f"_rep._c_{c}").alias(f"rec_{c}") for c in carry],
+            *[F.col(c).alias(f"mem_{c}") for c in carry],
         )
         rw = rw.filter(F.col("_bn") <= star_block_rows)
     if max_block_rows:
@@ -262,7 +257,7 @@ def _self_candidate_pairs(
     r = rw.select(
         F.col(id_col).alias("id_rec"),
         *[F.col(k).alias(f"bk_{k}") for k in keys],
-        *[F.col(c).alias(f"rec_{c}") for c in carry_rec],
+        *[F.col(c).alias(f"rec_{c}") for c in carry],
         *(
             [
                 F.pmod(F.xxhash64(F.col(id_col)), F.col("_nsh"))
@@ -276,7 +271,7 @@ def _self_candidate_pairs(
     m = rw.select(
         F.col(id_col).alias("id_mem"),
         *[F.col(k).alias(f"bk_{k}_m") for k in keys],
-        *[F.col(c).alias(f"mem_{c}") for c in carry_mem],
+        *[F.col(c).alias(f"mem_{c}") for c in carry],
         *(
             [F.explode(F.sequence(F.lit(0), F.col("_nsh") - 1)).alias("_shard_m")]
             if shard_rows
@@ -305,29 +300,26 @@ def candidate_pairs(
     id_col: str,
     *,
     dedupe: bool = False,
-    broadcast_mem: bool | None = None,
-    salt: int | None = None,
     shard_rows: int | None = None,
     max_block_rows: int | None = None,
-    star_block_rows: int | None = None,
-    carry_rec: list[str] | None = None,
-    carry_mem: list[str] | None = None,
+    carry: list[str] | None = None,
 ) -> DataFrame:
     """One blocking pass → candidate pair DataFrame.
 
     Output columns: ``id_rec``, ``id_mem``, one ``bk_<field>`` per blocking
-    field, and ``rec_<f>`` / ``mem_<f>`` for every carried field (default:
-    the pass's match fields).
+    field, and ``rec_<f>`` / ``mem_<f>`` for every ``carry`` field
+    (default: the pass's match fields).
 
     dedupe=True self-join keeps only ``id_rec < id_mem`` — halves the pair
     space and drops self-pairs (reference single-file mode).
 
-    star_block_rows (self-join only): blocks larger than this emit the
-    min-id star instead of the quadratic clique — see `star_pairs`. The
-    AQE skew-join splitter can NOT save a same-key mega-block here: its
-    trigger is shuffle-partition *bytes*, and a 10^4-row identical-hash
-    block is only ~MBs in, exploding to 10^8 rows *out* — the explosion has
-    to be prevented before the join, not re-planned after it.
+    ``spec.blocker.star_block_rows`` (dedupe passes only): blocks larger
+    than this emit the min-id star instead of the quadratic clique — see
+    `star_pairs`. The AQE skew-join splitter can NOT save a same-key
+    mega-block here: its trigger is shuffle-partition *bytes*, and a
+    10^4-row identical-hash block is only ~MBs in, exploding to 10^8 rows
+    *out* — the explosion has to be prevented before the join, not
+    re-planned after it.
 
     shard_rows: adaptive output-skew salting for passes that must score the
     full clique (fuzzy passes, where key agreement does NOT imply a match
@@ -343,13 +335,14 @@ def candidate_pairs(
     max_block_rows: blocks with more rows than this on EITHER side are
     dropped (the guardrail against a degenerate key producing 10^10 pairs).
 
-    Plan: a self-join without ``salt`` or a forced broadcast takes the
-    one-window plan of `_self_candidate_pairs`. Every other pass — two
-    files, uniform salting, a broadcast memory file — reads all of its
-    guardrail statistics (star split, cap, shard counts) from ONE
-    aggregate over both sides' block keys (`_special_blocks`), broadcasts
-    the few special blocks once and left-joins them to each side, then
-    runs the blocked join. A pass with no guardrail set is the bare join.
+    Plan: chosen from the input alone. One frame joined to itself
+    (``rec is mem``) takes the one-window plan of `_self_candidate_pairs`.
+    Two frames read all of their guardrail statistics (star split, cap,
+    shard counts) from ONE aggregate over both sides' block keys
+    (`_special_blocks`), broadcast the few special blocks once and
+    left-join them to each side, then run the blocked join; a pass with no
+    guardrail set is the bare join. Neither plan hints a broadcast: AQE
+    broadcasts a small memory side from its measured size.
     """
     if any(bf.key_kind != "exact" for bf in spec.block_fields):
         same = rec is mem
@@ -358,18 +351,12 @@ def candidate_pairs(
         rec, mem, spec = rec2, mem2, spec2
 
     keys = [bf.name for bf in spec.block_fields]
-    carry_rec = carry_rec if carry_rec is not None else [mf.name for mf in spec.match_fields]
-    carry_mem = carry_mem if carry_mem is not None else [mf.name for mf in spec.match_fields]
-    if star_block_rows is None:
-        star_block_rows = spec.blocker.star_block_rows
+    carry = carry if carry is not None else [mf.name for mf in spec.match_fields]
+    star_block_rows = spec.blocker.star_block_rows
     if star_block_rows and not dedupe:
         raise ValueError("star_block_rows requires a self-join (dedupe) pass")
 
-    same_side = rec is mem
-    if same_side and not (salt and salt > 1) and broadcast_mem is not True:
-        # the windowed one-shuffle plan (see _self_candidate_pairs);
-        # the generic path below remains for two-file runs, explicit
-        # uniform salting, and forced-broadcast memory files.
+    if rec is mem:
         return _self_candidate_pairs(
             rec,
             spec,
@@ -377,20 +364,16 @@ def candidate_pairs(
             dedupe=dedupe,
             shard_rows=shard_rows,
             max_block_rows=max_block_rows,
-            star_block_rows=star_block_rows,
-            carry_rec=carry_rec,
-            carry_mem=carry_mem,
+            carry=carry,
         )
-    salted = bool(salt and salt > 1)
-    sharded = bool(shard_rows) and not salted
     r = apply_blank_flags(rec, spec)
-    m = None if same_side else apply_blank_flags(mem, spec)
+    m = apply_blank_flags(mem, spec)
     special = _special_blocks(
         r,
         m,
         keys,
         max_block_rows=max_block_rows,
-        shard_rows=shard_rows if sharded else None,
+        shard_rows=shard_rows,
         star_block_rows=star_block_rows,
     )
     star = None
@@ -405,20 +388,18 @@ def candidate_pairs(
             # a star block is linearized, not capped: the cap only
             # guards the quadratic path
             r_big = r.filter(F.col("_nsh") == _STAR).drop("_nsh")
-            star = star_pairs(r_big, keys, id_col, carry_rec)
+            star = star_pairs(r_big, keys, id_col, carry)
         r = r.filter(live)
-        if m is not None:
-            m = m.join(special, on=keys, how="left").filter(live)
-    if m is None:
-        m = r  # self-join: one blank filter and one statistics pass, not two
+        m = m.join(special, on=keys, how="left").filter(live)
 
+    sharded = bool(shard_rows)
     nsh = F.coalesce(F.col("_nsh"), F.lit(1))
     rec_id = [F.col(id_col).alias("id_rec")]
     rec_bk = [F.col(k).alias(f"bk_{k}") for k in keys]
     r = r.select(
         # a sharded pass's output leads with its block keys
         *(rec_bk + rec_id if sharded else rec_id + rec_bk),
-        *[F.col(c).alias(f"rec_{c}") for c in carry_rec],
+        *[F.col(c).alias(f"rec_{c}") for c in carry],
         *(
             [F.pmod(F.xxhash64(F.col(id_col)), nsh).cast("int").alias("_shard")]
             if sharded
@@ -428,7 +409,7 @@ def candidate_pairs(
     m = m.select(
         F.col(id_col).alias("id_mem"),
         *[F.col(k).alias(f"bk_{k}_m") for k in keys],
-        *[F.col(c).alias(f"mem_{c}") for c in carry_mem],
+        *[F.col(c).alias(f"mem_{c}") for c in carry],
         *(
             [F.explode(F.sequence(F.lit(0), nsh - 1)).alias("_shard_m")]
             if sharded
@@ -438,30 +419,16 @@ def candidate_pairs(
 
     cond = [F.col(f"bk_{k}") == F.col(f"bk_{k}_m") for k in keys]
     drop = [f"bk_{k}_m" for k in keys]
-
-    if salted:
-        # Uniform salting: split the rec side into `salt` shards by a hash
-        # of its id, replicate the WHOLE mem side once per shard. Simple but
-        # pays `salt`-fold replication on every block; prefer shard_rows.
-        r = r.withColumn("_salt", F.pmod(F.xxhash64(F.col("id_rec")), F.lit(salt)))
-        m = m.crossJoin(
-            m.sparkSession.range(salt).select(F.col("id").cast("int").alias("_salt_m"))
-        )
-        cond = cond + [F.col("_salt") == F.col("_salt_m")]
-        drop += ["_salt", "_salt_m"]
-    elif sharded:
+    if sharded:
         # Adaptive output-skew salting: a hot block's rec rows split over
         # its shards by id hash and its mem rows are replicated once per
         # shard, so the join key becomes (block key, shard). Replication
         # cost: a hot block of n rows adds n·ceil(n/t) mem rows — linear
-        # in its PAIR output / t, never a blind `salt`-fold; cold blocks
-        # (one shard) pay nothing.
+        # in its PAIR output / t; cold blocks (one shard) pay nothing.
         cond = cond + [F.col("_shard") == F.col("_shard_m")]
         drop += ["_shard", "_shard_m"]
 
-    mm = F.broadcast(m) if broadcast_mem else m
-    joined = r.join(mm, on=cond, how="inner")
-
+    joined = r.join(m, on=cond, how="inner")
     if dedupe:
         joined = joined.filter(F.col("id_rec") < F.col("id_mem"))
 

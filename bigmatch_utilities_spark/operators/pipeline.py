@@ -79,8 +79,6 @@ def pass_candidates(
     id_col: str,
     *,
     dedupe: bool = False,
-    broadcast_mem: bool | None = None,
-    salt: int | None = None,
     shard_rows: int | None = None,
     max_block_rows: int | None = None,
     extra_carry: list[str] | None = None,
@@ -108,20 +106,18 @@ def pass_candidates(
     blocker = spec.blocker
     if isinstance(blocker, Equi):
         pairs = candidate_pairs(
-            rec, mem, spec, id_col, dedupe=dedupe, broadcast_mem=broadcast_mem,
-            salt=salt, shard_rows=shard_rows, max_block_rows=max_block_rows,
-            carry_rec=carry_sup, carry_mem=carry_sup,
+            rec, mem, spec, id_col, dedupe=dedupe, shard_rows=shard_rows,
+            max_block_rows=max_block_rows, carry=carry_sup,
         )
     elif isinstance(blocker, Snm):
         from bigmatch_utilities_spark.operators.sorted_neighborhood import (
             snm_candidate_pairs,
         )
 
-        # salt/shard/star/broadcast are equi-join knobs; SNM's pair volume
-        # is (window-1)·N by construction, so none of them apply.
+        # shard/cap/star are equi-join knobs; SNM's pair volume is
+        # (window-1)·N by construction, so none of them apply.
         pairs = snm_candidate_pairs(
-            rec, mem, spec, id_col, dedupe=dedupe,
-            carry_rec=carry_sup, carry_mem=carry_sup,
+            rec, mem, spec, id_col, dedupe=dedupe, carry=carry_sup
         )
     else:
         if not dedupe or mem is not rec:
@@ -155,8 +151,6 @@ def score_pass(
     id_col: str,
     *,
     dedupe: bool = False,
-    broadcast_mem: bool | None = None,
-    salt: int | None = None,
     shard_rows: int | None = None,
     max_block_rows: int | None = None,
     gamma_fields: tuple | None = None,
@@ -174,8 +168,8 @@ def score_pass(
     projection, inlining the weight into it, and run every comparator
     twice, in two nodes."""
     pairs = pass_candidates(
-        rec, mem, spec, id_col, dedupe=dedupe, broadcast_mem=broadcast_mem,
-        salt=salt, shard_rows=shard_rows, max_block_rows=max_block_rows,
+        rec, mem, spec, id_col, dedupe=dedupe, shard_rows=shard_rows,
+        max_block_rows=max_block_rows,
         extra_carry=[mf.name for mf in gamma_fields or ()],
     )
     return score_candidates(pairs, mem, spec, pass_id, gamma_fields)
@@ -448,8 +442,6 @@ def match_pairs(
     config: MatchConfig,
     id_col: str | None = None,
     *,
-    broadcast_mem: bool | None = None,
-    salt: int | None = None,
     shard_rows: int | None = None,
     max_block_rows: int | None = None,
     persist: bool = True,
@@ -486,8 +478,6 @@ def match_pairs(
             k,
             id_col,
             dedupe=dedupe,
-            broadcast_mem=broadcast_mem,
-            salt=salt,
             shard_rows=shard_rows,
             max_block_rows=max_block_rows,
             gamma_fields=gamma_fields,

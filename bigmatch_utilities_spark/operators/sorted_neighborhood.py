@@ -141,12 +141,11 @@ def snm_candidate_pairs(
     id_col: str,
     *,
     dedupe: bool = False,
-    carry_rec: list[str] | None = None,
-    carry_mem: list[str] | None = None,
-    num_partitions: int | None = None,
+    carry: list[str] | None = None,
 ) -> DataFrame:
     """SNM as a blocking PASS: same output contract as
-    blocking.candidate_pairs — (id_rec, id_mem, rec_<f>, mem_<f>) — so a
+    blocking.candidate_pairs — (id_rec, id_mem, rec_<f>, mem_<f>) for every
+    ``carry`` field (default: the pass's match fields) — so a
     ``BlockingPassSpec(blocker=Snm(...))`` drops into the multi-pass pipeline
     (scoring, cutoffs, first-pass-wins) unchanged.
 
@@ -156,12 +155,16 @@ def snm_candidate_pairs(
     order). Carry columns ride the ranked frame, so the neighbor join
     carries both sides' values directly — no re-join against the source.
 
-    Self/dedupe mode canonicalizes id_rec < id_mem with each side's
-    carried values following its id (same pair-key canon as equi passes,
-    required for cross-pass first-pass-wins). Two-file mode interleaves
-    both files in one sort (classic multi-source SNM) and emits only
-    cross-file neighbors; note the window then spans the MERGED order, so
-    the effective per-file reach is smaller than in dedupe mode.
+    One plan serves both modes: the inputs are tagged with a source
+    ``_src`` (0 rec, 1 mem), ranked on (keys, _src, _id), and every row
+    is joined to its w-1 successors in rank. Self/dedupe mode ranks the
+    one input (``_src`` constant, so the order is (keys, id)) and
+    canonicalizes id_rec < id_mem with each side's carried values
+    following its id (same pair-key canon as equi passes, required for
+    cross-pass first-pass-wins). Two-file mode interleaves both files in
+    one sort (classic multi-source SNM) and emits only cross-file
+    neighbors; note the window then spans the MERGED order, so the
+    effective per-file reach is smaller than in dedupe mode.
     """
     from bigmatch_utilities_spark.operators.blocking import (
         apply_blank_flags,
@@ -172,63 +175,22 @@ def snm_candidate_pairs(
     same = mem is None or mem is rec
     if same and not dedupe:
         raise ValueError("single-input SNM pass requires dedupe=True")
-    default_carry = [mf.name for mf in spec.match_fields]
-    carry = list(
-        dict.fromkeys(
-            (carry_rec if carry_rec is not None else default_carry)
-            + (carry_mem if carry_mem is not None else default_carry)
-        )
-    )
+    carry = carry if carry is not None else [mf.name for mf in spec.match_fields]
 
     rec2, spec2 = derive_block_keys(rec, spec)
     keys = [bf.name for bf in spec2.block_fields]
     cols = list(dict.fromkeys([*keys, *carry]))
 
-    if same:
-        d = apply_blank_flags(rec2, spec2).select(id_col, *cols)
-        ranked = with_global_rank(
-            d, [*keys, id_col], num_partitions=num_partitions
+    def side(df: DataFrame, src: int) -> DataFrame:
+        return apply_blank_flags(df, spec2).select(
+            F.lit(src).alias("_src"), F.col(id_col).alias("_id"), *cols
         )
-        a = ranked.select(
-            F.col(id_col).alias("_id_a"),
-            F.col("rank").alias("_rk"),
-            *[F.col(c).alias(f"_a_{c}") for c in carry],
-        )
-        left = a.withColumn(
-            "_d", F.explode(F.sequence(F.lit(1), F.lit(window - 1)))
-        ).withColumn("_rk_b", F.col("_rk") + F.col("_d"))
-        b = ranked.select(
-            F.col(id_col).alias("_id_b"),
-            F.col("rank").alias("_rk_b"),
-            *[F.col(c).alias(f"_b_{c}") for c in carry],
-        )
-        j = left.join(b, "_rk_b")
-        lo_first = F.col("_id_a") < F.col("_id_b")
-        sel = [
-            F.when(lo_first, F.col("_id_a")).otherwise(F.col("_id_b")).alias("id_rec"),
-            F.when(lo_first, F.col("_id_b")).otherwise(F.col("_id_a")).alias("id_mem"),
-        ]
-        for c in carry:
-            sel.append(
-                F.when(lo_first, F.col(f"_a_{c}")).otherwise(F.col(f"_b_{c}")).alias(f"rec_{c}")
-            )
-            sel.append(
-                F.when(lo_first, F.col(f"_b_{c}")).otherwise(F.col(f"_a_{c}")).alias(f"mem_{c}")
-            )
-        return j.select(*sel)
 
-    mem2 = derive_block_keys(mem, spec)[0]
-    r = apply_blank_flags(rec2, spec2).select(
-        F.lit(0).alias("_src"), F.col(id_col).alias("_id"), *cols
-    )
-    m = apply_blank_flags(mem2, spec2).select(
-        F.lit(1).alias("_src"), F.col(id_col).alias("_id"), *cols
-    )
-    u = r.unionByName(m)
+    u = side(rec2, 0)
+    if not same:
+        u = u.unionByName(side(derive_block_keys(mem, spec)[0], 1))
     # total order: keys, then (_src, _id) — unique across both files
-    ranked = with_global_rank(
-        u, [*keys, "_src", "_id"], num_partitions=num_partitions
-    )
+    ranked = with_global_rank(u, [*keys, "_src", "_id"])
     a = ranked.select(
         F.col("_src").alias("_src_a"),
         F.col("_id").alias("_id_a"),
@@ -244,8 +206,12 @@ def snm_candidate_pairs(
         F.col("rank").alias("_rk_b"),
         *[F.col(c).alias(f"_b_{c}") for c in carry],
     )
-    j = left.join(b, "_rk_b").filter(F.col("_src_a") != F.col("_src_b"))
-    rec_is_a = F.col("_src_a") == 0
+    j = left.join(b, "_rk_b")
+    if same:
+        rec_is_a = F.col("_id_a") < F.col("_id_b")
+    else:
+        j = j.filter(F.col("_src_a") != F.col("_src_b"))
+        rec_is_a = F.col("_src_a") == 0
     sel = [
         F.when(rec_is_a, F.col("_id_a")).otherwise(F.col("_id_b")).alias("id_rec"),
         F.when(rec_is_a, F.col("_id_b")).otherwise(F.col("_id_a")).alias("id_mem"),

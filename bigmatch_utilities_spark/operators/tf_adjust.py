@@ -41,13 +41,18 @@ TF_FLOOR = 1e-9
 def tf_table(df: DataFrame, col: str) -> DataFrame:
     """Per-value frequency share of ``col`` in ``df``: (value, tf).
 
-    One map-side-combined aggregation; blanks/nulls excluded (they score 0
-    in the weight layer, never an agreement).
+    One map-side-combined aggregation per value, divided by a one-row
+    total-count aggregate cross-joined in the plan — lazy, so building a
+    pass runs no Spark job. Blanks/nulls are excluded (they score 0 in the
+    weight layer, never an agreement).
     """
     clean = df.filter(F.col(col).isNotNull() & (F.trim(F.col(col)) != ""))
-    n = clean.count()
-    return clean.groupBy(F.col(col).alias("value")).agg(
-        (F.count("*") / F.lit(float(n))).alias("tf")
+    total = clean.agg(F.count(F.lit(1)).cast("double").alias("_tf_n"))
+    return (
+        clean.groupBy(F.col(col).alias("value"))
+        .agg(F.count("*").alias("_tf_c"))
+        .crossJoin(total)
+        .select("value", (F.col("_tf_c") / F.col("_tf_n")).alias("tf"))
     )
 
 

@@ -182,6 +182,37 @@ class CheckpointedMatch:
         self._append_metrics(rows)
         return n_pairs
 
+    def _slice_of(self, pass_id: int, spec, slices: int, pairs_path: str):
+        """The slice of a row in a sliced pass: a blocking-key hash mod
+        ``slices``, so both join sides are restricted to the same slice of
+        the key space. NULL-safe: blank/absent keys hash via the ''
+        coalesce, and blank_flag rows are dropped inside score_pass exactly
+        as in the unsliced plan.
+
+        The hash-mod layout is only resumable at the SAME slice count: a
+        sidecar written before the first slice pins it, and a resume with
+        a different ``slices`` fails fast instead of silently
+        skipping/duplicating blocks whose shard assignment moved."""
+        sidecar = f"{self.out}/markers/pass_{pass_id:02d}_slices.json"
+        pinned = self._read_json(sidecar)
+        if pinned is None:
+            self._write_json(sidecar, {"slices": int(slices)})
+        elif int(pinned["slices"]) != int(slices):
+            raise ValueError(
+                f"pass {pass_id}: resuming with slices={slices}, but this "
+                f"pass's existing slice markers were written with "
+                f"slices={pinned['slices']} — the blocking-key "
+                "hash-mod layout differs, so completed slices would "
+                "not line up. Resume with the original value, or "
+                f"delete {pairs_path} and {self.out}/markers/"
+                f"pass_{pass_id:02d}* to restart the pass."
+            )
+        key_cols = [
+            F.coalesce(F.col(bf.name).cast("string"), F.lit(""))
+            for bf in spec.block_fields
+        ]
+        return F.pmod(F.xxhash64(*key_cols), F.lit(slices))
+
     # -- the resumable run ------------------------------------------------
     def run(
         self,
@@ -198,7 +229,12 @@ class CheckpointedMatch:
         result is provably identical to the unsliced run because every
         block — and therefore every candidate pair and every per-block
         guardrail decision — falls in exactly one slice. A pass with no
-        block fields is committed whole, as in an unsliced run."""
+        block fields is committed whole, as in an unsliced run.
+
+        An unsliced pass is one unit and a sliced pass is `slices` units;
+        every unit takes the same path: score, write, re-read, record its
+        metrics, write its marker. A sliced pass's own marker then totals
+        its slice markers' ``pairs``."""
         id_col = id_col or config.id_field.name
         dedupe = mem is None or config.dedupe_single_file
         if mem is None:
@@ -217,70 +253,39 @@ class CheckpointedMatch:
             # a pass without block fields (a MinHash canopy, say) has no
             # key to slice by: a hash-mod split would cut its candidate
             # groups apart, so it commits as one unit
-            if slices <= 1 or not spec.block_fields:
-                t0 = time.time()
-                scored = score_pass(
-                    rec, mem, spec, k, id_col, dedupe=dedupe, **pass_kwargs
-                )
-                scored.write.mode("overwrite").parquet(pairs_path)
-                df = self.spark.read.parquet(pairs_path)
-                n_pairs = self._record_unit(df, k, None, time.time() - t0)
-                self._write_marker(k, {"pairs": n_pairs, "wall_s": time.time() - t0})
-                per_pass.append(df)
-                continue
+            sliced = slices > 1 and bool(spec.block_fields)
+            if not sliced:
+                units = [(None, rec, mem, pairs_path)]
+            else:
+                slice_of = self._slice_of(k, spec, slices, pairs_path)
+                units = []
+                for s in range(slices):
+                    rec_s = rec.filter(slice_of == s)
+                    mem_s = rec_s if mem is rec else mem.filter(slice_of == s)
+                    units.append((s, rec_s, mem_s, f"{pairs_path}/slice={s:02d}"))
 
-            # blocking-key hash shard: both join sides restricted to the
-            # same slice of the key space. NULL-safe: blank/absent keys
-            # hash via the '' coalesce, and blank_flag rows are dropped
-            # inside score_pass exactly as in the unsliced plan.
-            key_cols = [
-                F.coalesce(F.col(bf.name).cast("string"), F.lit(""))
-                for bf in spec.block_fields
-            ]
-            # The hash-mod layout is only resumable at the SAME slice
-            # count: a sidecar written before the first slice pins it, and
-            # a resume with a different --slices fails fast instead of
-            # silently skipping/duplicating blocks whose shard assignment
-            # moved (ADVICE r3).
-            slices_sidecar = f"{self.out}/markers/pass_{k:02d}_slices.json"
-            pinned = self._read_json(slices_sidecar)
-            if pinned is None:
-                self._write_json(slices_sidecar, {"slices": int(slices)})
-            elif int(pinned["slices"]) != int(slices):
-                raise ValueError(
-                    f"pass {k}: resuming with slices={slices}, but this "
-                    f"pass's existing slice markers were written with "
-                    f"slices={pinned['slices']} — the blocking-key "
-                    "hash-mod layout differs, so completed slices would "
-                    "not line up. Resume with the original value, or "
-                    f"delete {pairs_path} and {self.out}/markers/"
-                    f"pass_{k:02d}* to restart the pass."
-                )
-            slice_of = F.pmod(F.xxhash64(*key_cols), F.lit(slices))
             total_pairs = 0
-            for s in range(slices):
-                slice_path = f"{pairs_path}/slice={s:02d}"
-                if self.slice_complete(k, s):
+            for s, rec_u, mem_u, path in units:
+                if s is not None and self.slice_complete(k, s):
+                    total_pairs += self._read_json(self._marker_path(k, s))["pairs"]
                     continue
                 t0 = time.time()
-                rec_s = rec.filter(slice_of == s)
-                mem_s = rec_s if mem is rec else mem.filter(slice_of == s)
                 scored = score_pass(
-                    rec_s, mem_s, spec, k, id_col, dedupe=dedupe, **pass_kwargs
+                    rec_u, mem_u, spec, k, id_col, dedupe=dedupe, **pass_kwargs
                 )
-                scored.write.mode("overwrite").parquet(slice_path)
-                df_s = self.spark.read.parquet(slice_path)
-                n = self._record_unit(df_s, k, s, time.time() - t0)
-                self._write_marker(
-                    k,
-                    {"pairs": n, "wall_s": time.time() - t0, "slices": int(slices)},
-                    slice_id=s,
-                )
-            # pass marker after every slice committed: pass_complete stays
-            # the fast whole-pass check on later resumes.
-            df = self.spark.read.parquet(pairs_path).drop("slice")
-            total_pairs = df.count()
-            self._write_marker(k, {"pairs": total_pairs, "slices": slices})
+                scored.write.mode("overwrite").parquet(path)
+                df = self.spark.read.parquet(path)
+                n = self._record_unit(df, k, s, time.time() - t0)
+                marker = {"pairs": n, "wall_s": time.time() - t0}
+                if s is not None:
+                    marker["slices"] = int(slices)
+                self._write_marker(k, marker, slice_id=s)
+                total_pairs += n
+            if sliced:
+                # pass marker after every slice committed: pass_complete
+                # stays the fast whole-pass check on later resumes.
+                self._write_marker(k, {"pairs": total_pairs, "slices": slices})
+                df = self.spark.read.parquet(pairs_path).drop("slice")
             per_pass.append(df)
 
         # the per-pass parquet keeps the carried rec_*/mem_* values (review

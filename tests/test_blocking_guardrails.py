@@ -122,10 +122,6 @@ KEY_K_NOFLAG = BlockingPassSpec(
                      id="two-keys-capped"),
         pytest.param(KEY_K_NOFLAG, ["k"], [], {"max_block_rows": 6}, False,
                      id="blank-flag-zero"),
-        pytest.param(KEY_K, ["k"], ["k"], {"salt": 3, "max_block_rows": 6}, True,
-                     id="salted-capped"),
-        pytest.param(KEY_K, ["k"], ["k"], {"broadcast_mem": True, "shard_rows": 2},
-                     False, id="broadcast-mem-sharded"),
     ],
 )
 @pytest.mark.parametrize("dedupe", [False, True], ids=["link", "dedupe"])
@@ -198,3 +194,16 @@ def test_two_file_plan_has_one_block_statistics_aggregate(frames):
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("HashAggregate(") == 2, final
     assert "ReusedExchange" in final, final
+
+
+def test_small_memory_file_is_broadcast_without_a_hint(frames):
+    """SURVEY J5, the memory file held in RAM: a bare two-file pass hints
+    no broadcast, and AQE broadcasts the small side from its measured
+    size, so the executed plan runs a broadcast hash join."""
+    rec, mem = frames
+    pairs = candidate_pairs(rec, mem, KEY_K, "id")
+    assert "broadcast" not in pairs._jdf.queryExecution().logical().toString()
+    pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin" in final, final

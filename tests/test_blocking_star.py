@@ -4,10 +4,16 @@ cannot catch same-key output explosion)."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+from dataclasses import replace
 
-from bigmatch_utilities_spark.config import BlockField, BlockingPassSpec, MatchField
+import pytest
+
+from bigmatch_utilities_spark.config import (
+    BlockField,
+    BlockingPassSpec,
+    Equi,
+    MatchField,
+)
 from bigmatch_utilities_spark.operators.blocking import candidate_pairs
 from bigmatch_utilities_spark.operators.closure import connected_components
 
@@ -15,6 +21,8 @@ SPEC = BlockingPassSpec(
     block_fields=(BlockField(name="k"),),
     match_fields=(MatchField(name="v", comparator="c", m=0.9, u=0.1),),
 )
+#: SPEC with star emission for blocks over 10 rows
+STAR = replace(SPEC, blocker=Equi(star_block_rows=10))
 
 
 @pytest.fixture(scope="module")
@@ -27,9 +35,7 @@ def blocks(spark):
 
 
 def test_star_linearizes_mega_block(blocks):
-    pairs = candidate_pairs(
-        blocks, blocks, SPEC, "id", dedupe=True, star_block_rows=10
-    ).toPandas()
+    pairs = candidate_pairs(blocks, blocks, STAR, "id", dedupe=True).toPandas()
     hot = pairs[pairs.bk_k == "hot"]
     cold = pairs[pairs.bk_k == "cold"]
     assert len(hot) == 39  # star: n-1, not n(n-1)/2 = 780
@@ -41,9 +47,7 @@ def test_star_linearizes_mega_block(blocks):
 
 def test_star_is_closure_equivalent(blocks):
     full = candidate_pairs(blocks, blocks, SPEC, "id", dedupe=True)
-    star = candidate_pairs(
-        blocks, blocks, SPEC, "id", dedupe=True, star_block_rows=10
-    )
+    star = candidate_pairs(blocks, blocks, STAR, "id", dedupe=True)
 
     def clusters(pairs):
         cc = connected_components(pairs, src="id_rec", dst="id_mem").toPandas()
@@ -54,7 +58,7 @@ def test_star_is_closure_equivalent(blocks):
 
 def test_star_requires_self_join(blocks):
     with pytest.raises(ValueError, match="self-join"):
-        candidate_pairs(blocks, blocks, SPEC, "id", dedupe=False, star_block_rows=10)
+        candidate_pairs(blocks, blocks, STAR, "id", dedupe=False)
 
 
 def _pair_set(df):
@@ -64,33 +68,37 @@ def _pair_set(df):
 
 def test_windowed_path_matches_generic_path(blocks):
     """The one-window self-join plan must emit EXACTLY the pairs of the
-    generic (groupBy + broadcast) path under every combination of the
-    star / cap / shard knobs. `blocks.alias('m')` forces same-data,
-    different-object frames so candidate_pairs takes the generic path."""
-    other = blocks.alias("m")  # rec is not mem -> generic path
-    for kwargs in (
-        {},
-        {"star_block_rows": 10},
-        {"max_block_rows": 35},
-        {"shard_rows": 7},
-        {"star_block_rows": 10, "max_block_rows": 35},
+    two-frame plan (one block-statistics aggregate, then a broadcast)
+    under every combination of the star / cap / shard knobs.
+    `blocks.alias('m')` is the same data in a different frame object, so
+    candidate_pairs takes the two-frame plan."""
+    other = blocks.alias("m")  # rec is not mem -> two-frame plan
+    for spec, kwargs in (
+        (SPEC, {}),
+        (STAR, {}),
+        (SPEC, {"max_block_rows": 35}),
+        (SPEC, {"shard_rows": 7}),
+        (STAR, {"max_block_rows": 35}),
+        (STAR, {"shard_rows": 3}),
     ):
-        windowed = candidate_pairs(
-            blocks, blocks, SPEC, "id", dedupe=True, **kwargs
-        )
-        if "star_block_rows" in kwargs:
-            # star needs a self-join; compare against the windowed plan
-            # with sharding off instead of the generic path
-            alt = candidate_pairs(
-                blocks, blocks, SPEC, "id", dedupe=True,
-                shard_rows=3, **kwargs,
-            )
-            assert _pair_set(windowed) == _pair_set(alt), kwargs
-            continue
-        generic = candidate_pairs(
-            blocks, other, SPEC, "id", dedupe=True, **kwargs
-        )
-        assert _pair_set(windowed) == _pair_set(generic), kwargs
+        windowed = candidate_pairs(blocks, blocks, spec, "id", dedupe=True, **kwargs)
+        two_frame = candidate_pairs(blocks, other, spec, "id", dedupe=True, **kwargs)
+        assert _pair_set(windowed) == _pair_set(two_frame), (spec.blocker, kwargs)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_plan_is_chosen_by_input(blocks):
+    """One frame joined to itself runs the window plan; two frames run
+    the block-statistics aggregate plan, whatever the guardrails."""
+    other = blocks.alias("m")
+    for spec, kwargs in ((SPEC, {"max_block_rows": 35}), (STAR, {"shard_rows": 3})):
+        self_plan = _plan(candidate_pairs(blocks, blocks, spec, "id", dedupe=True, **kwargs))
+        two_plan = _plan(candidate_pairs(blocks, other, spec, "id", dedupe=True, **kwargs))
+        assert "Window [" in self_plan and "Aggregate [" not in self_plan
+        assert "Aggregate [" in two_plan and "Window [" not in two_plan
 
 
 def test_shard_rows_preserves_pairs(blocks):

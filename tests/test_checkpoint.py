@@ -92,6 +92,17 @@ def test_file_uri_markers_via_hadoop_fs(spark, person_dir, tmp_path):
     assert _pairs_set(resumed) == full
 
 
+def _check_slice_totals(spark, ckpt, n_passes, slices):
+    """Each sliced pass's marker totals its slice markers' ``pairs``,
+    which count the rows the pass committed."""
+    for k in range(n_passes):
+        parts = [
+            ckpt._read_json(ckpt._marker_path(k, s))["pairs"] for s in range(slices)
+        ]
+        rows = spark.read.parquet(f"{ckpt.out}/pairs/pass={k:02d}").count()
+        assert ckpt.read_marker(k)["pairs"] == sum(parts) == rows, k
+
+
 def test_sliced_run_matches_direct(spark, person_dir, tmp_path):
     """slices>1 shards each pass by blocking-key hash; the union over
     slices must be exactly the unsliced result (blocks never straddle a
@@ -107,6 +118,7 @@ def test_sliced_run_matches_direct(spark, person_dir, tmp_path):
         for k in range(len(cfg.passes))
         for s in range(3)
     )
+    _check_slice_totals(spark, ckpt, len(cfg.passes), 3)
 
 
 def test_mid_pass_failure_resumes_at_slice_granularity(
@@ -155,6 +167,8 @@ def test_mid_pass_failure_resumes_at_slice_granularity(
     assert counting["n"] == slices * len(cfg.passes) - 2  # no duplicated work
     direct = _pairs_set(run_match(rec, mem, cfg, id_col="id"))
     assert _pairs_set(resumed) == direct
+    # pass 0's total counts the two slices committed before the failure
+    _check_slice_totals(spark, CheckpointedMatch(spark, out), len(cfg.passes), slices)
 
 
 def test_resume_with_different_slice_count_fails_fast(

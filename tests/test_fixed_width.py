@@ -1,8 +1,7 @@
-"""Fixed-width source/sink tests over the reference's own sample files."""
+"""Fixed-width source/sink tests over the F2 person pair
+(tests/person_f2.py, the FIXTURES.md F2 layouts)."""
 
 from __future__ import annotations
-
-from pathlib import Path
 
 from bigmatch_utilities_spark.config import parse_datadict
 from bigmatch_utilities_spark.sources.fixed_width import (
@@ -11,41 +10,43 @@ from bigmatch_utilities_spark.sources.fixed_width import (
     read_fixed_width,
     write_fixed_width,
 )
-
-GS = "/root/reference/samplefiles/gs"
-
-
-def _fields(dict_path: str):
-    return parse_datadict(Path(dict_path).read_text())
+from tests.person_f2 import MEM_ROWS, REC_ROWS, write_person_f2
 
 
-def test_read_rec_sample(spark):
-    fields = _fields(f"{GS}/sample_fixed_width.dict.csv")
-    df = read_fixed_width(spark, f"{GS}/sample_fixedwidth.txt", fields)
+def _read(spark, d, side):
+    """(fields, frame) of the F2 ``side`` file ('rec' or 'mem') in ``d``."""
+    fields = parse_datadict((d / f"{side}.dict.csv").read_text())
+    return fields, read_fixed_width(spark, str(d / f"{side}.txt"), fields)
+
+
+def test_read_rec_sample(spark, tmp_path):
+    _, df = _read(spark, write_person_f2(tmp_path), "rec")
     rows = {r["id"]: r for r in df.collect()}
-    assert len(rows) == 35
+    assert len(rows) == len(REC_ROWS) == 14
     r1 = rows["1"]
     assert r1["fname"] == "THOMAS"
-    assert r1["mname"] == "ALVA"
+    assert r1["mname"] == "A"
     assert r1["lname"] == "EDISON"
-    assert r1["race"] == "W" and r1["gender"] == "M" and r1["dob"] == "19660607"
+    assert r1["race"] == "W" and r1["gender"] == "M" and r1["dob"] == "18470211"
+    # a row blank in every field reads back blank, not shifted
+    assert all(rows["12"][c] == "" for c in ("fname", "lname", "dob", "race"))
 
 
-def test_read_mem_sample_blanks(spark):
-    fields = _fields(f"{GS}/sample2_fixed_width.dict.csv")
-    df = read_fixed_width(spark, f"{GS}/sample2_fixedwidth.txt", fields)
+def test_read_mem_sample_blanks(spark, tmp_path):
+    _, df = _read(spark, write_person_f2(tmp_path), "mem")
     rows = {r["id"]: r for r in df.collect()}
-    assert len(rows) == 37
-    # perturbations: TOM vs THOMAS, blank dob/race (blanks normalize to '')
+    assert len(rows) == len(MEM_ROWS) == 10
+    assert "mname" not in df.columns
+    # perturbations: TOM vs THOMAS, blank dob/race (blanks read as '')
     r1 = rows["1"]
     assert r1["fname"] == "TOM" and r1["lname"] == "EDISON"
-    assert r1["dob"] == "" and r1["race"] == "W"
-    assert rows["2"]["race"] == ""
+    assert r1["dob"] == "18470211" and r1["race"] == "W"
+    r2 = rows["2"]
+    assert r2["fname"] == "ALBERT" and r2["dob"] == "" and r2["race"] == ""
 
 
 def test_write_round_trip(spark, tmp_path):
-    fields = _fields(f"{GS}/sample_fixed_width.dict.csv")
-    df = read_fixed_width(spark, f"{GS}/sample_fixedwidth.txt", fields)
+    fields, df = _read(spark, write_person_f2(tmp_path), "rec")
     out = str(tmp_path / "out_fw")
     write_fixed_width(df, out, fields)
     again = read_fixed_width(spark, out, fields)

@@ -87,7 +87,7 @@ def test_nysiis_block_kind_candidate_pairs_fast_plan(spark):
         ),
         match_fields=(),
     )
-    out = candidate_pairs(d, d, spec, "doc_id", dedupe=True, carry_rec=[], carry_mem=[])
+    out = candidate_pairs(d, d, spec, "doc_id", dedupe=True, carry=[])
     pairs = sorted((r.id_rec, r.id_mem) for r in out.collect())
     # PHILLIP~FILLIP same bucket; KNIGHT~NIGHT same bucket; blanks/nulls
     # drop; PHILLIP id=8 is in bucket 1 so it pairs with nobody

@@ -90,7 +90,7 @@ def test_derive_block_keys_soundex_pass(spark):
     pairs = {
         (r["id_rec"], r["id_mem"])
         for r in candidate_pairs(
-            people, people, spec, "pid", dedupe=True, carry_rec=[], carry_mem=[]
+            people, people, spec, "pid", dedupe=True, carry=[]
         ).collect()
     }
     assert pairs == {(1, 2), (3, 4)}
@@ -104,7 +104,7 @@ def test_prefix_key_kind(spark):
     pairs = {
         (r["id_rec"], r["id_mem"])
         for r in candidate_pairs(
-            df, df, spec, "pid", dedupe=True, carry_rec=[], carry_mem=[]
+            df, df, spec, "pid", dedupe=True, carry=[]
         ).collect()
     }
     assert pairs == {(1, 2)}

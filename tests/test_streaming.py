@@ -3,38 +3,21 @@ blocked join → scored pairs sink; exactly-once resume off the checkpoint."""
 
 from __future__ import annotations
 
-from pathlib import Path
+from pyspark.sql import functions as F
 
-from bigmatch_utilities_spark.config import parse_datadict, parse_parmf
-from bigmatch_utilities_spark.operators.pipeline import normalize
-from bigmatch_utilities_spark.sources.fixed_width import read_fixed_width
 from bigmatch_utilities_spark.streaming.incremental import run_incremental_match
-
-GS = "/root/reference/samplefiles/gs"
+from tests.person_f2 import read_person_f2, write_person_f2
 
 
 def test_incremental_match_availablenow(spark, tmp_path):
-    cfg = parse_parmf(Path(f"{GS}/parmf.txt").read_text())
-    spec = cfg.passes[1]  # blocks on fname+lname
-    mem = normalize(
-        read_fixed_width(
-            spark,
-            f"{GS}/sample2_fixedwidth.txt",
-            parse_datadict(Path(f"{GS}/sample2_fixed_width.dict.csv").read_text()),
-        )
-    )
-    rec = normalize(
-        read_fixed_width(
-            spark,
-            f"{GS}/sample_fixedwidth.txt",
-            parse_datadict(Path(f"{GS}/sample_fixed_width.dict.csv").read_text()),
-        )
-    )
+    cfg, rec, mem = read_person_f2(spark, write_person_f2(tmp_path))
+    spec = cfg.passes[0]  # blocks on lname
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     ck_dir = str(tmp_path / "ck")
-    # first micro-batch: 10 records
-    rec10 = rec.limit(10)
+    # first micro-batch: records 1-10; the second, 11-14, adds the MARY
+    # JOHNSON and JOHN PARKS pairs (PIERRE CURIE scores below the floor)
+    rec10 = rec.filter(F.col("id").cast("int") <= 10)
     rec10.write.mode("overwrite").parquet(in_dir)
     schema = rec.schema
 
@@ -43,6 +26,7 @@ def test_incremental_match_availablenow(spark, tmp_path):
     )
     first = spark.read.parquet(out_dir)
     n1 = first.count()
+    first_pairs = {(r["id_rec"], r["id_mem"]) for r in first.collect()}
     assert n1 > 0
     assert {"id_rec", "id_mem", "weight", "is_exact"} <= set(first.columns)
 
@@ -55,6 +39,8 @@ def test_incremental_match_availablenow(spark, tmp_path):
     both = spark.read.parquet(out_dir)
     n2 = both.count()
     assert n2 > n1
+    both_pairs = {(r["id_rec"], r["id_mem"]) for r in both.collect()}
+    assert both_pairs - first_pairs == {("11", "10"), ("13", "6")}
     # no duplicated pairs from re-processing batch 1
     assert both.groupBy("id_rec", "id_mem").count().filter("count > 1").count() == 0
 

@@ -264,3 +264,26 @@ def test_tf_adjust_threads_through_repo_linkage(spark):
         run_repo_linkage(
             df, use_minhash_pass=False, tf_adjust_fields=("head_64",)
         ).pairs.count()
+
+
+def test_building_tf_passes_runs_no_spark_job(spark, tmp_path):
+    """Building a TF-adjusted pass is lazy: ``score_pass`` over every pass
+    of the F2 parmf with TF on dob and gender runs no Spark job before an
+    action asks for output."""
+    from bigmatch_utilities_spark.operators.pipeline import score_pass
+    from bigmatch_utilities_spark.repo_linkage import with_tf_adjust
+    from tests.person_f2 import read_person_f2, write_person_f2
+
+    cfg, rec, mem = read_person_f2(spark, write_person_f2(tmp_path))
+    cfg = with_tf_adjust(cfg, ("dob", "gender"))
+    assert sum(mf.tf_adjust for p in cfg.passes for mf in p.match_fields) == 3
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "tf-plan-build")
+    try:
+        scored = [
+            score_pass(rec, mem, spec, k, "id") for k, spec in enumerate(cfg.passes)
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("tf-plan-build")) == []
+    assert all(df.count() > 0 for df in scored)
