@@ -5770,8 +5770,9 @@ def oracle_sql() -> dict[str, str]:
     )
 
     # sm: SemDeDup — identical pivot sample/argmax/guards/closure; the
-    # shard_rows spread on the Spark side is result-invariant (proven by
-    # the shared _bucket_pairs contract), so the twin omits it
+    # shard_rows spread on the Spark side is result-invariant (the shared
+    # candidate_pairs self-join keeps exact join semantics), so the twin
+    # omits it
     from bigmatch_utilities_spark.operators.similarity import semdedup_keep_sql
 
     o["sm_semdedup_keep"] = semdedup_keep_sql(

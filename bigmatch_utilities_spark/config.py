@@ -188,7 +188,8 @@ class Equi:
     min-id STAR of a block above this size (n-1 pairs) instead of the full
     clique (n(n-1)/2): transitive closure recovers the identical entity,
     and a 10^5-row boilerplate block costs O(n) instead of O(n^2) through
-    one reducer. None = always the full clique (reference semantics)."""
+    one reducer. Only one frame joined to itself may set it (two frames
+    raise). None = always the full clique (reference semantics)."""
 
     kind = "equi"
     star_block_rows: int | None = None

@@ -24,18 +24,25 @@ shard — preserving exact join semantics. `max_block_rows` is the
 guardrail that drops degenerate blocks instead of letting one key produce
 10^10 pairs.
 
-A two-file pass with guardrails costs one small aggregate before its join:
-one ``groupBy`` over a tagged union of both sides' block keys gives each
-block's rec and mem row counts, and only the blocks a guardrail flags
-(capped on either side, or hot on the rec side) are broadcast back to
-both sides — a fixed per-pass overhead of one shuffle of the keys and one
-broadcast, whatever the data.
+Every blocked join is one plan: the block statistics, then one join tail
+(side projection, shard, join, ``dedupe`` filter). One frame joined to
+itself reads its statistics — block count, min-id star, cap, singleton
+drop, shard count — from one window over the block keys. This is also
+the bucket self-join of every LSH family (operators/dedup._bucket_pairs:
+MinHash, SimHash, embedding sign buckets, SemDeDup cells). Star emission
+exists only on this path. A two-file pass with guardrails costs one small
+aggregate before its join: one ``groupBy`` over a tagged union of both
+sides' block keys gives each block's rec and mem row counts, and only the
+blocks a guardrail flags (capped on either side, or hot on the rec side)
+are broadcast back to both sides — a fixed per-pass overhead of one
+shuffle of the keys and one broadcast, whatever the data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from bigmatch_utilities_spark.config import BlockingPassSpec
 
@@ -104,11 +111,6 @@ def derive_block_keys(
     return df, replace(spec, block_fields=tuple(new_fields))
 
 
-#: ``_nsh`` markers in the special-blocks table (see `_special_blocks`).
-_STAR = -1  # rec side over star_block_rows: the min-id star emits the block
-_DROP = 0  # either side over max_block_rows: the block yields no pairs
-
-
 def _special_blocks(
     r: DataFrame,
     m: DataFrame,
@@ -116,16 +118,14 @@ def _special_blocks(
     *,
     max_block_rows: int | None,
     shard_rows: int | None,
-    star_block_rows: int | None,
 ) -> DataFrame | None:
     """The blocks a two-file blocked join must treat specially, from ONE
     aggregate over both sides' block keys; None when no guardrail is set.
 
-    Returns ``keys`` plus ``_nsh``: `_STAR` for a block whose rec side is
-    over ``star_block_rows``, else `_DROP` for a block with either side
-    over ``max_block_rows``, else ceil(n_rec / shard_rows) for a block whose
-    rec side is over ``shard_rows``. Every other block is absent (one
-    shard, kept).
+    Returns ``keys`` plus ``_nsh``: 0 for a block with either side over
+    ``max_block_rows`` (it yields no pairs), else ceil(n_rec / shard_rows)
+    for a block whose rec side is over ``shard_rows``. Every other block is
+    absent (one shard, kept).
 
     Per-side caps would give the same pairs: a block capped on one side
     only has no partner rows on the other, so the inner join drops it
@@ -134,7 +134,7 @@ def _special_blocks(
     sides' keys replaces a cap aggregate per side plus a shard-count
     aggregate. The table holds the union of the blocks those aggregates
     flagged, so it is as small as the broadcasts it replaces."""
-    if not (max_block_rows or shard_rows or star_block_rows):
+    if not (max_block_rows or shard_rows):
         return None
     tagged = r.select(*keys, F.lit(1).alias("_is_rec")).unionByName(
         m.select(*keys, F.lit(0).alias("_is_rec"))
@@ -144,11 +144,9 @@ def _special_blocks(
     )
     n_rec, n_mem = F.col("_n_rec"), F.col("_n") - F.col("_n_rec")
     rules = []
-    if star_block_rows:
-        rules.append((n_rec > star_block_rows, F.lit(_STAR)))
     if max_block_rows:
         rules.append(
-            ((n_rec > max_block_rows) | (n_mem > max_block_rows), F.lit(_DROP))
+            ((n_rec > max_block_rows) | (n_mem > max_block_rows), F.lit(0))
         )
     if shard_rows:
         rules.append(
@@ -160,137 +158,6 @@ def _special_blocks(
     return stats.select(*keys, nsh.cast("int").alias("_nsh")).filter(
         F.col("_nsh").isNotNull()
     )
-
-
-def star_pairs(
-    df: DataFrame, keys: list[str], id_col: str, carry: list[str]
-) -> DataFrame:
-    """Min-id star of every block: (min_id, other_id) per block member.
-
-    Linear in block size where the clique is quadratic; valid whenever the
-    caller knows block-key agreement implies a match (exact-hash passes),
-    because transitive closure turns the star back into the clique's entity.
-    Output schema matches `candidate_pairs`' (id_rec/id_mem/bk_*/rec_*/mem_*).
-    """
-    minids = df.groupBy(*keys).agg(F.min(F.col(id_col)).alias("_min_id"))
-    rep = (
-        df.join(F.broadcast(minids), on=keys)
-        .filter(F.col(id_col) == F.col("_min_id"))
-        .select(
-            *[F.col(k) for k in keys],
-            F.col(id_col).alias("id_rec"),
-            *[F.col(c).alias(f"rec_{c}") for c in carry],
-        )
-    )
-    members = df.join(F.broadcast(minids), on=keys).filter(
-        F.col(id_col) != F.col("_min_id")
-    )
-    return (
-        members.join(F.broadcast(rep), on=keys)
-        .select(
-            F.col("id_rec"),
-            F.col(id_col).alias("id_mem"),
-            *[F.col(k).alias(f"bk_{k}") for k in keys],
-            *[F.col(f"rec_{c}") for c in carry],
-            *[F.col(c).alias(f"mem_{c}") for c in carry],
-        )
-    )
-
-
-def _self_candidate_pairs(
-    df: DataFrame,
-    spec: BlockingPassSpec,
-    id_col: str,
-    *,
-    dedupe: bool,
-    shard_rows: int | None,
-    max_block_rows: int | None,
-    carry: list[str],
-) -> DataFrame:
-    """Self-join candidate generation with ONE window computation.
-
-    The block-size cap, the star/clique split, and the adaptive shard
-    count all need per-block statistics. The two-file plan computes them
-    with a groupBy job and a broadcast materialization per pass — extra
-    stage barriers of pure latency on the critical path. Here a
-    single ``Window.partitionBy(block keys)`` attaches the block count AND
-    the min-id representative row in one shuffle; both join sides branch
-    from the same windowed frame, so Catalyst's ReuseExchange serves them
-    from one exchange, and the un-sharded join reuses the window's hash
-    partitioning outright (no re-shuffle)."""
-    from pyspark.sql.window import Window
-
-    keys = [bf.name for bf in spec.block_fields]
-    star_block_rows = spec.blocker.star_block_rows
-    r0 = apply_blank_flags(df, spec)
-    w = Window.partitionBy(*keys)
-    # id first in the struct → min(struct) is the min-id row of the block
-    packed = F.struct(
-        F.col(id_col).alias("_id"),
-        *[F.col(c).alias(f"_c_{c}") for c in carry],
-    )
-    cols = list(dict.fromkeys([id_col, *keys, *carry]))
-    rw = (
-        r0.select(*cols)
-        .withColumn("_bn", F.count(F.lit(1)).over(w))
-        .withColumn("_rep", F.min(packed).over(w))
-    )
-
-    star = None
-    if star_block_rows:
-        sb = rw.filter(F.col("_bn") > star_block_rows)
-        star = sb.filter(F.col(id_col) != F.col("_rep._id")).select(
-            F.col("_rep._id").alias("id_rec"),
-            F.col(id_col).alias("id_mem"),
-            *[F.col(k).alias(f"bk_{k}") for k in keys],
-            *[F.col(f"_rep._c_{c}").alias(f"rec_{c}") for c in carry],
-            *[F.col(c).alias(f"mem_{c}") for c in carry],
-        )
-        rw = rw.filter(F.col("_bn") <= star_block_rows)
-    if max_block_rows:
-        rw = rw.filter(F.col("_bn") <= max_block_rows)
-    if shard_rows:
-        rw = rw.withColumn(
-            "_nsh", F.ceil(F.col("_bn") / F.lit(float(shard_rows))).cast("int")
-        )
-
-    r = rw.select(
-        F.col(id_col).alias("id_rec"),
-        *[F.col(k).alias(f"bk_{k}") for k in keys],
-        *[F.col(c).alias(f"rec_{c}") for c in carry],
-        *(
-            [
-                F.pmod(F.xxhash64(F.col(id_col)), F.col("_nsh"))
-                .cast("int")
-                .alias("_shard")
-            ]
-            if shard_rows
-            else []
-        ),
-    )
-    m = rw.select(
-        F.col(id_col).alias("id_mem"),
-        *[F.col(k).alias(f"bk_{k}_m") for k in keys],
-        *[F.col(c).alias(f"mem_{c}") for c in carry],
-        *(
-            [F.explode(F.sequence(F.lit(0), F.col("_nsh") - 1)).alias("_shard_m")]
-            if shard_rows
-            else []
-        ),
-    )
-    cond = [F.col(f"bk_{k}") == F.col(f"bk_{k}_m") for k in keys]
-    if shard_rows:
-        cond.append(F.col("_shard") == F.col("_shard_m"))
-    joined = r.join(m, on=cond, how="inner")
-    if dedupe:
-        joined = joined.filter(F.col("id_rec") < F.col("id_mem"))
-    out = joined.drop(
-        *[f"bk_{k}_m" for k in keys],
-        *(["_shard", "_shard_m"] if shard_rows else []),
-    )
-    if star is not None:
-        out = out.unionByName(star)
-    return out
 
 
 def candidate_pairs(
@@ -306,20 +173,20 @@ def candidate_pairs(
 ) -> DataFrame:
     """One blocking pass → candidate pair DataFrame.
 
-    Output columns: ``id_rec``, ``id_mem``, one ``bk_<field>`` per blocking
-    field, and ``rec_<f>`` / ``mem_<f>`` for every ``carry`` field
-    (default: the pass's match fields).
+    Output columns: ``id_rec``, one ``bk_<field>`` per blocking field,
+    ``rec_<f>`` for every ``carry`` field (default: the pass's match
+    fields), ``id_mem`` and ``mem_<f>``.
 
     dedupe=True self-join keeps only ``id_rec < id_mem`` — halves the pair
     space and drops self-pairs (reference single-file mode).
 
-    ``spec.blocker.star_block_rows`` (dedupe passes only): blocks larger
-    than this emit the min-id star instead of the quadratic clique — see
-    `star_pairs`. The AQE skew-join splitter can NOT save a same-key
-    mega-block here: its trigger is shuffle-partition *bytes*, and a
-    10^4-row identical-hash block is only ~MBs in, exploding to 10^8 rows
-    *out* — the explosion has to be prevented before the join, not
-    re-planned after it.
+    ``spec.blocker.star_block_rows`` (one frame joined to itself under
+    dedupe only): blocks larger than this emit the min-id star (n-1
+    pairs) instead of the quadratic clique. The AQE skew-join splitter can
+    NOT save a same-key mega-block here: its trigger is shuffle-partition
+    *bytes*, and a 10^4-row identical-hash block is only ~MBs in,
+    exploding to 10^8 rows *out* — the explosion has to be prevented
+    before the join, not re-planned after it.
 
     shard_rows: adaptive output-skew salting for passes that must score the
     full clique (fuzzy passes, where key agreement does NOT imply a match
@@ -335,13 +202,15 @@ def candidate_pairs(
     max_block_rows: blocks with more rows than this on EITHER side are
     dropped (the guardrail against a degenerate key producing 10^10 pairs).
 
-    Plan: chosen from the input alone. One frame joined to itself
-    (``rec is mem``) takes the one-window plan of `_self_candidate_pairs`.
-    Two frames read all of their guardrail statistics (star split, cap,
-    shard counts) from ONE aggregate over both sides' block keys
-    (`_special_blocks`), broadcast the few special blocks once and
-    left-join them to each side, then run the blocked join; a pass with no
-    guardrail set is the bare join. Neither plan hints a broadcast: AQE
+    Plan: the block statistics are chosen from the input alone, and one
+    join tail follows. One frame joined to itself (``rec is mem``) reads
+    them from one window: block count, star, cap, the one-row-block drop
+    under dedupe (exact: such a block's only pair is a self-pair) and the
+    shard count. Two frames read the cap and the shard counts from ONE
+    aggregate over both sides' block keys (`_special_blocks`), broadcast
+    the few special blocks once and left-join them to each side; a pass
+    with no guardrail set skips it. Both then project the two sides, shard
+    them, and run the blocked join. Neither plan hints a broadcast: AQE
     broadcasts a small memory side from its measured size.
     """
     if any(bf.key_kind != "exact" for bf in spec.block_fields):
@@ -353,52 +222,72 @@ def candidate_pairs(
     keys = [bf.name for bf in spec.block_fields]
     carry = carry if carry is not None else [mf.name for mf in spec.match_fields]
     star_block_rows = spec.blocker.star_block_rows
-    if star_block_rows and not dedupe:
-        raise ValueError("star_block_rows requires a self-join (dedupe) pass")
-
-    if rec is mem:
-        return _self_candidate_pairs(
-            rec,
-            spec,
-            id_col,
-            dedupe=dedupe,
-            shard_rows=shard_rows,
-            max_block_rows=max_block_rows,
-            carry=carry,
+    if star_block_rows and not (dedupe and rec is mem):
+        raise ValueError(
+            "star_block_rows requires a self-join (dedupe) pass over one frame"
         )
-    r = apply_blank_flags(rec, spec)
-    m = apply_blank_flags(mem, spec)
-    special = _special_blocks(
-        r,
-        m,
-        keys,
-        max_block_rows=max_block_rows,
-        shard_rows=shard_rows,
-        star_block_rows=star_block_rows,
-    )
+
     star = None
-    if special is not None:
-        # one broadcast of the few special blocks, left-joined to each side:
-        # star and capped blocks leave the join, hot blocks carry their
-        # shard count, every other row gets a null _nsh (one shard).
-        special = F.broadcast(special)
-        live = F.coalesce(F.col("_nsh"), F.lit(1)) > 0
-        r = r.join(special, on=keys, how="left")
+    if rec is mem:
+        # ONE window over the block keys attaches the block count (and, for
+        # star passes, the min-id row) in one shuffle. Both join sides
+        # branch from it, so Catalyst's ReuseExchange serves them from one
+        # exchange, and the un-sharded join reuses the window's hash
+        # partitioning outright (no re-shuffle).
+        w = Window.partitionBy(*keys)
+        r = (
+            apply_blank_flags(rec, spec)
+            .select(*dict.fromkeys([id_col, *keys, *carry]))
+            .withColumn("_bn", F.count(F.lit(1)).over(w))
+        )
         if star_block_rows:
-            # a star block is linearized, not capped: the cap only
-            # guards the quadratic path
-            r_big = r.filter(F.col("_nsh") == _STAR).drop("_nsh")
-            star = star_pairs(r_big, keys, id_col, carry)
-        r = r.filter(live)
-        m = m.join(special, on=keys, how="left").filter(live)
+            # id first in the struct → min(struct) is the min-id row
+            packed = F.struct(
+                F.col(id_col).alias("_id"),
+                *[F.col(c).alias(f"_c_{c}") for c in carry],
+            )
+            r = r.withColumn("_rep", F.min(packed).over(w))
+            # a star block is linearized, not capped: the cap only guards
+            # the quadratic path
+            star = r.filter(
+                (F.col("_bn") > star_block_rows) & (F.col(id_col) != F.col("_rep._id"))
+            ).select(
+                F.col("_rep._id").alias("id_rec"),
+                F.col(id_col).alias("id_mem"),
+                *[F.col(k).alias(f"bk_{k}") for k in keys],
+                *[F.col(f"_rep._c_{c}").alias(f"rec_{c}") for c in carry],
+                *[F.col(c).alias(f"mem_{c}") for c in carry],
+            )
+            r = r.filter(F.col("_bn") <= star_block_rows)
+        if max_block_rows:
+            r = r.filter(F.col("_bn") <= max_block_rows)
+        if dedupe:
+            r = r.filter(F.col("_bn") > 1)
+        if shard_rows:
+            r = r.withColumn(
+                "_nsh", F.ceil(F.col("_bn") / F.lit(float(shard_rows))).cast("int")
+            )
+        m = r
+    else:
+        r = apply_blank_flags(rec, spec)
+        m = apply_blank_flags(mem, spec)
+        special = _special_blocks(
+            r, m, keys, max_block_rows=max_block_rows, shard_rows=shard_rows
+        )
+        if special is not None:
+            # one broadcast of the few special blocks, left-joined to each
+            # side: capped blocks (_nsh 0) leave the join, hot blocks carry
+            # their shard count, every other row gets a null _nsh (one shard)
+            special = F.broadcast(special)
+            live = F.coalesce(F.col("_nsh"), F.lit(1)) > 0
+            r = r.join(special, on=keys, how="left").filter(live)
+            m = m.join(special, on=keys, how="left").filter(live)
 
     sharded = bool(shard_rows)
     nsh = F.coalesce(F.col("_nsh"), F.lit(1))
-    rec_id = [F.col(id_col).alias("id_rec")]
-    rec_bk = [F.col(k).alias(f"bk_{k}") for k in keys]
     r = r.select(
-        # a sharded pass's output leads with its block keys
-        *(rec_bk + rec_id if sharded else rec_id + rec_bk),
+        F.col(id_col).alias("id_rec"),
+        *[F.col(k).alias(f"bk_{k}") for k in keys],
         *[F.col(c).alias(f"rec_{c}") for c in carry],
         *(
             [F.pmod(F.xxhash64(F.col(id_col)), nsh).cast("int").alias("_shard")]

@@ -18,6 +18,9 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigmatch_utilities_spark.config import BlockField, BlockingPassSpec
+from bigmatch_utilities_spark.operators.blocking import candidate_pairs
+
 
 @contextmanager
 def lsh_cache():
@@ -174,16 +177,16 @@ def minhash_candidates(
 ) -> DataFrame:
     """LSH candidate pairs (id_l < id_r, distinct across bands).
 
-    The band-bucket self-join is the scale path: the shuffle key is
-    (band, band_key); `max_bucket` caps degenerate buckets (boilerplate).
-    `shard_rows` spreads a hot bucket's quadratic pair output over
-    ceil(n/shard_rows) join tasks (adaptive salting, same scheme as
-    operators.blocking.candidate_pairs) — a 1000-row bucket is ~KBs into
-    the join but 500k pairs out, invisible to AQE's byte-based skew split.
+    The band-bucket self-join is the scale path: operators.blocking.
+    candidate_pairs blocks on (band, band_key); `max_bucket` caps
+    degenerate buckets (boilerplate). `shard_rows` spreads a hot bucket's
+    quadratic pair output over ceil(n/shard_rows) join tasks (adaptive
+    salting) — a 1000-row bucket is ~KBs into the join but 500k pairs out,
+    invisible to AQE's byte-based skew split.
 
     `cache_handle`: WHEN SUPPLIED, the bands frame is persisted (it feeds
-    the bucket-count table AND both join sides, and the signature job is
-    the family's most expensive map stage) and appended to the list; the
+    the bucket self-join's one window, and the signature job is the
+    family's most expensive map stage) and appended to the list; the
     caller unpersists after materializing — `lsh_cache()` scopes that in
     one line. A bare call (cache_handle=None) does NOT persist: it
     recomputes the bands per consumer rather than leak a cache entry that
@@ -207,59 +210,31 @@ def _bucket_pairs(
 ) -> DataFrame:
     """(id, band, band_key) rows → distinct candidate pairs (id_l < id_r).
 
-    The guardrail set every LSH family shares (MinHash, SimHash, embedding
-    sign buckets):
-
-    * singleton buckets are dropped before the join (can't pair);
-    * `max_bucket` caps degenerate buckets — a hot bucket's pair output is
-      quadratic in its size, and AQE's byte-based skew split can't see
-      output-side blowup;
-    * `shard_rows` spreads a kept-but-hot bucket's pair output over
-      ceil(n/shard_rows) join tasks (probe side hashed to a shard, build
-      side replicated to every shard — candidate set provably unchanged).
+    Every LSH family (MinHash, SimHash, embedding sign buckets, SemDeDup
+    cells) blocks through the one self-join of
+    `operators.blocking.candidate_pairs`, with (band, band_key) as the
+    block key: one window gives each bucket's size, singleton buckets are
+    dropped before the join (they can't pair), `max_bucket` caps
+    degenerate buckets (a hot bucket's pair output is quadratic in its
+    size, and AQE's byte-based skew split can't see output-side blowup),
+    and `shard_rows` spreads a kept-but-hot bucket's pair output over
+    ceil(n/shard_rows) join tasks. A pair sharing several bands is one
+    row.
     """
-    cnt = (
-        b.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > 1)  # singleton buckets can't pair — drop early
+    spec = BlockingPassSpec(
+        block_fields=(
+            BlockField(name="band", blank_flag=0),
+            BlockField(name="band_key", blank_flag=0),
+        ),
+        match_fields=(),
     )
-    if max_bucket:
-        cnt = cnt.filter(F.col("_bn") <= max_bucket)
-    cnt = cnt.select(
-        "band",
-        "band_key",
-        (
-            F.ceil(F.col("_bn") / F.lit(float(shard_rows))).cast("int")
-            if shard_rows
-            else F.lit(1)
-        ).alias("_nsh"),
+    pairs = candidate_pairs(
+        b, b, spec, "id", dedupe=True, max_block_rows=max_bucket,
+        shard_rows=shard_rows, carry=[],
     )
-    # inner join against the kept-buckets table applies the cap, the
-    # singleton drop, and the shard count in ONE pass over b
-    l = b.join(cnt, ["band", "band_key"]).select(
-        "band", "band_key", F.col("id").alias("id_l"), "_nsh"
-    )
-    r = b.join(cnt, ["band", "band_key"]).select(
-        F.col("band").alias("band_r"),
-        F.col("band_key").alias("band_key_r"),
-        F.col("id").alias("id_r"),
-        F.col("_nsh").alias("_nsh_r"),
-    )
-    on = [F.col("band") == F.col("band_r"), F.col("band_key") == F.col("band_key_r")]
-    if shard_rows:
-        l = l.withColumn(
-            "_shard", F.pmod(F.xxhash64("id_l"), F.col("_nsh")).cast("int")
-        )
-        r = r.withColumn(
-            "_shard_r", F.explode(F.sequence(F.lit(0), F.col("_nsh_r") - 1))
-        )
-        on = on + [F.col("_shard") == F.col("_shard_r")]
-    return (
-        l.join(r, on)
-        .filter(F.col("id_l") < F.col("id_r"))
-        .select("id_l", "id_r")
-        .distinct()
-    )
+    return pairs.select(
+        F.col("id_rec").alias("id_l"), F.col("id_mem").alias("id_r")
+    ).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -434,10 +409,10 @@ def simhash_candidates(
     Same scale guardrails as `minhash_candidates` (`_bucket_pairs`): a hot
     chunk value — short/boilerplate docs collapsing to the same 8-bit chunk
     — would otherwise make one join task emit O(n²) pairs that AQE's
-    byte-based skew split can't see. The fingerprint frame is persisted
-    (it feeds the bucket-count table and both join sides; recomputing it
-    re-runs the tokenise+hash scan, the family's most expensive map stage);
-    see `minhash_candidates` for the `cache_handle` contract."""
+    byte-based skew split can't see. With a `cache_handle` the band frame
+    is persisted (it feeds the bucket self-join's one window; recomputing
+    it re-runs the tokenise+hash scan, the family's most expensive map
+    stage); see `minhash_candidates` for the `cache_handle` contract."""
     sh = df.select(F.col(id_col).alias("id"), simhash(F.col(text_col), bits).alias("sh"))
     chunk = bits // block_bits
     # one fingerprint computation per row, exploded into block_bits band

@@ -164,15 +164,16 @@ def embedding_neardup(
     The scale path for all-pairs near-dup at 10^9+ vectors: `n_bands`
     independent random-hyperplane bands (any-band collision ⇒ candidate, so
     recall compounds across bands exactly like MinHash banding), then the
-    shared `_bucket_pairs` guardrails — singleton drop, `max_bucket` cap on
-    degenerate buckets (a popular embedding region would otherwise go
-    quadratic inside one join task), `shard_rows` salting for hot kept
+    bucket self-join every LSH family shares (`operators.blocking.
+    candidate_pairs` on (band, band_key)) — singleton drop, `max_bucket`
+    cap on degenerate buckets (a popular embedding region would otherwise
+    go quadratic inside one join task), `shard_rows` salting for hot kept
     buckets. Exact cosine verifies every candidate; `threshold` filters.
 
     See `operators.dedup.minhash_candidates` for the `cache_handle`
-    contract: the banded frame feeds the bucket-count table and both join
-    sides, so supplying a handle (e.g. `lsh_cache()`) persists it; bare
-    calls recompute instead of leaking a cache entry."""
+    contract: the banded frame feeds the self-join's one window, so
+    supplying a handle (e.g. `lsh_cache()`) persists it; bare calls
+    recompute instead of leaking a cache entry."""
     from bigmatch_utilities_spark.operators.dedup import _bucket_pairs
 
     v = vectors.select(
@@ -504,8 +505,9 @@ def semdedup_keep(
     cosine is quadratic, so SemDeDup clusters first and compares only
     within cells: assign every vector to its nearest pivot
     (`_nearest_cell`, map-side argmax over the broadcast pivot table),
-    generate within-cell candidate pairs (the dedup._bucket_pairs guard
-    set: singleton drop, `max_cell` cap, `shard_rows` hot-cell sharding),
+    generate within-cell candidate pairs (the shared bucket self-join of
+    `operators.blocking.candidate_pairs`: singleton drop, `max_cell` cap,
+    `shard_rows` hot-cell sharding),
     keep edges with 6dp-rounded cosine >= threshold, close them
     transitively, and elect the min-id representative per duplicate
     group. Cross-cell duplicates are missed BY DESIGN — the same recall

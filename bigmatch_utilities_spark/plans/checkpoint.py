@@ -22,10 +22,12 @@ metrics, supplied here as driver-side orchestration:
   slices is therefore exactly the full pass output. A pass with no block
   fields (a MinHash canopy) has no key to slice by and commits whole;
 * metrics rows (pass, slice, rows, pairs, wall seconds, partitions)
-  append to ``<out>/metrics/`` — the lineage/metrics table. Each committed
-  unit adds one JSON-lines ``part-<uuid>.json`` file, written on the
-  driver through the Hadoop FileSystem API like the markers (no Spark
-  job); `CheckpointedMatch.metrics` reads the directory with
+  append to ``<out>/metrics/`` — the lineage/metrics table. A unit's
+  ``partition`` rows are one per written parquet file, numbered from its
+  ``part-NNNNN`` name, with the row count from the file's footer. Each
+  committed unit adds one JSON-lines ``part-<uuid>.json`` file, written
+  on the driver through the Hadoop FileSystem API like the markers (no
+  Spark job); `CheckpointedMatch.metrics` reads the directory with
   ``spark.read.json``.
 
 On restart, completed passes/slices are read back from their parquet
@@ -140,46 +142,50 @@ class CheckpointedMatch:
         return self.spark.read.json(f"{self.out}/metrics")
 
     def _record_unit(
-        self, df: DataFrame, pass_id: int, slice_id: int | None, wall: float
+        self, path: str, pass_id: int, slice_id: int | None, wall: float
     ) -> int:
-        """Per-partition lineage for one committed unit (a pass, or one
-        slice of it): one metrics row per output partition plus a unit
+        """Per-file lineage for one committed unit (a pass, or one slice of
+        it) written to ``path``: one metrics row per ``part-NNNNN`` parquet
+        file (numbered from its name, rows from its footer) plus a unit
         total, so a resume/audit can account for every piece of completed
-        work. Returns the unit's pair count."""
-        part_rows = [
-            r.asDict()
-            for r in df.groupBy(F.spark_partition_id().alias("partition"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
-        n_pairs = sum(p["rows"] for p in part_rows)
-        ts = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        sl = -1 if slice_id is None else int(slice_id)
-        rows = [
-            {
-                "kind": "pass" if slice_id is None else "slice",
-                "pass_id": pass_id,
-                "slice": sl,
-                "partition": -1,
-                "rows": n_pairs,
-                "wall_s": float(wall),
-                "partitions": int(len(part_rows)),
-                "ts": ts,
-            }
-        ] + [
-            {
-                "kind": "partition",
-                "pass_id": pass_id,
-                "slice": sl,
-                "partition": int(p["partition"]),
-                "rows": int(p["rows"]),
-                "wall_s": float(wall),
-                "partitions": int(len(part_rows)),
-                "ts": ts,
-            }
-            for p in part_rows
-        ]
-        self._append_metrics(rows)
+        work. The files are listed and read on the driver through the
+        Hadoop FileSystem API: no Spark job. Returns the unit's pair
+        count."""
+        parquet = self._jvm.org.apache.parquet.hadoop
+        part_rows = []
+        for st in self._fs(path).listStatus(self._hpath(path)):
+            name = st.getPath().getName()
+            if name.startswith("part-") and name.endswith(".parquet"):
+                reader = parquet.ParquetFileReader.open(
+                    parquet.util.HadoopInputFile.fromStatus(st, self._hconf)
+                )
+                try:
+                    part = int(name.split("-")[1])
+                    part_rows.append((part, reader.getRecordCount()))
+                finally:
+                    reader.close()
+        n_pairs = sum(n for _, n in part_rows)
+        unit = {
+            "pass_id": pass_id,
+            "slice": -1 if slice_id is None else int(slice_id),
+            "wall_s": float(wall),
+            "partitions": len(part_rows),
+            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
+        self._append_metrics(
+            [
+                dict(
+                    unit,
+                    kind="pass" if slice_id is None else "slice",
+                    partition=-1,
+                    rows=n_pairs,
+                )
+            ]
+            + [
+                dict(unit, kind="partition", partition=part, rows=n)
+                for part, n in sorted(part_rows)
+            ]
+        )
         return n_pairs
 
     def _slice_of(self, pass_id: int, spec, slices: int, pairs_path: str):
@@ -232,9 +238,9 @@ class CheckpointedMatch:
         block fields is committed whole, as in an unsliced run.
 
         An unsliced pass is one unit and a sliced pass is `slices` units;
-        every unit takes the same path: score, write, re-read, record its
-        metrics, write its marker. A sliced pass's own marker then totals
-        its slice markers' ``pairs``."""
+        every unit takes the same path: score, write, record its metrics
+        from the written files' footers, write its marker. A sliced pass's
+        own marker then totals its slice markers' ``pairs``."""
         id_col = id_col or config.id_field.name
         dedupe = mem is None or config.dedupe_single_file
         if mem is None:
@@ -275,7 +281,7 @@ class CheckpointedMatch:
                 )
                 scored.write.mode("overwrite").parquet(path)
                 df = self.spark.read.parquet(path)
-                n = self._record_unit(df, k, s, time.time() - t0)
+                n = self._record_unit(path, k, s, time.time() - t0)
                 marker = {"pairs": n, "wall_s": time.time() - t0}
                 if s is not None:
                     marker["slices"] = int(slices)

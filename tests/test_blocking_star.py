@@ -59,6 +59,9 @@ def test_star_is_closure_equivalent(blocks):
 def test_star_requires_self_join(blocks):
     with pytest.raises(ValueError, match="self-join"):
         candidate_pairs(blocks, blocks, STAR, "id", dedupe=False)
+    # star emission exists only for one frame joined to itself
+    with pytest.raises(ValueError, match="self-join"):
+        candidate_pairs(blocks, blocks.alias("m"), STAR, "id", dedupe=True)
 
 
 def _pair_set(df):
@@ -69,21 +72,14 @@ def _pair_set(df):
 def test_windowed_path_matches_generic_path(blocks):
     """The one-window self-join plan must emit EXACTLY the pairs of the
     two-frame plan (one block-statistics aggregate, then a broadcast)
-    under every combination of the star / cap / shard knobs.
+    under every combination of the cap / shard knobs.
     `blocks.alias('m')` is the same data in a different frame object, so
     candidate_pairs takes the two-frame plan."""
     other = blocks.alias("m")  # rec is not mem -> two-frame plan
-    for spec, kwargs in (
-        (SPEC, {}),
-        (STAR, {}),
-        (SPEC, {"max_block_rows": 35}),
-        (SPEC, {"shard_rows": 7}),
-        (STAR, {"max_block_rows": 35}),
-        (STAR, {"shard_rows": 3}),
-    ):
-        windowed = candidate_pairs(blocks, blocks, spec, "id", dedupe=True, **kwargs)
-        two_frame = candidate_pairs(blocks, other, spec, "id", dedupe=True, **kwargs)
-        assert _pair_set(windowed) == _pair_set(two_frame), (spec.blocker, kwargs)
+    for kwargs in ({}, {"max_block_rows": 35}, {"shard_rows": 7}):
+        windowed = candidate_pairs(blocks, blocks, SPEC, "id", dedupe=True, **kwargs)
+        two_frame = candidate_pairs(blocks, other, SPEC, "id", dedupe=True, **kwargs)
+        assert _pair_set(windowed) == _pair_set(two_frame), kwargs
 
 
 def _plan(df) -> str:
@@ -94,9 +90,9 @@ def test_plan_is_chosen_by_input(blocks):
     """One frame joined to itself runs the window plan; two frames run
     the block-statistics aggregate plan, whatever the guardrails."""
     other = blocks.alias("m")
-    for spec, kwargs in ((SPEC, {"max_block_rows": 35}), (STAR, {"shard_rows": 3})):
-        self_plan = _plan(candidate_pairs(blocks, blocks, spec, "id", dedupe=True, **kwargs))
-        two_plan = _plan(candidate_pairs(blocks, other, spec, "id", dedupe=True, **kwargs))
+    for kwargs in ({"max_block_rows": 35}, {"shard_rows": 3}):
+        self_plan = _plan(candidate_pairs(blocks, blocks, SPEC, "id", dedupe=True, **kwargs))
+        two_plan = _plan(candidate_pairs(blocks, other, SPEC, "id", dedupe=True, **kwargs))
         assert "Window [" in self_plan and "Aggregate [" not in self_plan
         assert "Aggregate [" in two_plan and "Window [" not in two_plan
 

@@ -239,6 +239,29 @@ def test_metrics_table(spark, person_dir, tmp_path):
     assert ckpt.metrics().count() == len(m)
 
 
+def test_record_unit_runs_no_spark_job(spark, tmp_path):
+    """A committed unit's metrics come from its part files' parquet
+    footers, listed through the Hadoop FileSystem API: no Spark job. One
+    partition row per file, numbered from its part-NNNNN name."""
+    path = str(tmp_path / "unit")
+    spark.range(1000).repartition(4).write.parquet(path)
+    ckpt = CheckpointedMatch(spark, str(tmp_path / "run5"))
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "record-unit")
+    try:
+        n = ckpt._record_unit(path, 0, None, 0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("record-unit")) == []
+    assert n == 1000
+    rows = ckpt.metrics().collect()
+    parts = sorted(r["partition"] for r in rows if r["kind"] == "partition")
+    assert parts == [0, 1, 2, 3]
+    assert sum(r["rows"] for r in rows if r["kind"] == "partition") == 1000
+    (unit,) = [r for r in rows if r["kind"] == "pass"]
+    assert unit["rows"] == 1000 and unit["partitions"] == 4
+
+
 def test_metrics_append_runs_no_spark_job(spark, tmp_path):
     """A metrics append is a driver-side file write: one JSON-lines part
     file, no Spark job."""

@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from bigmatch_utilities_spark.operators.dedup import (
     dedup_exact,
     exact_duplicates,
     jaccard_pairs,
+    minhash_bands,
     minhash_candidates,
+    simhash,
     simhash_candidates,
     word_shingles,
 )
@@ -172,6 +177,79 @@ def test_minhash_shard_rows_preserves_candidates(spark):
             ).collect()
         }
         assert sharded == base, t
+
+
+def _bucket_docs(spark):
+    """60 docs drawn from a 6-word vocabulary: buckets of every size from
+    singletons up past the cap of 3."""
+    rng = random.Random(5)
+    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 6))))
+        for i in range(60)
+    ]
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def _brute_bucket_pairs(bands, max_bucket):
+    """(id, band, band_key) → pandas self-join per bucket with the size cap
+    and id_l < id_r."""
+    pdf = bands.toPandas()
+    if max_bucket:
+        size = pdf.groupby(["band", "band_key"])["id"].transform("size")
+        pdf = pdf[size <= max_bucket]
+    j = pdf.merge(pdf, on=["band", "band_key"])
+    j = j[j.id_x < j.id_y]
+    return set(zip(j.id_x.astype(int), j.id_y.astype(int)))
+
+
+def _pairs(df):
+    return {(int(r["id_l"]), int(r["id_r"])) for r in df.collect()}
+
+
+@pytest.mark.parametrize("max_bucket", [None, 3])
+@pytest.mark.parametrize("shard_rows", [None, 2])
+def test_bucket_pairs_match_brute_force(spark, max_bucket, shard_rows):
+    """MinHash and SimHash candidates are exactly the capped bucket
+    self-join of their band frames, at every shard count."""
+    docs = _bucket_docs(spark)
+    mh = dict(shingle_k=2, bands=4, rows_per_band=1)
+    mh_bands = minhash_bands(docs, "text", "doc_id", **mh)
+    mh_want = _brute_bucket_pairs(mh_bands, max_bucket)
+    mh_got = _pairs(minhash_candidates(
+        docs, "text", "doc_id", max_bucket=max_bucket, shard_rows=shard_rows, **mh
+    ))
+    assert mh_want and mh_got == mh_want
+
+    fp = docs.select(F.col("doc_id").alias("id"), simhash(F.col("text"), 32).alias("sh"))
+    chunks = fp.select(
+        "id",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftright("sh", 8 * b).bitwiseAND(F.lit(255)).alias("band_key"),
+            )
+            for b in range(4)
+        ])).alias("_bk"),
+    ).select("id", "_bk.band", "_bk.band_key")
+    sh_want = _brute_bucket_pairs(chunks, max_bucket)
+    sh_got = _pairs(simhash_candidates(
+        docs, "text", "doc_id", bits=32, block_bits=4,
+        max_bucket=max_bucket, shard_rows=shard_rows,
+    ))
+    assert sh_want and sh_got == sh_want
+    if max_bucket:  # the cap bites on this data
+        assert mh_want != _brute_bucket_pairs(mh_bands, None)
+
+
+def test_minhash_buckets_block_through_one_window(spark):
+    """The bucket sizes come from the shared self-join's window: no
+    bucket-count aggregate is joined back to the bands."""
+    plan = minhash_candidates(
+        _docs(spark), "text", "doc_id", shingle_k=2, max_bucket=5, shard_rows=2
+    )._jdf.queryExecution().optimizedPlan().toString()
+    assert "Window [" in plan
+    assert "Aggregate [band" not in plan
 
 
 def test_bare_lsh_calls_leave_no_cache_residue(spark):
